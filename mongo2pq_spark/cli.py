@@ -858,143 +858,106 @@ def main(
                 _process_collection(name)
             except Exception as err:
                 failures.append((name, err))
+    # post-run maintenance: every tree under each configured root, not
+    # only the collections this run touched (a scheduler's every-N-runs
+    # pass must not skip a tree whose collection failed THIS run, or its
+    # partition count grows unbounded). It runs after all of this
+    # invocation's increments committed, is content-preserving, and
+    # reports failures as run failures so schedulers retry it.
     if near_dedup_consolidate and near_dedup_store:
-        # post-run store maintenance: merge every completed batch
-        # partition into one batch=c0 per tree — for EVERY collection
-        # tree in the store (each subdir with a meta.json, text_col
-        # read from its pin), not only the collections this run
-        # indexed: a scheduler's every-N-runs maintenance pass must
-        # not silently skip a store whose collection happened to fail
-        # or lack its dedup column THIS run, or its partition count
-        # grows unbounded — the exact cost the flag exists to bound.
-        # Runs AFTER all increments of this invocation committed (the
-        # consolidate contract: never with an increment in flight) and
-        # is content-preserving, so a failure here leaves the store
-        # fully usable — but it is still reported as a run failure so
-        # schedulers retry the maintenance.
-        import json as jsonlib
+        from mongo2pq_spark.plans.neardedup_store import (
+            open_store as open_near_dedup,
+        )
 
-        from mongo2pq_spark.plans.neardedup_store import NearDedupStore
-
-        store_root = Path(near_dedup_store)
-        trees = sorted(
-            p for p in store_root.iterdir()
-            if (p / "meta.json").is_file()
-        ) if store_root.is_dir() else []
-        for tree in trees:
-            try:
-                with open(tree / "meta.json") as fh:
-                    pinned = jsonlib.load(fh)
-                NearDedupStore(
-                    near_dedup_store, tree.name,
-                    text_col=pinned["text_col"],
-                    threshold=near_dedup_threshold,
-                    k=pinned["k"], bands=pinned["bands"],
-                    shingle_n=pinned["shingle_n"], seed=pinned["seed"],
-                ).consolidate(spark)
-            except Exception as err:
-                failures.append((tree.name, err))
+        _maintain_trees(
+            near_dedup_store,
+            lambda t: open_near_dedup(
+                t.parent, t.name, threshold=near_dedup_threshold
+            ).consolidate(spark),
+            failures,
+        )
     if index_consolidate and inverted_index:
-        # same maintenance contract as the dedup stores: fold every
-        # collection tree's batches into one batch=c0 through the
-        # crash-safe swap, after all of this run's increments landed;
-        # content-preserving, failures reported so schedulers retry
         from mongo2pq_spark.operators.text import (
             consolidate_inverted_index,
         )
 
-        index_root = Path(inverted_index)
-        trees = sorted(
-            p for p in index_root.iterdir() if p.is_dir()
-        ) if index_root.is_dir() else []
-        for tree in trees:
-            try:
-                consolidate_inverted_index(spark, str(tree))
-            except Exception as err:
-                failures.append((tree.name, err))
+        _maintain_trees(
+            inverted_index,
+            lambda t: consolidate_inverted_index(spark, str(t)),
+            failures,
+            is_tree=Path.is_dir,
+        )
     if media_store_consolidate:
-        # same maintenance contract for the MEDIA fingerprint stores:
-        # every tree under each configured store root (parameters read
-        # from its meta.json pin — never guessed), after all of this
-        # run's increments committed; content-preserving, failures
-        # reported so schedulers retry.
-        from mongo2pq_spark.plans.mediadedup_store import open_store
+        from mongo2pq_spark.plans.mediadedup_store import (
+            open_store as open_media,
+        )
 
         for root in (media_dhash_store, media_phash_store, media_afp_store):
-            if not root:
-                continue
-            store_root = Path(root)
-            trees = sorted(
-                p for p in store_root.iterdir()
-                if (p / "meta.json").is_file()
-            ) if store_root.is_dir() else []
-            for tree in trees:
-                try:
-                    open_store(store_root, tree.name).consolidate(spark)
-                except Exception as err:
-                    failures.append((tree.name, err))
+            if root:
+                _maintain_trees(
+                    root,
+                    lambda t: open_media(t.parent, t.name).consolidate(spark),
+                    failures,
+                )
     if substring_consolidate and substring_store:
-        # same maintenance contract as the sibling stores: fold every
-        # collection tree's span batches into one batch=c0 through the
-        # crash-safe swap (parameters read from each tree's meta.json
-        # pin), after all of this run's increments landed;
-        # content-preserving, failures reported so schedulers retry
-        import json as jsonlib
+        from mongo2pq_spark.plans.spanstore import open_store as open_span
 
-        from mongo2pq_spark.plans.spanstore import SpanHashStore
-
-        store_root = Path(substring_store)
-        trees = sorted(
-            p for p in store_root.iterdir()
-            if (p / "meta.json").is_file()
-        ) if store_root.is_dir() else []
-        for tree in trees:
-            try:
-                with open(tree / "meta.json") as fh:
-                    pinned = jsonlib.load(fh)
-                SpanHashStore(
-                    substring_store, tree.name,
-                    text_col=pinned["text_col"],
-                    span_words=pinned["span_words"],
-                ).consolidate(spark)
-            except Exception as err:
-                failures.append((tree.name, err))
+        _maintain_trees(
+            substring_store,
+            lambda t: open_span(t.parent, t.name).consolidate(spark),
+            failures,
+        )
     if compact_partitions and partition_key:
-        # lake maintenance under the same post-run contract: rewrite
-        # every hive partition of every collection written under
-        # outdir down to <= N files through the audited crash-safe
-        # swap. Incremental / repeated runs mint a file per task per
-        # run; without a compaction cadence a year of daily EL leaves
-        # open/footer overhead proportional to write history, not
-        # data. Content-preserving (exact row multiset), so a failure
-        # leaves the dataset fully readable — still reported so
-        # schedulers retry the maintenance.
+        # lake maintenance: rewrite every hive partition of every
+        # collection under outdir down to <= N files through the
+        # crash-safe swap. Repeated runs mint a file per task per run;
+        # without a compaction cadence a year of daily EL leaves
+        # open/footer overhead proportional to write history, not data.
         from mongo2pq_spark.plans.pipeline import (
             compact_partitions as _compact,
         )
 
-        out_root = Path(outdir)
-        trees = sorted(
-            p for p in out_root.iterdir()
-            if p.is_dir() and any(p.glob(f"{partition_key}=*"))
-        ) if out_root.is_dir() else []
-        for tree in trees:
-            try:
-                audit = _compact(
-                    spark, str(tree), partition_key,
-                    target_files=compact_partitions,
-                )
-                n_before = sum(a["files_before"] for a in audit)
-                n_after = sum(a["files_after"] for a in audit)
-                print(
-                    f"{tree.name}: compacted {len(audit)} partitions, "
-                    f"{n_before} -> {n_after} files"
-                )
-            except Exception as err:
-                failures.append((tree.name, err))
+        def compact(tree: Path) -> None:
+            audit = _compact(
+                spark, str(tree), partition_key,
+                target_files=compact_partitions,
+            )
+            n_before = sum(a["files_before"] for a in audit)
+            n_after = sum(a["files_after"] for a in audit)
+            print(
+                f"{tree.name}: compacted {len(audit)} partitions, "
+                f"{n_before} -> {n_after} files"
+            )
+
+        _maintain_trees(
+            outdir,
+            compact,
+            failures,
+            is_tree=lambda p: p.is_dir() and any(p.glob(f"{partition_key}=*")),
+        )
     for name, err in failures:
         print(f"ERROR: collection '{name}' failed: {err}", file=sys.stderr)
     return 1 if failures else 0
+
+
+def _maintain_trees(
+    root, maintain, failures: list, is_tree=None
+) -> None:
+    """Run ``maintain(tree)`` on every collection tree under ``root``
+    (by default each subdirectory holding a store pin), collecting a
+    tree's failure into ``failures`` instead of aborting the rest."""
+    from mongo2pq_spark.plans.bandstore_core import read_pin
+
+    if is_tree is None:
+        is_tree = lambda p: read_pin(p) is not None  # noqa: E731
+    root = Path(root)
+    if not root.is_dir():
+        return
+    for tree in sorted(p for p in root.iterdir() if is_tree(p)):
+        try:
+            maintain(tree)
+        except Exception as err:
+            failures.append((tree.name, err))
 
 
 def _collection_readers(

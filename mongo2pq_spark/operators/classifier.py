@@ -491,43 +491,26 @@ def _nb_batch_id_ok(batch_id: str) -> bool:
     return bool(re.fullmatch(r"[A-Za-z0-9_\-]+", batch_id))
 
 
-def _nb_meta_path(store_dir: str) -> str:
-    import os
-
-    return os.path.join(store_dir, _NB_META_NAME)
-
-
 def _nb_check_meta(
     store_dir: str, label_col: str, hash_buckets: int | None
 ) -> None:
-    """Create-or-validate the store's config pin: a store ingested
-    under one (label column, term space) must refuse batches from
-    another — hash-bucket or label drift would merge incompatible
-    counts SILENTLY (the numbers still look plausible), so this is a
-    fail-loud contract, mirroring the span store's layout pin."""
-    import json
-    import os
+    """Create-or-validate the store's config pin
+    (``bandstore_core.pin_meta``): a store ingested under one (label
+    column, term space) must refuse batches from another — hash-bucket
+    or label drift would merge incompatible counts SILENTLY (the
+    numbers still look plausible)."""
+    from mongo2pq_spark.plans.bandstore_core import pin_meta
 
-    meta = {
-        "layout": NB_STORE_LAYOUT,
-        "label_col": label_col,
-        "hash_buckets": hash_buckets,
-    }
-    path = _nb_meta_path(store_dir)
-    if os.path.exists(path):
-        with open(path, encoding="utf-8") as fh:
-            found = json.load(fh)
-        if found != meta:
-            raise ValueError(
-                f"nb count store config mismatch at {store_dir}: "
-                f"store has {found}, ingest wants {meta}"
-            )
-        return
-    os.makedirs(store_dir, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, path)
+    pin_meta(
+        store_dir,
+        {
+            "layout": NB_STORE_LAYOUT,
+            "label_col": label_col,
+            "hash_buckets": hash_buckets,
+        },
+        "nb count store",
+        name=_NB_META_NAME,
+    )
 
 
 def nb_count_tables(
@@ -692,47 +675,26 @@ def compact_nb_store(spark, store_dir: str) -> None:
     NB sufficient statistics are ADDITIVE integers, so compaction is
     an exact sum-regroup: the rebuilt model is value-identical to the
     uncompacted store's by construction (pinned by the equality test
-    in tests/test_operators.py). Each tree swaps through the audited
-    crash-safe ``replace_dir`` protocol shared with the dedup/index
-    stores — at every crash point a load sees either the complete old
-    or the complete new layout, and a crash BETWEEN the two tree swaps
-    is harmless because each tree's sums are independently preserved.
-    Folded batch ids are recorded in the swap-atomic ``_absorbed.json``
-    so a retried producer cannot re-append an absorbed wave (see
-    ``ingest_nb_counts``). Ingest after compaction keeps its
-    O(increment) shape: new batches land NEXT to ``c0``."""
-    import os
-    from pathlib import Path
-
-    from mongo2pq_spark.plans.bandstore_core import (
-        absorbed_tokens,
-        record_absorbed,
-        recover_replace,
-        replace_dir,
-    )
+    in tests/test_operators.py). Each tree folds through
+    ``bandstore_core.fold_tree`` (crash-safe swap, absorbed-token
+    record); a crash BETWEEN the two tree swaps is harmless because
+    each tree's sums are independently preserved. Ingest after
+    compaction keeps its O(increment) shape: new batches land NEXT to
+    ``c0``."""
+    from mongo2pq_spark.plans.bandstore_core import fold_tree
 
     for tree, keys, agg in (
         ("term_counts", ["label", "term"], F.sum("c").alias("c")),
         ("doc_counts", ["label"], F.sum("n_docs").alias("n_docs")),
     ):
-        root = Path(store_dir) / tree
-        recover_replace(root)
-        if not root.is_dir():
-            continue
-        folded = spark.read.parquet(str(root)).groupBy(*keys).agg(agg)
-        absorbed = absorbed_tokens(root) | {
-            p.name.split("=", 1)[1]
-            for p in root.glob("batch=*")
-            if p.is_dir() and p.name != f"batch={_NB_COMPACT_BATCH}"
-        }
-
-        def writer(build_path: str) -> None:
-            folded.write.mode("overwrite").parquet(
-                os.path.join(build_path, f"batch={_NB_COMPACT_BATCH}")
-            )
-            record_absorbed(build_path, absorbed)
-
-        replace_dir(root, writer)
+        fold_tree(
+            f"{store_dir}/{tree}",
+            lambda sources, c0: spark.read.parquet(*sources)
+            .groupBy(*keys)
+            .agg(agg)
+            .write.mode("overwrite")
+            .parquet(c0),
+        )
 
 
 def nb_store_meta(store_dir: str) -> dict | None:
@@ -740,11 +702,6 @@ def nb_store_meta(store_dir: str) -> dict | None:
     ingested into — callers (the CLI's score-only path) use it to
     adopt the store's own label column and term space instead of
     guessing."""
-    import json
-    import os
+    from mongo2pq_spark.plans.bandstore_core import read_pin
 
-    path = _nb_meta_path(store_dir)
-    if not os.path.exists(path):
-        return None
-    with open(path, encoding="utf-8") as fh:
-        return json.load(fh)
+    return read_pin(store_dir, _NB_META_NAME)

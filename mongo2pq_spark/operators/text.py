@@ -765,49 +765,26 @@ def consolidate_inverted_index(spark, index_dir: str) -> None:
     back to one posting row per (term, shard), with probe answers
     unchanged (batches hold disjoint doc sets, so consolidation is a
     pure regroup: decode every batch's gap runs, re-sort the union per
-    (term, shard), re-encode). The swap rides the audited crash-safe
-    ``replace_dir`` protocol shared with the near-dedup stores — at
-    every crash point the store reads as either the complete old or
-    the complete new layout. The absorbed-token record rides the
-    shared sidecar helpers (``bandstore_core.absorbed_tokens`` /
-    ``record_absorbed`` — see that module's docstring for why the
-    dedup stores' row-level ``src_token`` mechanism cannot fit a
-    postings regroup)."""
-    import os
-    from pathlib import Path
+    (term, shard), re-encode). The swap and the absorbed-token record
+    are ``bandstore_core.fold_tree``: a regroup destroys per-row
+    provenance, so retry exclusion rides the sidecar, not ``src_token``
+    rows."""
+    from mongo2pq_spark.plans.bandstore_core import fold_tree
 
-    from mongo2pq_spark.plans.bandstore_core import (
-        absorbed_tokens,
-        record_absorbed,
-        recover_replace,
-        replace_dir,
-    )
-
-    root = Path(index_dir)
-    recover_replace(root)
-    idx = spark.read.parquet(str(root))
-    out = _encode_postings(_decode_postings(idx, keep_shard=True))
-    # every batch folded here (prior absorptions included) is recorded
-    # so a RETRIED producer run whose batch was absorbed cannot
-    # re-append it next to c0 (write_inverted_index's exclusion above)
-    absorbed = absorbed_tokens(root) | {
-        p.name.split("=", 1)[1]
-        for p in root.glob("batch=*")
-        if p.is_dir() and p.name != "batch=c0"
-    }
-
-    def writer(build_path: str) -> None:
+    def write(sources: list[str], c0: str) -> None:
+        # basePath keeps the batch column the prefix-sum window needs
+        idx = spark.read.option("basePath", index_dir).parquet(*sources)
         (
-            out.repartitionByRange(
+            _encode_postings(_decode_postings(idx, keep_shard=True))
+            .repartitionByRange(
                 max(spark.sparkContext.defaultParallelism, 4), "term"
             )
             .sortWithinPartitions("term", "shard")
             .write.mode("overwrite")
-            .parquet(os.path.join(build_path, "batch=c0"))
+            .parquet(c0)
         )
-        record_absorbed(build_path, absorbed)
 
-    replace_dir(root, writer)
+    fold_tree(index_dir, write)
 
 
 def phrase_matches(

@@ -1,44 +1,57 @@
-"""Shared crash-safety core for the persisted MinHash band stores.
+"""The one lifecycle of the persisted stores, written once.
 
-Backs both ``plans/neardedup_store.py`` (batch EL store: signature-
-verified DROP semantics, content-token batches) and
-``streaming/neardedup.py`` (micro-batch store: band-collision FLAG
-semantics, numbered increments). The two stores keep their own
-semantics and layouts; what they share — and what lives here as the
-ONE audited implementation — is the machinery every idempotent run
-and every layout-rewriting maintenance job needs:
+Five stores keep history across runs: the near-dedup store
+(``plans/neardedup_store.py``), the media fingerprint stores
+(``plans/mediadedup_store.py``), the span-hash store
+(``plans/spanstore.py``), the inverted index
+(``operators/text.py::write_inverted_index``) and the Naive Bayes count
+store (``operators/classifier.py::ingest_nb_counts``); the streaming
+band store (``streaming/neardedup.py``) shares the swap and run-log
+parts. Each store keeps only its probe joins and merge aggregates; every
+lifecycle step below lives here:
 
-- ``replace_dir`` / ``recover_replace``: crash-safely replace a
-  directory with rewritten content (write-aside build →
-  complete-by-naming rename → swap with ``.old`` rollback). Used by
-  the batch store's ``consolidate()`` (per-tree ``batch=c0``) and the
-  streaming store's ``compact_band_store`` (whole ``bands/`` dir).
-- ``RunLog``: a ``runs/`` directory of atomic JSON manifests plus
-  ``.done`` completion markers, with NUMERIC run-id ordering
-  (lexicographic ordering silently breaks at the 10 000th increment:
-  ``'r10000' < 'r9999'`` as strings, so the crashed-run resume check
-  would inspect the wrong manifest).
-- ``data_partition_dirs``: partition listing that ignores partitions
-  holding no data files (a crashed append's ``_temporary`` droppings
-  or an empty partition holding only ``_SUCCESS`` must not poison a
-  read or an audit).
-- ``absorbed_tokens`` / ``record_absorbed``: the SIDECAR variant of
-  post-consolidation retry exclusion, used by the inverted-index
-  store (operators/text.py). The dedup stores record each row's
-  origin batch IN the row (``src_token``) so exclusion survives
-  consolidation for free — but that mechanism cannot fit a postings
-  layout, where consolidation is a REGROUP that merges several
-  batches' postings into one row: per-row provenance is destroyed
-  by design. The ``_absorbed.json`` sidecar (written into the build
-  dir, so it swaps atomically with the data it describes) is the
-  correct mechanism there, and it lives here so the crash-safety
-  reasoning is owned once. (r11 verdict task 8: evaluated porting
-  the index store onto ``src_token`` rows — doesn't fit, for the
-  reason above; the sidecar helpers moved here instead.)
+1. **Pin** (``pin_meta``). A store directory's parameters are pinned
+   in a JSON file at creation (``meta.json``; the NB store's
+   ``_NB_STORE_META.json``). Reopening with any pinned key changed is a
+   hard error: probing or merging across a parameter change gives
+   plausible-looking garbage. The root must be a driver-local path (the
+   pin and the gates are filesystem checks; at warehouse scale the same
+   shape becomes catalog tables with MERGE commits). A non-empty
+   directory without a pin is refused, because initializing over it
+   would silently discard its history. Stores with done markers get a
+   partial-commit audit on reopen (step 3). ``read_pin`` opens an
+   existing tree from its pin, so maintenance never guesses parameters.
+2. **Token** (``digest_batch_token``). A batch is named by a
+   deterministic, order-independent content token, so a retry of the
+   same input writes the same ``batch=<token>`` partition (overwrite,
+   never append) and excludes its own rows from the history probe.
+3. **Commit + done marker** (``RunLog``). A batch's store rows are
+   written only after the EL write succeeded, then ``runs/<token>.done``
+   lands. Data without a marker is a crash inside the commit: the
+   reopen audit warns, and re-running the same input finishes it.
+4. **Consolidate or fold** (bounding one partition per run).
+   ``consolidate_tree`` merges every COMPLETED batch of one tree into
+   ``batch=c0``; rows carry their origin token (``src_token``), so the
+   own-batch exclusion survives as a row filter (near-dedup and media
+   stores). ``fold_tree`` folds a whole tree into ``batch=c0`` where a
+   regroup destroys per-row provenance (postings, additive counts, the
+   span set); the folded tokens go to the ``_absorbed.json`` sidecar,
+   written into the build so it swaps in atomically with the data, and
+   a retry of an absorbed token is a no-op. Both list batches with
+   ``data_partition_dirs``: a partition holding no data files (a
+   crashed write's ``_temporary`` droppings, an empty ``_SUCCESS``-only
+   batch) is neither merged nor recorded as absorbed, so its retry
+   still lands. Run either between increments, never with one in
+   flight.
+5. **Recover** (``replace_dir`` / ``recover_replace``). Every rewrite
+   goes write-aside build, complete-by-naming rename, swap with an
+   ``.old`` rollback; each store rolls an interrupted swap forward or
+   back before it reads or writes the tree, so the target is never
+   missing while a complete copy exists.
 
-Everything here is driver-local filesystem bookkeeping — at warehouse
-scale these become catalog transactions / MERGE boundaries with the
-same shape (documented in the two store modules).
+``RunLog`` also serves the streaming store's numbered increments, with
+NUMERIC run-id ordering (``'r10000' < 'r9999'`` as strings would make
+the crashed-run resume check inspect the wrong manifest).
 """
 
 from __future__ import annotations
@@ -46,6 +59,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import sys
 from pathlib import Path
 from typing import Callable
 
@@ -59,12 +73,83 @@ def atomic_write_json(path: Path, obj) -> None:
     os.replace(tmp, path)
 
 
+def read_pin(store_dir: Path | str, name: str = "meta.json") -> dict | None:
+    """The parameters pinned in a store directory, or None if it has
+    never been pinned."""
+    path = Path(store_dir) / name
+    if not path.is_file():
+        return None
+    with open(path, encoding="utf-8") as fh:
+        return json.load(fh)
+
+
+def pin_meta(
+    store_dir: str | os.PathLike,
+    pinned: dict,
+    what: str,
+    name: str = "meta.json",
+    audit: tuple[str, ...] = (),
+) -> Path:
+    """Create-or-validate ``store_dir``'s parameter pin (step 1 of the
+    module docstring) and return the directory. ``audit`` names the
+    trees whose batches need a ``runs/<token>.done`` marker; batches
+    with data but no marker are warned about on reopen. Entries named
+    ``_*`` or ``*.tmp`` (bookkeeping, torn pin writes) do not count as
+    content for the unpinned-directory refusal."""
+    if "://" in str(store_dir):
+        raise ValueError(
+            f"{what} must be a driver-visible local directory, got "
+            f"{str(store_dir)!r}; remote object-store backends need the "
+            "catalog-table variant of this layout"
+        )
+    store = Path(store_dir)
+    stored = read_pin(store, name)
+    if stored is None:
+        if store.is_dir() and any(
+            not (e.name.startswith("_") or e.name.endswith(".tmp"))
+            for e in store.iterdir()
+        ):
+            raise ValueError(
+                f"{store} exists and is non-empty but has no {name} — "
+                f"not a {what} (or an incompatible layout); refusing to "
+                "initialize over it"
+            )
+        store.mkdir(parents=True, exist_ok=True)
+        atomic_write_json(store / name, pinned)
+        return store
+    drift = {
+        key: (stored.get(key), val)
+        for key, val in pinned.items()
+        if stored.get(key) != val
+    }
+    if drift:
+        raise ValueError(
+            f"{what} {store}: config mismatch — built with different "
+            f"parameters: {drift} (stored, requested); results across a "
+            "parameter change are silently wrong, use a fresh store "
+            "directory"
+        )
+    partial = {
+        p.name.removeprefix("batch=")
+        for tree in audit
+        for p in data_partition_dirs(store / tree)
+    } - RunLog(store / "runs").done_tokens() - {"c0"}
+    if partial:
+        print(
+            f"WARNING: {what} {store} has partially-committed batches "
+            f"{sorted(partial)} (no completion marker) — re-run those "
+            "inputs to finish their index entries; until then dedup "
+            "against them is incomplete",
+            file=sys.stderr,
+        )
+    return store
+
+
 def absorbed_tokens(root: Path | str) -> set[str]:
-    """Tokens of batches already folded into the consolidated
-    partition — recorded by consolidation in ``_absorbed.json``
-    (underscore-prefixed so Spark's parquet discovery ignores it).
-    A producer retry whose batch was absorbed must NOT re-append it
-    next to the consolidated partition: consolidation is a pure
+    """Tokens already folded into ``batch=c0`` by ``fold_tree``,
+    recorded in ``_absorbed.json`` (underscore-prefixed so Spark's
+    parquet discovery ignores it). A producer retry of an absorbed
+    token must not re-append next to ``batch=c0``: the fold is a pure
     regroup, so the duplicate would be baked in permanently."""
     p = Path(root) / "_absorbed.json"
     if not p.is_file():
@@ -74,11 +159,10 @@ def absorbed_tokens(root: Path | str) -> set[str]:
 
 
 def record_absorbed(root: Path | str, tokens: set[str]) -> None:
-    """Write the absorbed-token record. Call with the ``replace_dir``
-    BUILD path during consolidation — the record then swaps into
-    place atomically with the data it describes (a record that could
-    land without its data, or vice versa, would break the retry
-    exclusion in exactly the crash windows it exists for)."""
+    """Write the absorbed-token record into the ``replace_dir`` BUILD
+    path, so it swaps into place atomically with the data it describes
+    (a record landing without its data, or the reverse, would break
+    the retry exclusion in exactly the crash windows it exists for)."""
     atomic_write_json(Path(root) / "_absorbed.json", sorted(tokens))
 
 
@@ -268,3 +352,67 @@ class RunLog:
             },
         )
         return run_id, offset, n_batches
+
+
+def consolidate_tree(
+    spark,
+    base: Path,
+    merge: Callable,
+    done: set[str],
+) -> None:
+    """Merge every COMPLETED ``batch=<token>`` of ``base`` into one
+    ``batch=c0`` with ``merge`` (a DataFrame → DataFrame aggregate that
+    keeps each row's ``src_token``), through the crash-safe swap.
+
+    ``batch=c0`` is complete BY NAMING (it only gets that name from the
+    swap of a fully written build), so it joins the merge
+    unconditionally: gating it on a marker written after the swap
+    would let a crash in that window orphan it, and the next merge
+    would delete it unread. Batches without a done marker (crashes
+    inside a commit) are left alone so their retry semantics hold.
+    Sources, the old ``batch=c0`` among them, stay in place until the
+    swap returns, which is what licenses ``recover_replace``'s
+    discard-ambiguous-swap-in choice."""
+    c0 = base / "batch=c0"
+    recover_replace(c0)
+    src = [
+        p
+        for p in data_partition_dirs(base)
+        if p == c0 or p.name.removeprefix("batch=") in done
+    ]
+    if len(src) < 2:
+        return
+    merged = merge(spark.read.parquet(*[str(p) for p in src]))
+    replace_dir(c0, lambda build: merged.write.mode("overwrite").parquet(build))
+    for p in src:
+        if p != c0:
+            shutil.rmtree(p, ignore_errors=True)
+
+
+def fold_tree(root: Path | str, write: Callable[[list[str], str], None]) -> None:
+    """Fold every batch of the tree at ``root`` into one ``batch=c0``
+    and record the folded tokens in ``_absorbed.json``, swapping the
+    whole tree crash-safely. ``write(sources, c0_path)`` reads the
+    listed batch directories (the previous ``batch=c0`` included) and
+    writes the folded rows to ``c0_path``.
+
+    The absorbed record and the read share one listing,
+    ``data_partition_dirs``: a batch directory holding no data files
+    (a write that crashed with only Spark's ``_temporary`` droppings)
+    is neither folded nor recorded, so its retry still lands instead
+    of being skipped as already absorbed. A tree with no data is left
+    as it is."""
+    root = Path(root)
+    recover_replace(root)
+    batches = data_partition_dirs(root)
+    if not batches:
+        return
+    absorbed = absorbed_tokens(root) | {
+        p.name.removeprefix("batch=") for p in batches if p.name != "batch=c0"
+    }
+
+    def writer(build: str) -> None:
+        write([str(p) for p in batches], os.path.join(build, "batch=c0"))
+        record_absorbed(build, absorbed)
+
+    replace_dir(root, writer)

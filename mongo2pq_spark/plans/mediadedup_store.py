@@ -23,12 +23,9 @@ write, and the surviving fingerprints are committed. Per-run cost
 scales with the increment; history's only trace is one int64
 fingerprint (× bands) per surviving file.
 
-Identity & idempotency mirror the text store: a file is identified by
-the md5 of its payload BYTES (rerun-stable, id-column-independent);
-the batch token is a deterministic order-independent aggregate of the
-payload-digest set; store writes are ``batch=<token>`` partition
-overwrites whose probe excludes the batch's own rows (src_token), so
-reruns and crash-retries recompute the identical drop set.
+A file is identified by the md5 of its payload BYTES (rerun-stable,
+id-column-independent); the batch token is built from the
+payload-digest set.
 
 Scope honesty: only mimes the real codecs decode are fingerprinted.
 Other-modality rows and payloads the codec rejects (GIF/WebP,
@@ -39,38 +36,27 @@ dedup what we cannot decode would be a fake. Within-batch near-dups
 both survive (exact payload-digest dedup runs upstream in the CLI; the
 text store has the same contract).
 
-Growth & maintenance: one ``batch=`` partition per run (a listing
-cost). ``consolidate()`` bounds it — every COMPLETED batch merges into
-one ``batch=c0`` via the shared crash-safe swap
-(plans/bandstore_core.replace_dir), keying on the full
-(band_id, band_value, fp) triple exactly like the streaming Hamming
-store's compaction: future probes verify by popcount against ``fp``,
-so keeping one row per triple preserves every future drop decision.
-Rows keep their origin ``src_token``, so the probe's own-batch
-exclusion (the idempotency backbone) survives absorption; when two
-batches committed an identical triple (only possible through a
-crash-retry re-commit — filter_new drops cross-batch fingerprint
-collisions before commit), folding to the min token is safe because
-either row answers the probe identically.
+Pin, batch token, commit + done marker (with the partial-commit
+audit), consolidation to ``batch=c0`` and swap recovery are the shared
+lifecycle in ``plans/bandstore_core.py``.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import sys
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mongo2pq_spark.plans.bandstore_core import (
     RunLog,
-    atomic_write_json,
+    consolidate_tree,
     data_partition_dirs,
+    digest_batch_token,
+    pin_meta,
+    read_pin,
     recover_replace,
-    replace_dir,
 )
 
 #: canonical media id inside the store: md5 of the payload bytes
@@ -97,68 +83,26 @@ class MediaFingerprintStore:
         max_hamming: int = 3,
         bits: int = 60,
     ) -> None:
-        root_str = str(root)
-        if "://" in root_str:
-            raise ValueError(
-                "media fingerprint store must be a driver-visible "
-                f"local directory, got {root_str!r}; remote "
-                "object-store backends need the catalog-table variant "
-                "of this layout (see module docstring)"
-            )
         if not 0 <= max_hamming < bits:
             raise ValueError(
                 f"max_hamming must be in [0, {bits}), got {max_hamming}"
             )
-        self.dir = Path(root) / collection
         self.max_hamming = max_hamming
         self.bits = bits
         self._hashed = None
         self._fp = None
         self._dropped = None
-        self._check_meta()
-        self._recover_consolidation()
-
-    # -------------------------------------------------------- layout
-
-    def _check_meta(self) -> None:
-        meta_path = self.dir / "meta.json"
-        pinned = {
-            "layout": 1,
-            "kind": self.KIND,
-            "max_hamming": self.max_hamming,
-            "bits": self.bits,
-        }
-        if meta_path.is_file():
-            with open(meta_path) as fh:
-                stored = json.load(fh)
-            drift = {
-                key: (stored.get(key), val)
-                for key, val in pinned.items()
-                if stored.get(key) != val
-            }
-            if drift:
-                raise ValueError(
-                    f"media fingerprint store {self.dir} was built "
-                    f"with different parameters: {drift} (stored, "
-                    "requested) — probing across parameter changes "
-                    "produces garbage candidates; use a fresh store "
-                    "directory"
-                )
-            return
-        if self.dir.is_dir() and any(
-            e for e in self.dir.iterdir() if not e.name.endswith(".tmp")
-        ):
-            raise ValueError(
-                f"{self.dir} exists and is non-empty but has no "
-                "meta.json — not a media fingerprint store (or an "
-                "incompatible layout); refusing to initialize over it"
-            )
-        self.dir.mkdir(parents=True, exist_ok=True)
-        atomic_write_json(meta_path, pinned)
-
-    def _recover_consolidation(self) -> None:
-        """Roll forward/back any consolidation swap interrupted
-        mid-flight (the shared replace_dir crash windows)."""
+        self.dir = pin_meta(
+            os.path.join(root, collection),
+            {
+                "layout": 1,
+                "kind": self.KIND,
+                "max_hamming": max_hamming,
+                "bits": bits,
+            },
+            "media fingerprint store",
+            audit=("fps",),
+        )
         recover_replace(self.dir / "fps" / "batch=c0")
 
     # -------------------------------------------------------- modality
@@ -172,8 +116,6 @@ class MediaFingerprintStore:
         """Deterministic, order-independent fingerprint of the batch's
         payload-digest set (same construction and collision margin as
         the text store's token: count + both 64-bit md5-half sums)."""
-        from mongo2pq_spark.plans.bandstore_core import digest_batch_token
-
         return digest_batch_token(df, F.col("payload_md5"))
 
     def _fp_or_null(self, df: DataFrame) -> DataFrame:
@@ -294,38 +236,18 @@ class MediaFingerprintStore:
     # -------------------------------------------------- maintenance
 
     def consolidate(self, spark: SparkSession) -> None:
-        """Merge every COMPLETED batch partition into one ``batch=c0``,
-        bounding the partition-count growth of long ingestion histories
-        (a listing cost, not a data cost).
-
-        Preservation key is the full (band_id, band_value, fp) triple
-        — the probe joins on (band_id, band_value) and verifies by
-        exact popcount against ``fp``, so one surviving row per triple
-        leaves every future drop decision unchanged. The min
-        (src_token, id) struct keeps the survivor deterministic and
-        the origin token intact for own-batch exclusion on retries.
-        ``batch=c0`` is complete BY NAMING (it only ever gets that
-        name via the replace_dir swap of a fully-written build), so it
-        joins the merge unconditionally; batches without a completion
-        marker (mid-commit crashes) are left untouched so their retry
-        semantics are preserved. Sources stay in place until the swap
-        returns — which is what licenses replace_dir's
-        discard-ambiguous-swapin recovery choice. Run it between EL
-        runs — never with an increment in flight."""
-        self._recover_consolidation()
-        base = self.dir / "fps"
-        done = RunLog(self.dir / "runs").done_tokens()
-        src = [
-            p
-            for p in data_partition_dirs(base)
-            if p.name == "batch=c0"
-            or p.name.removeprefix("batch=") in done
-        ]
-        if len(src) < 2:
-            return
-        merged = (
-            spark.read.parquet(*[str(p) for p in src])
-            .groupBy("band_id", "band_value", "fp")
+        """Merge every completed batch into one ``batch=c0``
+        (``bandstore_core.consolidate_tree``). The preservation key is
+        the full (band_id, band_value, fp) triple: the probe joins on
+        (band_id, band_value) and verifies by exact popcount against
+        ``fp``, so one surviving row per triple leaves every future drop
+        decision unchanged. The min (src_token, id) struct keeps the
+        survivor deterministic and its origin token intact. Run it
+        between EL runs."""
+        consolidate_tree(
+            spark,
+            self.dir / "fps",
+            lambda d: d.groupBy("band_id", "band_value", "fp")
             .agg(F.min(F.struct("src_token", STORE_ID)).alias("first"))
             .select(
                 F.col(f"first.{STORE_ID}").alias(STORE_ID),
@@ -333,15 +255,9 @@ class MediaFingerprintStore:
                 "band_id",
                 "band_value",
                 F.col("first.src_token").alias("src_token"),
-            )
+            ),
+            RunLog(self.dir / "runs").done_tokens(),
         )
-        replace_dir(
-            base / "batch=c0",
-            lambda build: merged.write.mode("overwrite").parquet(build),
-        )
-        for p in src:
-            if p.name != "batch=c0":
-                shutil.rmtree(p, ignore_errors=True)
 
     def close(self) -> None:
         for cached in (self._hashed, self._dropped):
@@ -416,13 +332,12 @@ def open_store(
     """Open an EXISTING store tree with the parameters pinned in its
     meta.json (maintenance entry point — a consolidation pass must
     never guess parameters and trip the drift guard)."""
-    meta_path = Path(root) / collection / "meta.json"
-    with open(meta_path) as fh:
-        pinned = json.load(fh)
+    pinned = read_pin(os.path.join(root, collection))
     cls = KIND_TO_STORE.get(pinned.get("kind"))
     if cls is None:
         raise ValueError(
-            f"{meta_path} pins unknown store kind {pinned.get('kind')!r}"
+            f"{os.path.join(root, collection)} pins unknown store kind "
+            f"{pinned.get('kind')!r}"
         )
     return cls(
         root,

@@ -11,27 +11,11 @@ surviving documents' signatures + bands are committed to the store.
 Per-run cost scales with the increment, never the corpus; history's
 only trace is the k-integer signature table and its band projection.
 
-Idempotency (the rerun/retry hazard): a batch is identified by a
-DETERMINISTIC, order-independent token of its text-digest set, its store
-writes go to ``batch=<token>`` partition directories (overwritten,
-never appended), and the probe EXCLUDES the batch's own partitions —
-so a rerun of the same input computes the same drop set as the first
-attempt instead of colliding with its own previous append, and a
-crash-retry after a partial commit simply overwrites its own
-partitions. Completion is marked by ``runs/<token>.done``.
-
-Parameter drift: MinHash parameters (k, bands, shingle width, seed),
-the layout version, and the text column are pinned in ``meta.json``
-at store creation (layout v2 — rows carry ``src_token`` — is the
-first layout that ever persisted; the drift error path exists for
-future bumps, not for any deployed v1 store) —
-probing an index built with different parameters would silently
-produce garbage candidates, so a mismatch is a hard error. The store
-identifies documents by the md5 DIGEST of their text, not by any
-caller id column: digests are unique after the exact-dedup pass that
-precedes the store in the CLI (one survivor per digest), identical
-for identical texts even without it (so a merged signature is the
-same signature), and immune to id-column name/width/uniqueness drift
+The store identifies documents by the md5 DIGEST of their text, not by
+any caller id column: digests are unique after the exact-dedup pass
+that precedes the store in the CLI (one survivor per digest), identical
+for identical texts even without it (so a merged signature is the same
+signature), and immune to id-column name/width/uniqueness drift
 between runs.
 
 Layout under ``<root>/<collection>/``::
@@ -42,38 +26,21 @@ Layout under ``<root>/<collection>/``::
     bands/batch=<token>/   (doc id [string], band_id, band_hash,
                             src_token) — survivors only
 
-The store root must be a driver-visible local directory (the manifest
-and gates are filesystem checks); at warehouse scale the same shape
-becomes catalog tables with MERGE commits — documented, not emulated.
-
-Growth: the store holds k integers + ``bands`` band rows per surviving
-document — orders of magnitude below corpus text — but gains one
-``batch=`` partition pair per run, so a many-years daily cadence
-accumulates thousands of small partitions (a listing cost, not a data
-cost). ``consolidate()`` bounds it: every completed batch merges into
-one ``batch=c0`` partition per tree. Rows carry their ORIGIN token
-(``src_token``) precisely so the probe's own-batch exclusion — the
-idempotency backbone — survives consolidation as a row-level filter.
-At warehouse scale this is the OPTIMIZE/MERGE maintenance job run
-between increments.
+Pin, batch token, commit + done marker, consolidation to ``batch=c0``
+and swap recovery are the shared lifecycle in
+``plans/bandstore_core.py``. Layout v2 (rows carry ``src_token``) is
+the first that ever persisted.
 
 Scale shape: probe = one equi-join of the increment's bands against
 the stored band partitions; verify = one join of candidate pairs
 against two signature tables + a k-term agreement expression (no
 text, no UDF); the only cached artifacts are the increment's
 signatures and the dropped-id set (≪ increment size).
-
-Crash-safety machinery (atomic manifests, done markers, partition
-listing, the consolidation swap protocol) is the shared audited core
-in ``plans/bandstore_core.py``, also backing the streaming store.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-from pathlib import Path
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -86,10 +53,13 @@ from mongo2pq_spark.operators.dedup import (
 )
 from mongo2pq_spark.plans.bandstore_core import (
     RunLog,
-    atomic_write_json,
+    aux_path,
+    consolidate_tree,
     data_partition_dirs,
+    digest_batch_token,
+    pin_meta,
+    read_pin,
     recover_replace,
-    replace_dir,
 )
 
 #: canonical id column inside the store: md5(text). Unique per
@@ -109,14 +79,6 @@ class NearDedupStore:
         shingle_n: int = 3,
         seed: int = 42,
     ) -> None:
-        root_str = str(root)
-        if "://" in root_str:
-            raise ValueError(
-                "--near-dedup-store must be a driver-visible local "
-                f"directory, got {root_str!r}; remote object-store "
-                "backends need the catalog-table variant of this "
-                "layout (see module docstring)"
-            )
         if not 0.0 < threshold <= 1.0:
             raise ValueError(
                 f"near-dedup threshold must be in (0, 1], got {threshold}"
@@ -124,85 +86,26 @@ class NearDedupStore:
                 " no-op); at or below 0 every raw band-collision"
                 " candidate is dropped unverified"
             )
-        self.dir = Path(root) / collection
         self.text_col = text_col
         self.threshold = threshold
         self.k, self.bands = k, bands
         self.shingle_n, self.seed = shingle_n, seed
         self._sig = None
         self._dropped = None
-        self._check_meta()
+        self.dir = pin_meta(
+            os.path.join(root, collection),
+            {
+                "layout": 2,  # v2: rows carry src_token (see consolidate)
+                "text_col": text_col,
+                "k": k,
+                "bands": bands,
+                "shingle_n": shingle_n,
+                "seed": seed,
+            },
+            "near-dedup store",
+            audit=("sigs", "bands"),
+        )
         self._recover_consolidation()
-
-    def _check_meta(self) -> None:
-        meta_path = self.dir / "meta.json"
-        pinned = {
-            "layout": 2,  # v2: rows carry src_token (see consolidate)
-            "text_col": self.text_col,
-            "k": self.k,
-            "bands": self.bands,
-            "shingle_n": self.shingle_n,
-            "seed": self.seed,
-        }
-        if meta_path.is_file():
-            with open(meta_path) as fh:
-                stored = json.load(fh)
-            drift = {
-                key: (stored.get(key), val)
-                for key, val in pinned.items()
-                if stored.get(key) != val
-            }
-            if drift:
-                raise ValueError(
-                    f"near-dedup store {self.dir} was built with "
-                    f"different parameters: {drift} (stored, requested)"
-                    " — probing across parameter changes produces "
-                    "garbage candidates; use a fresh store directory"
-                )
-            self._audit_done_markers()
-            return
-        if self.dir.is_dir() and any(
-            e for e in self.dir.iterdir() if not e.name.endswith(".tmp")
-        ):
-            # a populated directory without meta.json is NOT this
-            # store's layout (e.g. an index built by an older version):
-            # initializing over it would silently dedup against
-            # nothing, discarding the accumulated history
-            raise ValueError(
-                f"{self.dir} exists and is non-empty but has no "
-                "meta.json — not a near-dedup store (or an "
-                "incompatible layout); refusing to initialize over it"
-            )
-        self.dir.mkdir(parents=True, exist_ok=True)
-        atomic_write_json(meta_path, pinned)
-
-    def _audit_done_markers(self) -> None:
-        """Warn about batches with store data but no completion marker
-        (a crash between the EL write and the end of ``commit``): their
-        documents are in the corpus output but only partially indexed,
-        so future runs under-dedup against them until the SAME input is
-        re-run (the retry overwrites the partial partitions and lands
-        the marker). Warning, not error — the store stays usable and
-        the fix is exactly one rerun."""
-        import sys
-
-        partial = {
-            p.name.removeprefix("batch=")
-            for sub in ("sigs", "bands")
-            for p in data_partition_dirs(self.dir / sub)
-        } - self._done_tokens() - {"c0"}
-        if partial:
-            print(
-                f"WARNING: near-dedup store {self.dir} has "
-                f"partially-committed batches {sorted(partial)} (no "
-                "completion marker) — re-run those inputs to finish "
-                "their index entries; until then dedup against them "
-                "is incomplete",
-                file=sys.stderr,
-            )
-
-    def _done_tokens(self) -> set:
-        return RunLog(self.dir / "runs").done_tokens()
 
     # ---------------------------------------------------------- batch
 
@@ -228,8 +131,6 @@ class NearDedupStore:
         retry — and byte-identical re-crawls are exactly what plain
         exact dedup catches downstream; this store's value is the
         EDITED re-crawl."""
-        from mongo2pq_spark.plans.bandstore_core import digest_batch_token
-
         return digest_batch_token(df, self._digest())
 
     def _other_batches(self, sub: str, token: str) -> list[str]:
@@ -336,21 +237,11 @@ class NearDedupStore:
         self.close()
 
     def _recover_consolidation(self) -> None:
-        """Finish (or discard) a consolidation interrupted mid-swap —
-        the shared ``recover_replace`` protocol on each tree's
-        ``batch=c0``. At every crash point the index CONTENT is a
-        superset of the pre-consolidation content (merge sources are
-        deleted only after the swap completes, and an ambiguous
-        swap-in is discarded, not preferred), and the probe tolerates
-        duplicate rows, so recovery is about reclaiming space, never
-        about restoring correctness.
-
-        Pre-unification consolidations used ``_swapin_c0``/
-        ``_build_c0``; a store crashed mid-swap under those names is
-        migrated to the shared names first so its absorbed index
-        entries survive the upgrade."""
-        from mongo2pq_spark.plans.bandstore_core import aux_path
-
+        """Roll an interrupted consolidation swap forward or back on
+        each tree's ``batch=c0``. Pre-unification consolidations used
+        ``_swapin_c0``/``_build_c0``; a store crashed mid-swap under
+        those names is migrated to the shared names first so its
+        absorbed index entries survive the upgrade."""
         for sub in ("sigs", "bands"):
             base = self.dir / sub
             if not base.is_dir():
@@ -363,66 +254,25 @@ class NearDedupStore:
                     os.rename(legacy_dir, target)
             recover_replace(c0)
 
-    def _consolidate_tree(self, spark, sub: str, merge, done: set) -> None:
-        base = self.dir / sub
-        # batch=c0 is complete-BY-NAMING (it only ever gets that name
-        # via the replace_dir swap of a fully-written build), so it
-        # joins the merge unconditionally — gating it on a marker
-        # written after the swaps would let a crash in that window
-        # orphan it, and the NEXT consolidation would delete it
-        # unread, destroying every previously absorbed index entry
-        src = [
-            p
-            for p in data_partition_dirs(base)
-            if p.name == "batch=c0"
-            or p.name.removeprefix("batch=") in done
-        ]
-        if len(src) < 2:
-            return
-        merged = merge(spark.read.parquet(*[str(p) for p in src]))
-        # sources (including the old c0 — it is among them) stay in
-        # place until the swap returns, which is what licenses
-        # replace_dir's discard-ambiguous-swapin recovery choice
-        replace_dir(
-            base / "batch=c0",
-            lambda build: merged.write.mode("overwrite").parquet(build),
-        )
-        for p in src:
-            if p.name != "batch=c0":
-                shutil.rmtree(p, ignore_errors=True)
-
     def consolidate(self, spark) -> None:
-        """Merge every COMPLETED batch partition into one
-        ``batch=c0`` per tree, bounding the partition-count growth of
-        long ingestion histories (a listing cost, not a data cost).
-
-        Rows keep their ORIGIN token (``src_token``), so the probe's
-        own-batch exclusion — the idempotency backbone — survives
-        consolidation: a retry of an absorbed batch still excludes its
-        own rows and overwrites only its own (re-created) partition.
-        Duplicate rows a retry re-commits after absorption are benign
-        (the probe's DISTINCT tolerates them) and are folded back in
-        by the next consolidation's group-by. Partitions without a
-        completion marker (mid-commit crashes) are left untouched so
-        their retry semantics are preserved; ``batch=c0`` itself needs
-        NO marker — it is complete by naming, which keeps every crash
-        window superset-preserving. Each tree swap is
-        independently crash-safe (``_recover_consolidation``); the two
-        trees never need to swap atomically together because
-        consolidation is content-preserving per tree. Run it between
-        EL runs — never with an increment in flight."""
-        self._recover_consolidation()  # roll forward any mid-swap crash
-        done = self._done_tokens()
+        """Merge every completed batch into one ``batch=c0`` per tree
+        (``bandstore_core.consolidate_tree``). Duplicate rows a retry
+        re-commits after absorption are benign (the probe's DISTINCT
+        tolerates them) and fold back in at the next consolidation. The
+        two trees swap independently: consolidation preserves each
+        tree's content. Run it between EL runs."""
+        self._recover_consolidation()  # legacy swap names first
+        done = RunLog(self.dir / "runs").done_tokens()
         mh_mins = [F.min(f"mh{i}").alias(f"mh{i}") for i in range(self.k)]
-        self._consolidate_tree(
-            spark, "sigs",
+        consolidate_tree(
+            spark, self.dir / "sigs",
             lambda d: d.groupBy(STORE_ID).agg(
                 F.min("src_token").alias("src_token"), *mh_mins
             ),
             done,
         )
-        self._consolidate_tree(
-            spark, "bands",
+        consolidate_tree(
+            spark, self.dir / "bands",
             lambda d: d.groupBy(STORE_ID, "band_id", "band_hash").agg(
                 F.min("src_token").alias("src_token")
             ),
@@ -435,3 +285,19 @@ class NearDedupStore:
             if cached is not None:
                 cached.unpersist()
         self._sig = self._dropped = None
+
+
+def open_store(
+    root: str | os.PathLike, collection: str, threshold: float
+) -> NearDedupStore:
+    """Open an EXISTING store tree with the parameters pinned in its
+    meta.json (maintenance entry point: a consolidation pass must never
+    guess parameters and trip the drift guard)."""
+    pinned = read_pin(os.path.join(root, collection))
+    return NearDedupStore(
+        root, collection,
+        text_col=pinned["text_col"],
+        threshold=threshold,
+        k=pinned["k"], bands=pinned["bands"],
+        shingle_n=pinned["shingle_n"], seed=pinned["seed"],
+    )

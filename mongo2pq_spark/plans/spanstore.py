@@ -1,6 +1,5 @@
 """Cross-run ExactSubstr span-hash store — the persisted index behind
-``duplicated_span_removal_incremental``, on the same crash-safe core
-as the near-dedup / media / inverted-index stores.
+``duplicated_span_removal_incremental``.
 
 A corpus ingested in daily increments needs substring dedup against
 EVERYTHING seen so far, at O(increment) cost: each increment's spans
@@ -11,36 +10,23 @@ corpus text is never re-read.
 Layout (one tree per collection)::
 
     <root>/<collection>/meta.json              pinned span/text params
-    <root>/<collection>/spans/batch=<token>/   (h bigint, src_token)
-    <root>/<collection>/spans/_absorbed.json   post-consolidation
-                                               retry exclusion record
+    <root>/<collection>/spans/batch=<token>/   (h bigint, src_token, multi)
+    <root>/<collection>/spans/_absorbed.json   folded batch tokens
 
-Batch identity is the family's content token
-(``bandstore_core.digest_batch_token`` over the md5 text digest):
-retries of an increment map to the same token, overwrite their own
-partition, and exclude it from their history probe — idempotent
-replay. ``consolidate`` folds every batch into ``batch=c0`` (one row
-per distinct hash, ``src_token`` = min contributing token) through
-the audited ``replace_dir`` swap, recording absorbed tokens via the
-shared sidecar so an absorbed batch's retry still replays instead of
-re-appending.
-
-Post-consolidation retry exclusion is EXACT (no min-src_token
-ambiguity): ``batch=c0`` rows carry ``multi`` — true iff the hash
-was contributed by >= 2 distinct batches. A replaying batch excludes
+Pin, batch token, the whole-tree fold to ``batch=c0`` with its
+absorbed-token record, and swap recovery are the shared lifecycle in
+``plans/bandstore_core.py``. The fold keeps one row per distinct hash
+with ``src_token`` = min contributing token and ``multi`` — true iff
+the hash came from >= 2 distinct batches. That makes the
+post-consolidation retry exclusion EXACT: a replaying batch excludes
 only hashes whose sole contributor is itself (``src_token == own AND
-NOT multi``); a multi-contributor hash is genuinely historical for
-any single batch and stays in its history view.
-
-At warehouse scale this tree is a catalog table and ``consolidate``
-an OPTIMIZE/MERGE maintenance job, same as the sibling stores.
+NOT multi``); a multi-contributor hash is genuinely historical for any
+single batch and stays in its history view.
 """
 
 from __future__ import annotations
 
-import json
 import os
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,9 +35,10 @@ from mongo2pq_spark.plans.bandstore_core import (
     absorbed_tokens,
     data_partition_dirs,
     digest_batch_token,
-    record_absorbed,
+    fold_tree,
+    pin_meta,
+    read_pin,
     recover_replace,
-    replace_dir,
 )
 
 
@@ -63,55 +50,23 @@ class SpanHashStore:
         text_col: str = "text",
         span_words: int = 8,
     ) -> None:
-        root_str = str(root)
-        if "://" in root_str:
-            raise ValueError(
-                "--substring-store must be a driver-visible local "
-                f"directory, got {root_str!r}; remote object-store "
-                "backends need the catalog-table variant of this "
-                "layout (see module docstring)"
-            )
-        self.dir = Path(root) / collection
         self.text_col = text_col
         self.span_words = span_words
-        self._check_meta()
+        # layout 2: span hashes are the 60-bit hash64 (destructive
+        # removal must not key on 32 bits). A layout-1 store persisted
+        # 32-bit hashes that 60-bit spans would silently never match,
+        # so the pin makes it fail loud; rebuild it from corpus text.
+        self.dir = pin_meta(
+            os.path.join(root, collection),
+            {
+                "layout": 2,
+                "span_hash": "md5-60bit",
+                "text_col": text_col,
+                "span_words": span_words,
+            },
+            "span store",
+        )
         recover_replace(self.dir / "spans")
-
-    def _check_meta(self) -> None:
-        meta_path = self.dir / "meta.json"
-        # layout 2: span hashes are the 60-bit hash64 (ADVICE r12 —
-        # destructive removal must not key on 32 bits). A layout-1
-        # store persisted 32-bit hashes: probing it with 60-bit spans
-        # would silently never match, so the drift check below makes
-        # it fail loud instead; rebuild the store from corpus text.
-        pinned = {
-            "layout": 2,
-            "span_hash": "md5-60bit",
-            "text_col": self.text_col,
-            "span_words": self.span_words,
-        }
-        if meta_path.is_file():
-            with open(meta_path) as fh:
-                stored = json.load(fh)
-            drift = {
-                k: (stored.get(k), v)
-                for k, v in pinned.items()
-                if stored.get(k) != v
-            }
-            if drift:
-                raise ValueError(
-                    f"span store {self.dir} was created with different "
-                    f"parameters: {drift} — span hashes are only "
-                    "comparable within one parameterization; use a "
-                    "fresh store directory"
-                )
-        else:
-            self.dir.mkdir(parents=True, exist_ok=True)
-            from mongo2pq_spark.plans.bandstore_core import (
-                atomic_write_json,
-            )
-
-            atomic_write_json(meta_path, pinned)
 
     def _token(self, df: DataFrame) -> str:
         return digest_batch_token(df, F.md5(F.col(self.text_col)))
@@ -178,36 +133,33 @@ class SpanHashStore:
         return result
 
     def consolidate(self, spark: SparkSession) -> None:
-        """Fold every batch partition into one ``batch=c0`` (one row
-        per distinct hash) through the audited crash-safe swap —
-        bounding a year of daily increments to the size of the
-        distinct span set, with probe answers unchanged."""
-        spans = self.dir / "spans"
-        recover_replace(spans)
-        dirs = data_partition_dirs(spans)
-        if not dirs:
-            return
-        union = spark.read.parquet(*[str(d) for d in dirs])
-        # multi: >= 2 distinct contributing batches, OR already
-        # marked multi by a previous consolidation (re-folding c0
-        # with new batches must not lose the flag)
-        folded = union.groupBy("h").agg(
-            F.min("src_token").alias("src_token"),
-            (
-                (F.count_distinct("src_token") > 1)
-                | (F.max(F.col("multi").cast("int")) == 1)
-            ).alias("multi"),
-        )
-        absorbed = absorbed_tokens(spans) | {
-            d.name.split("=", 1)[1]
-            for d in dirs
-            if d.name != "batch=c0"
-        }
+        """Fold every batch into one ``batch=c0`` (one row per distinct
+        hash; ``bandstore_core.fold_tree``) — bounding a year of daily
+        increments to the size of the distinct span set, with probe
+        answers unchanged."""
 
-        def writer(build_path: str) -> None:
-            folded.write.mode("overwrite").parquet(
-                os.path.join(build_path, "batch=c0")
-            )
-            record_absorbed(build_path, absorbed)
+        def write(sources: list[str], c0: str) -> None:
+            # multi: >= 2 distinct contributing batches, OR already
+            # marked multi by a previous fold (re-folding c0 with new
+            # batches must not lose the flag)
+            spark.read.parquet(*sources).groupBy("h").agg(
+                F.min("src_token").alias("src_token"),
+                (
+                    (F.count_distinct("src_token") > 1)
+                    | (F.max(F.col("multi").cast("int")) == 1)
+                ).alias("multi"),
+            ).write.mode("overwrite").parquet(c0)
 
-        replace_dir(spans, writer)
+        fold_tree(self.dir / "spans", write)
+
+
+def open_store(root: str | os.PathLike, collection: str) -> SpanHashStore:
+    """Open an EXISTING store tree with the parameters pinned in its
+    meta.json (maintenance entry point)."""
+    pinned = read_pin(os.path.join(root, collection))
+    return SpanHashStore(
+        root,
+        collection,
+        text_col=pinned["text_col"],
+        span_words=pinned["span_words"],
+    )

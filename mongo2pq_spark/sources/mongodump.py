@@ -249,7 +249,9 @@ class MongoDumpDataSource(DataSource):
 
 def register_mongodump_source(spark) -> None:
     """Idempotently register the mongodump Python data source."""
-    spark.dataSource.register(MongoDumpDataSource)
+    from mongo2pq_spark.sources.registry import register_python_source
+
+    register_python_source(spark, MongoDumpDataSource)
 
 
 def read_mongodump(

@@ -47,6 +47,32 @@ def read_table(spark: SparkSession, path: str | Path, fmt: str | None = None) ->
     raise ValueError(f"unsupported source format {fmt!r}")
 
 
+def register_python_source(spark: SparkSession, source: type) -> None:
+    """Register a Python data source class on ``spark``, idempotently.
+
+    Sessions of one context (``spark.newSession()``) keep separate
+    source registries, but Spark checks a new name against the ACTIVE
+    session's: registering in a second session a name its parent holds
+    raises ``DATA_SOURCE_ALREADY_EXISTS`` while the name stays
+    unresolvable there. So a name the session already holds is kept,
+    and a new one is registered with the session made active."""
+    jsession = spark._jsparkSession
+    if jsession.sessionState().dataSourceManager().dataSourceExists(
+        source.name()
+    ):
+        return
+    jvm_sessions = spark.sparkContext._jvm.org.apache.spark.sql.SparkSession
+    active = jvm_sessions.getActiveSession()
+    jvm_sessions.setActiveSession(jsession)
+    try:
+        spark.dataSource.register(source)
+    finally:
+        if active.isDefined():
+            jvm_sessions.setActiveSession(active.get())
+        else:
+            jvm_sessions.clearActiveSession()
+
+
 def read_sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one of the driver-generated testdata tables, normalizing
     parquet timestamps to plain TIMESTAMP.

@@ -343,9 +343,10 @@ def register_tarshards_sink(spark) -> None:
     INSIDE Python workers, which only find this module by accident
     (cwd == repo root) without the explicit addPyFile."""
     from mongo2pq_spark.deploy import ensure_shipped
+    from mongo2pq_spark.sources.registry import register_python_source
 
     ensure_shipped(spark)
-    spark.dataSource.register(TarShardsDataSource)
+    register_python_source(spark, TarShardsDataSource)
 
 
 register_tarshards = register_tarshards_sink

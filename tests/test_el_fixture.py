@@ -709,6 +709,29 @@ def test_near_dedup_store_guards(tmp_path, capsys):
     assert "partially-committed batches" in capsys.readouterr().err
 
 
+def test_media_store_guards(tmp_path, capsys):
+    """The media stores share the near-dedup store's guards: a
+    meta-less non-empty directory is refused, and a batch with store
+    data but no completion marker (crash inside commit) warns on the
+    next open."""
+    from mongo2pq_spark.plans.mediadedup_store import ImageDedupStore
+
+    root = tmp_path / "store"
+    legacy = root / "legacy"
+    legacy.mkdir(parents=True)
+    (legacy / "old_index.parquet").write_bytes(b"")
+    with pytest.raises(ValueError, match="meta.json"):
+        ImageDedupStore(root, "legacy")
+
+    ImageDedupStore(root, "c")  # creates meta
+    part = root / "c" / "fps" / "batch=9_9_9"
+    part.mkdir(parents=True)
+    (part / "part-0.parquet").write_bytes(b"")
+    capsys.readouterr()
+    ImageDedupStore(root, "c")
+    assert "partially-committed batches ['9_9_9']" in capsys.readouterr().err
+
+
 def test_near_dedup_store_consolidation(spark, sf_dir, tmp_path):
     """consolidate() merges completed batches into one batch=c0 per
     tree without changing any future dedup decision, and a retry of an

@@ -16,6 +16,11 @@ CI instead of waiting for the next judge pass:
    ``os.path.join(tempfile.gettempdir(), ...)`` composition is not
    expressible outside staging.py once (1) holds — documented here
    for the next reader, no extra scan needed.
+4. The persisted stores' lifecycle lives only in
+   ``plans/bandstore_core.py``: the absorbed-token record is written
+   and composed there, and so is every store's parameter pin — the
+   copies of these steps had drifted into a data-loss bug before
+   they were folded into one.
 """
 
 from __future__ import annotations
@@ -57,3 +62,26 @@ def test_no_row_at_a_time_python_udf():
             if pat.search(line) and "pandas_udf" not in line and not line.lstrip().startswith("#"):
                 offenders.append(f"{rel}:{i}: {line.strip()}")
     assert offenders == [], f"row-at-a-time UDF registrations: {offenders}"
+
+
+def test_store_lifecycle_only_in_bandstore_core():
+    core = os.path.join("plans", "bandstore_core.py")
+    json_write = re.compile(r"\bjson\.dump\(|\batomic_write_json\(")
+    pin_name = re.compile(r"meta\.json|_STORE_META")
+    offenders = []
+    for rel, src in _py_sources():
+        if rel == core:
+            continue
+        if json_write.search(src) and pin_name.search(src):
+            offenders.append(f"{rel}: writes a store meta pin")
+        for i, line in enumerate(src.split("\n"), 1):
+            if "record_absorbed(" in line or "atomic_write_json(" in line:
+                offenders.append(f"{rel}:{i}: {line.strip()}")
+            # the only use allowed outside the core is the read-side
+            # retry check: `token in absorbed_tokens(root)`
+            if re.search(r"(?<!\bin )\babsorbed_tokens\(", line):
+                offenders.append(f"{rel}:{i}: {line.strip()}")
+    assert offenders == [], (
+        f"store lifecycle steps outside plans/bandstore_core.py: {offenders}"
+        " — use pin_meta / consolidate_tree / fold_tree"
+    )

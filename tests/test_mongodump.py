@@ -587,3 +587,30 @@ def test_mongodump_writer_struct_and_unsupported_types(spark, tmp_path):
         wrap_extended_json(date(2024, 1, 2))
     with pytest.raises(TypeError, match="Decimal"):
         wrap_extended_json(Decimal("1.5"))
+
+
+def test_sources_register_from_a_second_session(spark, dump_path, tmp_path):
+    """Sessions of one context keep separate source registries, yet
+    Spark checks a new name against the active session's: both
+    Python sources must register (and resolve) from
+    ``spark.newSession()`` after the first session registered them."""
+    from mongo2pq_spark.sources.mongodump import register_mongodump_source
+    from mongo2pq_spark.sources.tarshards import register_tarshards_sink
+
+    register_mongodump_source(spark)
+    register_tarshards_sink(spark)
+    second = spark.newSession()
+    register_mongodump_source(second)
+    register_tarshards_sink(second)
+    register_mongodump_source(second)  # idempotent within a session
+
+    names = {r["name"] for r in read_mongodump(second, dump_path).collect()}
+    assert names == {"alpha", "beta"}
+    out = str(tmp_path / "shards")
+    second.createDataFrame(
+        [("a.txt", b"x")], "name string, payload binary"
+    ).write.format("tarshards").mode("overwrite").save(out)
+    back = second.read.format("tarshards").load(out).collect()
+    assert [(r["name"], bytes(r["payload"])) for r in back] == [
+        ("a.txt", b"x")
+    ]

@@ -3351,6 +3351,43 @@ def test_inverted_index_absorbed_batch_retry_excluded(spark, tmp_path):
     ) == want
 
 
+def test_inverted_index_crashed_batch_retry_after_consolidation(
+    spark, tmp_path
+):
+    """A batch whose write crashed (its directory holds only Spark's
+    ``_temporary`` droppings) must not be recorded as absorbed by a
+    consolidation: its retry has to land, or the batch's terms are
+    lost for good."""
+    from mongo2pq_spark.operators.text import (
+        consolidate_inverted_index,
+        query_postings,
+        write_inverted_index,
+    )
+
+    store = tmp_path / "idx"
+    d1 = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "beta")], "doc_id bigint, text string"
+    )
+    write_inverted_index(d1, str(store), batch_token="b1")
+    crashed = store / "batch=b2" / "_temporary" / "0" / "_temporary"
+    crashed.mkdir(parents=True)
+    (crashed / "part-00000.parquet").write_bytes(b"")
+    consolidate_inverted_index(spark, str(store))
+
+    d2 = spark.createDataFrame(
+        [(3, "gamma delta"), (4, "alpha gamma")], "doc_id bigint, text string"
+    )
+    write_inverted_index(d2, str(store), batch_token="b2")
+    got = sorted(
+        (r["term"], r["doc_id"], r["tf"])
+        for r in query_postings(spark, str(store)).collect()
+    )
+    assert got == [
+        ("alpha", 1, 1), ("alpha", 4, 1), ("beta", 1, 1), ("beta", 2, 1),
+        ("delta", 3, 1), ("gamma", 3, 1), ("gamma", 4, 1),
+    ]
+
+
 def test_hybrid_rrf_fusion_semantics(spark):
     """RRF fusion on a hand-built corpus: a candidate surfaced by BOTH
     sides outranks equally-placed one-sided candidates; one-sided
@@ -6110,6 +6147,22 @@ def test_span_hash_store_lifecycle(spark, tmp_path):
         SpanHashStore(tmp_path / "st", "docs", span_words=12)
 
 
+def test_span_hash_store_refuses_unpinned_directory(tmp_path):
+    """A populated directory without a meta pin is not this store's
+    layout: initializing over it would probe against nothing and
+    discard the accumulated history, so the store refuses it."""
+    import pytest
+
+    from mongo2pq_spark.plans.spanstore import SpanHashStore
+
+    legacy = tmp_path / "st" / "docs"
+    (legacy / "spans").mkdir(parents=True)
+    (legacy / "spans" / "old.parquet").write_bytes(b"")
+    with pytest.raises(ValueError, match="meta.json"):
+        SpanHashStore(tmp_path / "st", "docs")
+    assert not (legacy / "meta.json").exists()
+
+
 def test_drop_exact_duplicates_passes_null_text_through(spark):
     """NULL-text rows must survive exact dedup untouched (r12 fix:
     the digest-equality semi-join silently dropped every such row),
@@ -6910,6 +6963,44 @@ def test_compact_nb_store_equality_and_retry_exclusion(spark, tmp_path):
     tc = os.path.join(store, "term_counts")
     os.rename(tc, os.path.join(store, "_term_counts.swapin"))
     assert snap(load_nb_model(spark, store, "lang")) == expect
+
+
+def test_compact_nb_store_crashed_batch_retry(spark, tmp_path):
+    """A batch that crashed while writing ``term_counts`` (only Spark's
+    ``_temporary`` droppings, no ``doc_counts``) must not be recorded
+    as absorbed by compaction: its retry has to ingest, or its counts
+    are lost for good."""
+    from mongo2pq_spark.operators.classifier import (
+        compact_nb_store,
+        ingest_nb_counts,
+        load_nb_model,
+        nb_train,
+    )
+
+    ddl = "doc_id long, text string, label string"
+    a = spark.createDataFrame(
+        [(1, "spam buy now", "spam"), (2, "hello dear friend", "ham")], ddl
+    )
+    b = spark.createDataFrame(
+        [(3, "cheap spam deal", "spam"), (4, "meeting agenda", "promo")],
+        ddl,
+    )
+    store = tmp_path / "nbstore"
+    ingest_nb_counts(a, str(store), "gen_a", "label")
+    crashed = store / "term_counts" / "batch=gen_b" / "_temporary" / "0"
+    crashed.mkdir(parents=True)
+    (crashed / "part-00000.parquet").write_bytes(b"")
+    compact_nb_store(spark, str(store))
+
+    assert ingest_nb_counts(b, str(store), "gen_b", "label") == "ingested"
+    model_s, priors_s = load_nb_model(spark, str(store), "label")
+    model_t, priors_t = nb_train(a.unionByName(b), "label")
+
+    def snap(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert snap(model_s) == snap(model_t)
+    assert snap(priors_s) == snap(priors_t)
 
 
 def test_nb_store_additive_composition_property(spark, tmp_path):

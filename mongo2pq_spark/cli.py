@@ -185,9 +185,8 @@ def main(
 
     try:
         readers = _collection_readers(
-            spark, uri, db, collections,
-            source_format=source_format, on_nested=on_nested,
-            split_size=split_size,
+            spark, uri, db, collections, source_format, on_nested,
+            split_size, samples,
         )
     except ConnectionError as err:
         print(f"Error: could not connect to source: {err}", file=sys.stderr)
@@ -231,7 +230,7 @@ def main(
 
             parts = []
             for nm in readers:
-                d = readers[nm]()
+                d, _ = readers[nm]()
                 if bpe_text_col in d.columns:
                     parts.append(
                         d.select(F.col(bpe_text_col).alias("text"))
@@ -326,7 +325,7 @@ def main(
             if nb_label_col:
                 folded = 0
                 for nm in readers:
-                    d = readers[nm]()
+                    d, _ = readers[nm]()
                     if (
                         nb_label_col in d.columns
                         and nb_text_col in d.columns
@@ -415,8 +414,7 @@ def main(
     def _process_collection(name: str) -> None:
         """Both phases for one collection (the parallel unit): schema
         (load-or-infer, dump, config rewrite) then extract-load."""
-        read = readers[name]
-        df = read()
+        df, source_fields = readers[name]()
         schema = None
         if schema_path := schema_files.get(name):
             try:
@@ -428,7 +426,11 @@ def main(
                 )
         dump_inferred = schema is None
         if schema is None:
-            if use_source_types:
+            if source_fields is not None:
+                # the mongodump reader's one inference is the schema,
+                # whatever --use-source-types says
+                schema = Schema(name, source_fields)
+            elif use_source_types:
                 schema = Schema.from_df(name, df)
             else:
                 schema = Schema(name, infer_schema_from_df(df, samples=samples))
@@ -740,7 +742,7 @@ def main(
                                 file=sys.stderr,
                             )
                             continue
-                        rr["dim_df"] = readers[dim_name]()
+                        rr["dim_df"], _ = readers[dim_name]()
                         rr.setdefault("dim_col", rr["col"])
                     rules.append(rr)
                 if rules:
@@ -965,18 +967,22 @@ def _collection_readers(
     uri: str,
     db: str | None,
     collections: list[str] | None,
-    source_format: str = "auto",
-    on_nested: str = "skip",
-    split_size: int = 128 * 1024 * 1024,
+    source_format: str,
+    on_nested: str,
+    split_size: int,
+    samples: int,
 ):
-    """name → zero-arg DataFrame factory for each collection.
+    """name → zero-arg factory of ``(DataFrame, fields)`` for each
+    collection; ``fields`` is the inferred field map when the read
+    inferred one, else None.
 
     ``source_format="mongodump"`` routes file: JSON-lines through the
-    extended-JSON dump reader (``read_mongodump``): $oid/$date/
-    $numberLong wrappers unwrap per the reference's BSON decode rules
-    instead of surfacing as nested structs, with subdocuments handled
-    per ``on_nested`` (skip / raise / flatten to dotted-path columns).
-    ``auto`` keeps the plain per-suffix readers."""
+    extended-JSON dump reader (``read_mongodump_fields``, its peek
+    sized by ``samples``): $oid/$date/$numberLong wrappers unwrap per
+    the reference's BSON decode rules instead of surfacing as nested
+    structs, with subdocuments handled per ``on_nested`` (skip / raise
+    / flatten to dotted-path columns). ``auto`` keeps the plain
+    per-suffix readers."""
     if uri.startswith("file:"):
         root = Path(uri.removeprefix("file:"))
         if db:
@@ -1031,7 +1037,7 @@ def _collection_readers(
                 )
 
             return {
-                name: (lambda p=path: _read_media(p))
+                name: (lambda p=path: (_read_media(p), None))
                 for name, path in media.items()
             }
         found = {
@@ -1042,20 +1048,23 @@ def _collection_readers(
         if collections:
             found = {n: p for n, p in found.items() if n in collections}
         if source_format == "mongodump":
-            from mongo2pq_spark.sources.mongodump import read_mongodump
+            from mongo2pq_spark.sources.mongodump import read_mongodump_fields
 
             return {
                 name: (
-                    lambda p=path: read_mongodump(
-                        spark, str(p), on_nested=on_nested,
-                        split_size=split_size,
+                    lambda p=path: read_mongodump_fields(
+                        spark, str(p), samples, on_nested, "failfast",
+                        split_size,
                     )
                 )
                 for name, path in found.items()
             }
         from mongo2pq_spark.sources.registry import read_table
 
-        return {name: (lambda p=path: read_table(spark, p)) for name, path in found.items()}
+        return {
+            name: (lambda p=path: (read_table(spark, p), None))
+            for name, path in found.items()
+        }
 
     from mongo2pq_spark.sources.mongo import list_collections, read_collection
 
@@ -1066,7 +1075,8 @@ def _collection_readers(
     if collections:
         names = [n for n in names if n in collections]
     return {
-        name: (lambda n=name: read_collection(spark, uri, db_name, n)) for name in names
+        name: (lambda n=name: (read_collection(spark, uri, db_name, n), None))
+        for name in names
     }
 
 
@@ -1083,7 +1093,8 @@ def parse_args(argv: list[str] | None = None) -> Namespace | None:
     )
     parser.add_argument("-o", "--outdir", default="./", type=Path)
     parser.add_argument("-s", "--samples", type=int, default=20_000,
-                        help="sample size for schema inference")
+                        help="sample size for schema inference (on a "
+                             "mongodump source: documents peeked)")
     parser.add_argument("-d", "--db", help="database (default: first found)")
     parser.add_argument("-c", "--collections", nargs="*")
     parser.add_argument("-p", "--partition", help="hive partition key")
@@ -1330,7 +1341,7 @@ def parse_args(argv: list[str] | None = None) -> Namespace | None:
     parser.add_argument("--use-source-types", action="store_true",
                         help="trust the source's existing types instead of "
                              "value-based sampling inference (no int narrowing; "
-                             "for already-typed parquet sources)")
+                             "for already-typed parquet; no effect on mongodump)")
 
     parsed = parser.parse_args(argv)
     if not parsed.uri:

@@ -513,6 +513,34 @@ def _nb_check_meta(
     )
 
 
+def _nb_trees(store_dir: str) -> list:
+    """The store's two count trees, each rolled forward or back from an
+    interrupted compaction swap, so a read never sees a missing root
+    and a write never lands next to a half-swapped tree."""
+    from pathlib import Path
+
+    from mongo2pq_spark.plans.bandstore_core import recover_replace
+
+    trees = [Path(store_dir) / "term_counts", Path(store_dir) / "doc_counts"]
+    for tree in trees:
+        recover_replace(tree)
+    return trees
+
+
+def _nb_refuse_torn(store_dir: str) -> None:
+    """Refuse a store whose ingest stopped between its ``term_counts``
+    and ``doc_counts`` writes: the priors of such a store load silently
+    wrong. Re-running the torn batch's ingest repairs it."""
+    from mongo2pq_spark.plans.bandstore_core import torn_batches
+
+    if torn := torn_batches(_nb_trees(store_dir)):
+        raise ValueError(
+            f"nb count store {store_dir}: batches {torn} hold counts in "
+            "only one of term_counts/doc_counts (an ingest stopped "
+            "between its two writes); re-run their ingest"
+        )
+
+
 def nb_count_tables(
     docs: DataFrame,
     label_col: str,
@@ -577,12 +605,8 @@ def ingest_nb_counts(
     counts live inside ``c0``) so the globs cannot un-absorb history;
     that boundary is the caller's to surface."""
     import shutil
-    from pathlib import Path
 
-    from mongo2pq_spark.plans.bandstore_core import (
-        absorbed_tokens,
-        recover_replace,
-    )
+    from mongo2pq_spark.plans.bandstore_core import absorbed_tokens
 
     if not _nb_batch_id_ok(batch_id):
         raise ValueError(f"bad nb store batch id: {batch_id!r}")
@@ -592,14 +616,9 @@ def ingest_nb_counts(
             "compact_nb_store's consolidated partition"
         )
     _nb_check_meta(store_dir, label_col, hash_buckets)
-    trees = [
-        Path(store_dir) / "term_counts",
-        Path(store_dir) / "doc_counts",
-    ]
-    for tree in trees:
-        # roll forward/back any interrupted compaction BEFORE writing
-        # next to it (the inverted-index store's rule)
-        recover_replace(tree)
+    # roll forward/back any interrupted compaction BEFORE writing next
+    # to it (the inverted-index store's rule)
+    trees = _nb_trees(store_dir)
     if any(batch_id in absorbed_tokens(t) for t in trees):
         # the union guards the crash window between the two tree
         # swaps: if EITHER tree absorbed this batch, re-writing it
@@ -636,16 +655,11 @@ def load_nb_model(
     is untouched. Value-identical to nb_train on the union of all
     ingested batches BY CONSTRUCTION (NB statistics are additive; the
     oracle-backed classifier_nb_incremental query proves it
-    value-exact). Config is validated against the store's meta pin."""
-    from pathlib import Path
-
-    from mongo2pq_spark.plans.bandstore_core import recover_replace
-
+    value-exact). Config is validated against the store's meta pin;
+    a torn store (a batch in only one of the two trees) raises
+    ``ValueError``."""
     _nb_check_meta(store_dir, label_col, hash_buckets)
-    # an interrupted compaction may have the tree renamed aside —
-    # roll it forward/back so the read never sees a missing root
-    recover_replace(Path(store_dir) / "term_counts")
-    recover_replace(Path(store_dir) / "doc_counts")
+    _nb_refuse_torn(store_dir)
     # deliberately NOT routed through cache_stream: store directories
     # MUTATE between loads (a re-taught batch overwrites its own part
     # files), and the plan-keyed cache would serve the previous
@@ -680,9 +694,11 @@ def compact_nb_store(spark, store_dir: str) -> None:
     record); a crash BETWEEN the two tree swaps is harmless because
     each tree's sums are independently preserved. Ingest after
     compaction keeps its O(increment) shape: new batches land NEXT to
-    ``c0``."""
+    ``c0``. A torn store raises ``ValueError`` before anything is
+    folded (see ``_nb_refuse_torn``)."""
     from mongo2pq_spark.plans.bandstore_core import fold_tree
 
+    _nb_refuse_torn(store_dir)
     for tree, keys, agg in (
         ("term_counts", ["label", "term"], F.sum("c").alias("c")),
         ("doc_counts", ["label"], F.sum("n_docs").alias("n_docs")),

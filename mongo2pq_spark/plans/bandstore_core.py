@@ -28,7 +28,10 @@ lifecycle step below lives here:
 3. **Commit + done marker** (``RunLog``). A batch's store rows are
    written only after the EL write succeeded, then ``runs/<token>.done``
    lands. Data without a marker is a crash inside the commit: the
-   reopen audit warns, and re-running the same input finishes it.
+   reopen audit warns, and re-running the same input finishes it. The
+   NB store has no marker; it writes each batch into two trees, and
+   ``torn_batches`` finds a batch that reached only one of them, which
+   its load and fold refuse until the batch is re-ingested.
 4. **Consolidate or fold** (bounding one partition per run).
    ``consolidate_tree`` merges every COMPLETED batch of one tree into
    ``batch=c0``; rows carry their origin token (``src_token``), so the
@@ -129,11 +132,8 @@ def pin_meta(
             "parameter change are silently wrong, use a fresh store "
             "directory"
         )
-    partial = {
-        p.name.removeprefix("batch=")
-        for tree in audit
-        for p in data_partition_dirs(store / tree)
-    } - RunLog(store / "runs").done_tokens() - {"c0"}
+    partial = set().union(*(batch_tokens(store / t) for t in audit))
+    partial -= RunLog(store / "runs").done_tokens()
     if partial:
         print(
             f"WARNING: {what} {store} has partially-committed batches "
@@ -156,6 +156,17 @@ def absorbed_tokens(root: Path | str) -> set[str]:
         return set()
     with open(p) as fh:
         return set(json.load(fh))
+
+
+def torn_batches(roots: list[Path]) -> list[str]:
+    """Batches of a store that writes each batch into several trees,
+    one after the other, that hold data in one tree but are neither
+    present in nor absorbed into another: a write that stopped between
+    the trees. A crash between the trees' fold swaps is not torn, as
+    the folded tree records the batch as absorbed."""
+    held = [batch_tokens(r) for r in roots]
+    known = [h | absorbed_tokens(r) for h, r in zip(held, roots)]
+    return sorted(set().union(*held) - set.intersection(*known))
 
 
 def record_absorbed(root: Path | str, tokens: set[str]) -> None:
@@ -206,6 +217,13 @@ def data_partition_dirs(
         for p in sorted(base.glob(f"{prefix}*"))
         if p.name != exclude and any(p.glob("*.parquet"))
     ]
+
+
+def batch_tokens(root: Path) -> set[str]:
+    """Tokens of the ``data_partition_dirs`` under ``root``, the folded
+    ``batch=c0`` aside."""
+    dirs = data_partition_dirs(Path(root))
+    return {p.name.removeprefix("batch=") for p in dirs} - {"c0"}
 
 
 def aux_path(target: Path, kind: str) -> Path:

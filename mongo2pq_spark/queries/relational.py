@@ -508,7 +508,8 @@ def el_mongodump_scan(spark, sf_dir):
             F.col("event_type"),
             F.col("value"),
             # raw epoch seconds (no wrapper): exercises the ±5-year
-            # heuristic + DOUBLE-read + timestamp_seconds delivery
+            # heuristic; read as long, cast to timestamp in the one
+            # Schema.apply projection
             F.unix_timestamp("ts").alias("created"),
             # nested subdocument: dropped by on_nested='skip'
             F.struct(

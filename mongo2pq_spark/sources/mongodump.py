@@ -39,6 +39,7 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
+from pyspark.sql.types import StringType
 
 
 def unwrap_extended_json(value):
@@ -132,9 +133,22 @@ class _DumpFilePartition(InputPartition):
         self.end = end
 
 
+def _dump_files(path: str) -> list[str]:
+    """The files of a dump: ``path`` itself, or the sorted entries of
+    the directory ``path`` that are not hidden (``.``) or markers
+    (``_SUCCESS``, ``_tmp-*``). The driver-side sample and the
+    distributed read both list through here, so they see one dump."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if not f.startswith(("_", "."))
+    )
+
+
 class MongoDumpReader(DataSourceReader):
     def __init__(self, schema, options):
-        self._fields = [f.name for f in schema.fields]
         self._path = options.get("path")
         # failfast (default): a malformed line kills the read WITH
         # file + byte-offset context; permissive: skip malformed lines
@@ -148,12 +162,11 @@ class MongoDumpReader(DataSourceReader):
             raise ValueError("mongodump source requires a 'path' option")
         # dotted-path subdocument flattening (on_nested="flatten")
         self._flatten = options.get("flatten", "false").lower() == "true"
-        # fields read as DOUBLE epoch seconds (the ±5-year heuristic):
-        # a document carrying a $date wrapper for such a field (mixed
-        # raw-number / wrapper representation) unwraps to a datetime —
-        # the reader converts it so one consistent type reaches Spark
-        epoch = options.get("epochfields", "")
-        self._epoch_fields = frozenset(f for f in epoch.split(",") if f)
+        # (name, read as string): a string column takes any scalar
+        # as its text, so a field mixing representations still reads
+        self._columns = [
+            (f.name, isinstance(f.dataType, StringType)) for f in schema.fields
+        ]
         # intra-file parallelism: files larger than splitsize bytes are
         # read as multiple byte-range partitions (the newline-delimited
         # split protocol Spark's own text source uses) — without it a
@@ -162,16 +175,8 @@ class MongoDumpReader(DataSourceReader):
         self._split_size = int(options.get("splitsize", 128 * 1024 * 1024))
 
     def partitions(self):
-        if os.path.isdir(self._path):
-            files = sorted(
-                os.path.join(self._path, f)
-                for f in os.listdir(self._path)
-                if not f.startswith(("_", "."))
-            )
-        else:
-            files = [self._path]
         parts: list[_DumpFilePartition] = []
-        for p in files:
+        for p in _dump_files(self._path):
             size = os.path.getsize(p)
             if self._split_size <= 0 or size <= self._split_size:
                 parts.append(_DumpFilePartition(p, 0, None))
@@ -217,17 +222,15 @@ class MongoDumpReader(DataSourceReader):
                         f"byte {line_start}: {exc}"
                     ) from exc
                 yield tuple(
-                    self._field_value(doc, name) for name in self._fields
+                    _field_value(doc.get(name), as_str)
+                    for name, as_str in self._columns
                 )
 
-    def _field_value(self, doc: dict, name: str):
-        value = doc.get(name)
-        if name in self._epoch_fields and isinstance(value, datetime):
-            # unwrap produces naive-UTC datetimes; deliver epoch
-            # seconds (float keeps sub-second fidelity) for fields the
-            # heuristic typed from raw numbers
-            return value.replace(tzinfo=timezone.utc).timestamp()
+
+def _field_value(value, as_str: bool):
+    if not as_str or value is None or isinstance(value, str):
         return value
+    return value.isoformat() if isinstance(value, datetime) else str(value)
 
 
 class MongoDumpDataSource(DataSource):
@@ -262,27 +265,33 @@ def read_mongodump(
     mode: str = "failfast",
     split_size: int = 128 * 1024 * 1024,
 ):
-    """Read an extended-JSON dump with the engine's OWN schema
-    inference: peek up to ``sample_lines`` unwrapped documents
-    driver-side (the dump analog of the reference's ``$sample`` phase,
-    /root/reference/mongo2pq/schema.py:219-239 — a bounded read, not a
-    full pass), fold them through the inference lattice, then read the
-    whole dump distributed through the ``mongodump`` source under the
-    inferred schema.
+    """Read an extended-JSON dump as a typed DataFrame, with the
+    engine's OWN schema inference: one sample, one inference, one cast.
 
-    Epoch delivery: a field the heuristic types ``timestamp[s]`` from
-    RAW NUMBERS (not ``$date`` wrappers — those unwrap to datetimes)
-    arrives from the reader as int/float epoch seconds, so its READ
-    schema is DOUBLE and the timestamp materializes via
-    ``timestamp_seconds`` in the scan-output projection (the reference
-    does the same two-step: int/float passthrough into an Arrow
-    ``timestamp[s]`` column, schema.py:142-150).
+    1. **One sample.** Peek up to ``sample_lines`` unwrapped documents
+       driver-side: the dump analog of the reference's ``$sample``
+       phase (``schema.py:219-239``), a bounded read, not a full pass.
+    2. **One inference** over those rows gives two schemas:
 
-    A field mixing raw-number and ``$date``-wrapper representations is
-    typed from ALL sampled values: any raw-number occurrence forces
-    the DOUBLE path, and the reader converts wrapper-decoded datetimes
-    of that field to epoch seconds so one consistent type reaches the
-    scan (first-value-only sampling used to mistype such fields).
+       - the *typed* fields, by the reference's rules
+         (``infer_fields_from_rows``). A field whose sampled values are
+         raw epoch numbers, possibly mixed with ``$date`` wrappers, is
+         ``timestamp[s]``: both mean "point in time", and the unify
+         lattice alone would degrade the mix to string.
+       - the *read* schema, by each field's JSON-level source type:
+         bool → boolean, int → long, float (or int and float) →
+         double, ``$date`` → timestamp, anything else or a mix →
+         string. For a string column the reader delivers every scalar
+         as text (datetimes in ISO form), so no sampled value can fail
+         the scan.
+    3. **One cast.** ``Schema.apply`` (``schema/model.py``) turns the
+       read types into the typed fields in one Catalyst projection:
+       quoted scalars ("yes", "12", ISO strings) parse, and raw epoch
+       numbers become timestamps, as the reference's
+       ``schema.py:110-164`` casts do per row.
+
+    ``read_mongodump_fields`` returns the typed field map next to the
+    frame; the CLI dumps that map as the collection's schema.
 
     ``on_nested="skip"`` (default) drops subdocument/array fields from
     the schema with a warning so real mongoexports load;
@@ -309,28 +318,32 @@ def read_mongodump(
     without it the file-per-partition layout makes it a 1-task read.
     0 disables splitting.
     """
+    return read_mongodump_fields(
+        spark, path, sample_lines, on_nested, mode, split_size
+    )[0]
+
+
+def read_mongodump_fields(spark, path, sample_lines, on_nested, mode, split_size):
+    """``read_mongodump``'s typed frame and the field map (name → Arrow
+    type) its inference produced. Types such as ``timestamp[s]`` and
+    ``date64`` do not survive a round trip through the frame's Spark
+    types, so the map is handed over rather than re-derived."""
     import pyarrow as pa
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    from pyspark.sql import types as T
 
-    from mongo2pq_spark.schema.inference import infer_fields_from_rows
-    from mongo2pq_spark.schema.types import arrow_to_spark
+    from mongo2pq_spark.schema.inference import (
+        infer_fields_from_rows,
+        is_epoch_timestamp,
+    )
+    from mongo2pq_spark.schema.model import Schema
 
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if not f.startswith(("_", "."))
-        )
-    else:
-        files = [path]
     if on_nested not in ("raise", "skip", "flatten"):
         raise ValueError(
             f"on_nested must be 'raise', 'skip' or 'flatten', got {on_nested!r}"
         )
     flatten = on_nested == "flatten"
     rows = []
-    for fp in files:
+    for fp in _dump_files(path):
         if len(rows) >= sample_lines:
             break
         with open(fp, encoding="utf-8") as fh:
@@ -356,17 +369,6 @@ def read_mongodump(
         rows, on_nested="skip" if flatten else on_nested
     )
 
-    # timestamp[s] fields whose sampled values are raw numbers (the
-    # epoch heuristic) need the DOUBLE read schema + cast. Decided
-    # from ALL sampled values, not the first: a field mixing $date
-    # wrappers (→ datetimes) with raw epoch numbers must take the
-    # DOUBLE path for every row (the reader converts the datetimes to
-    # epoch seconds), or the scan would see two incompatible Python
-    # types. The unify lattice alone would degrade such a mixed field
-    # (timestamp[s] ⊔ date64 → string), so it is forced back to
-    # timestamp[s] here — both representations mean "point in time".
-    from mongo2pq_spark.schema.inference import is_epoch_timestamp
-
     def _is_raw_epoch(v) -> bool:
         return (
             isinstance(v, (int, float))
@@ -374,48 +376,35 @@ def read_mongodump(
             and is_epoch_timestamp(v)
         )
 
-    numeric_epoch: set[str] = set()
+    read_types = {
+        frozenset({bool}): T.BooleanType(),
+        frozenset({int}): T.LongType(),
+        frozenset({float}): T.DoubleType(),
+        frozenset({int, float}): T.DoubleType(),
+        frozenset({datetime}): T.TimestampType(),
+    }
+    read_schema = T.StructType()
     for name in list(fields):
         vals = [r.get(name) for r in rows if r.get(name) is not None]
+        # decided from ALL sampled values, not the first: raw epoch
+        # numbers mixed with $date wrappers are one point-in-time field
         if any(_is_raw_epoch(v) for v in vals) and all(
             _is_raw_epoch(v) or isinstance(v, datetime) for v in vals
         ):
             fields[name] = pa.timestamp("s")
-            numeric_epoch.add(name)
+        kinds = frozenset(map(type, vals))
+        read_schema.add(name, read_types.get(kinds, T.StringType()))
     register_mongodump_source(spark)
-    raw_fields = [
-        StructField(
-            name,
-            DoubleType() if name in numeric_epoch else arrow_to_spark(dtype),
-            True,
-        )
-        for name, dtype in fields.items()
-    ]
-    df = (
+    scan = (
         spark.read.format("mongodump")
-        .schema(StructType(raw_fields))
+        .schema(read_schema)
         .option("path", path)
         .option("mode", mode)
         .option("flatten", "true" if flatten else "false")
-        .option("epochfields", ",".join(sorted(numeric_epoch)))
         .option("splitsize", str(split_size))
         .load()
     )
-    if numeric_epoch:
-        # dotted flattened names need backtick quoting or F.col reads
-        # them as struct navigation
-        def q(c: str):
-            return F.col("`" + c.replace("`", "``") + "`")
-
-        df = df.select(
-            *[
-                F.timestamp_seconds(q(c)).alias(c)
-                if c in numeric_epoch
-                else q(c)
-                for c in df.columns
-            ]
-        )
-    return df
+    return Schema(os.path.basename(path), fields).apply(scan), fields
 
 
 # -- writer: the mongoexport side of the interchange ------------------------

@@ -21,6 +21,11 @@ CI instead of waiting for the next judge pass:
    and composed there, and so is every store's parameter pin — the
    copies of these steps had drifted into a data-loss bug before
    they were folded into one.
+5. The raw-to-typed cast of a source lives only in
+   ``schema/model.py`` (``Schema.apply``): no ``timestamp_seconds(``
+   and no ``epochfields`` reader option under ``sources/`` or
+   ``plans/``. A mongodump read once cast epoch fields on a path of
+   its own, and its types forked from the dumped schema.
 """
 
 from __future__ import annotations
@@ -84,4 +89,17 @@ def test_store_lifecycle_only_in_bandstore_core():
     assert offenders == [], (
         f"store lifecycle steps outside plans/bandstore_core.py: {offenders}"
         " — use pin_meta / consolidate_tree / fold_tree"
+    )
+
+
+def test_source_cast_only_in_schema_apply():
+    offenders = [
+        rel
+        for rel, src in _py_sources()
+        if rel.startswith(("sources" + os.sep, "plans" + os.sep))
+        and ("timestamp_seconds(" in src or "epochfields" in src)
+    ]
+    assert offenders == [], (
+        f"raw-to-typed cast outside schema/model.py: {offenders} — read "
+        "source types and let Schema.apply cast them"
     )

@@ -1,11 +1,14 @@
 """read_mongodump: inference-driven extended-JSON dump ingestion.
 
 Covers the decode surface the reference implements per-row over BSON
-(/root/reference/mongo2pq/schema.py:110-164) plus the two dirty-dump
-paths the fixture-less r5 code never exercised: raw epoch-seconds
-numbers (±5-year heuristic → DOUBLE read schema → timestamp_seconds at
-scan output) and nested subdocuments (reference parity is to FAIL,
-schema.py:331-335; on_nested='skip' drops the field instead).
+(the reference's schema.py:110-164) plus the dirty-dump paths: raw
+epoch-seconds numbers (±5-year heuristic → read as long/double →
+timestamp[s] in the one ``Schema.apply`` cast), quoted scalars ("yes",
+"12", ISO strings → read as string → parsed in that same cast) and
+nested subdocuments (reference parity is to FAIL, schema.py:331-335;
+on_nested='skip' drops the field instead). The CLI tests pin that a
+mongodump collection is sampled once (``--samples`` documents),
+inferred once and that inference is its dumped schema.
 """
 
 import json
@@ -614,3 +617,93 @@ def test_sources_register_from_a_second_session(spark, dump_path, tmp_path):
     assert [(r["name"], bytes(r["payload"])) for r in back] == [
         ("a.txt", b"x")
     ]
+
+
+def _cli_dump(spark, tmp_path, name, docs, **kwargs):
+    """Run ``cli.main`` over one mongodump collection; returns the
+    dumped schema's fields and the written rows."""
+    from mongo2pq_spark.cli import main as cli_main
+    from mongo2pq_spark.schema.yaml_io import load_schema_from_file
+
+    src, out = tmp_path / "src", tmp_path / "out"
+    src.mkdir()
+    (src / f"{name}.jsonl").write_text(
+        "\n".join(json.dumps(d) for d in docs) + "\n"
+    )
+    rc = cli_main(
+        f"file:{src}", outdir=out, source_format="mongodump", spark=spark,
+        **kwargs,
+    )
+    assert rc == 0
+    fields = load_schema_from_file(out / f"{name}.yaml").fields
+    return fields, spark.read.parquet(str(out / f"{name}.parquet")).collect()
+
+
+def test_cli_quoted_scalars_parse_in_the_one_cast(spark, tmp_path):
+    """Fields that only ever hold QUOTED scalars ("yes"/"no", "12", ISO
+    strings) read as strings and parse in the one cast: every row is
+    written, the dumped schema carries the reference's types, and the
+    Parquet values are parsed, not the raw text."""
+    import pyarrow as pa
+
+    docs = [
+        {
+            "_id": {"$oid": f"{i:024x}"},
+            "answer": "yes" if i % 2 else "no",
+            "qty_s": str(i % 50),
+            "when_s": f"2025-01-{i % 28 + 1:02d}T10:00:00",
+        }
+        for i in range(60)
+    ]
+    fields, rows = _cli_dump(spark, tmp_path, "probe", docs)
+    assert fields["answer"] == pa.bool_()
+    assert fields["qty_s"] == pa.int32()
+    assert fields["when_s"] == pa.date64()
+    assert len(rows) == 60
+    got = {int(r["_id"], 16): r for r in rows}
+    for i in range(60):
+        assert got[i]["answer"] is bool(i % 2)
+        assert got[i]["qty_s"] == i % 50
+        assert got[i]["when_s"] == datetime(2025, 1, i % 28 + 1, 10)
+
+
+def test_cli_raw_epoch_fields_dump_as_timestamp_seconds(spark, tmp_path):
+    """Raw epoch int and float fields keep the reference's
+    ``timestamp[s]`` in the dumped schema (a second inference over the
+    already-cast frame used to re-type them ``date64[ms]``)."""
+    import pyarrow as pa
+
+    docs = [
+        {"n": i, "seen_at": EPOCH_NOW + i, "score_at": EPOCH_NOW + i + 0.5}
+        for i in range(20)
+    ]
+    fields, rows = _cli_dump(spark, tmp_path, "epochs", docs)
+    assert fields["seen_at"] == pa.timestamp("s")
+    assert fields["score_at"] == pa.timestamp("s")
+    got = {r["n"]: r for r in rows}
+    utc = datetime.fromtimestamp(EPOCH_NOW + 3, tz=timezone.utc)
+    assert got[3]["seen_at"] == utc.replace(tzinfo=None)
+    assert got[3]["score_at"] == utc.replace(tzinfo=None, microsecond=500000)
+
+
+def test_cli_mongodump_infers_once_from_the_samples_peek(
+    spark, tmp_path, monkeypatch
+):
+    """A mongodump collection is inferred once, from the first
+    ``samples`` documents: the distributed re-inference is never
+    called, and a field first seen after the peek is not in the
+    schema."""
+    import pyarrow as pa
+
+    from mongo2pq_spark.schema import inference
+
+    def second_inference(*args, **kwargs):
+        raise AssertionError("mongodump collection inferred twice")
+
+    monkeypatch.setattr(inference, "infer_schema_from_df", second_inference)
+    docs = [{"n": i} for i in range(10)]
+    docs += [{"n": i, "late": "x"} for i in range(10, 20)]
+    fields, rows = _cli_dump(spark, tmp_path, "peek", docs, samples=10)
+    assert fields == {"n": pa.int32()}
+    assert sorted(r["n"] for r in rows) == list(range(20))
+    assert all("late" not in r.asDict() for r in rows)

@@ -7003,6 +7003,56 @@ def test_compact_nb_store_crashed_batch_retry(spark, tmp_path):
     assert snap(priors_s) == snap(priors_t)
 
 
+def test_nb_store_torn_ingest_refused(spark, tmp_path):
+    """An ingest that stopped between its ``term_counts`` and
+    ``doc_counts`` writes leaves a batch in one tree only; load and
+    compaction must refuse that store instead of reading wrong priors.
+    A crash between the two compaction swaps stays legal, and
+    re-running the torn batch's ingest repairs the store."""
+    import shutil
+
+    import pytest
+
+    from mongo2pq_spark.operators.classifier import (
+        compact_nb_store,
+        ingest_nb_counts,
+        load_nb_model,
+        nb_train,
+    )
+
+    ddl = "doc_id long, text string, label string"
+    a = spark.createDataFrame(
+        [(1, "spam buy now", "spam"), (2, "hello dear friend", "ham")], ddl
+    )
+    b = spark.createDataFrame(
+        [(3, "cheap spam deal", "spam"), (4, "spam again", "spam")], ddl
+    )
+
+    def snap(pair):
+        return [sorted(tuple(r) for r in df.collect()) for df in pair]
+
+    expect = snap(nb_train(a.unionByName(b), "label"))
+    store = tmp_path / "nbstore"
+    ingest_nb_counts(a, str(store), "gen_a", "label")
+    ingest_nb_counts(b, str(store), "gen_b", "label")
+    shutil.rmtree(store / "doc_counts" / "batch=gen_b")
+    with pytest.raises(ValueError, match="gen_b"):
+        load_nb_model(spark, str(store), "label")
+    with pytest.raises(ValueError, match="gen_b"):
+        compact_nb_store(spark, str(store))
+
+    assert ingest_nb_counts(b, str(store), "gen_b", "label") == "ingested"
+    assert snap(load_nb_model(spark, str(store), "label")) == expect
+
+    # crash between the compaction swaps: term_counts folded into c0,
+    # doc_counts still holding the batches it had before
+    shutil.copytree(store / "doc_counts", tmp_path / "doc_counts_before")
+    compact_nb_store(spark, str(store))
+    shutil.rmtree(store / "doc_counts")
+    shutil.copytree(tmp_path / "doc_counts_before", store / "doc_counts")
+    assert snap(load_nb_model(spark, str(store), "label")) == expect
+
+
 def test_nb_store_additive_composition_property(spark, tmp_path):
     """Property (hypothesis): for ANY partition of a labeled corpus
     into arrival waves, any wave-ingest order, and compaction

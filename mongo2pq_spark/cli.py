@@ -174,6 +174,7 @@ def main(
     spark=None,
 ) -> int:
     from mongo2pq_spark.config import parse_config
+    from mongo2pq_spark.operators.cache import cache_scope, pin
     from mongo2pq_spark.plans.pipeline import extract_load_collection
     from mongo2pq_spark.schema.inference import infer_schema_from_df
     from mongo2pq_spark.schema.model import Schema
@@ -411,9 +412,19 @@ def main(
             )
             return 1
 
+    @cache_scope()
     def _process_collection(name: str) -> None:
         """Both phases for one collection (the parallel unit): schema
-        (load-or-infer, dump, config rewrite) then extract-load."""
+        (load-or-infer, dump, config rewrite) then extract-load.
+
+        One materialization rule: a frame more than one consumer reads
+        is pinned once, in this collection's cache scope — the input of
+        each dedup store stage (its batch token, fingerprint or
+        signature build and filter join all read it) and the frame
+        handed to the EL write when the index or the DQ pass also
+        reads it. Leaving the scope releases every pin, the stores'
+        own and ``cache_stream``'s included; a thread of
+        ``--parallel-collections`` only ever releases its own."""
         df, source_fields = readers[name]()
         schema = None
         if schema_path := schema_files.get(name):
@@ -513,8 +524,6 @@ def main(
             )
             df = drop_exact_duplicates(df, text_col=dedup_text_col, id_col=id_col)
         stores: list = []
-        tokens: list[str] = []
-        cached_df = None
         if source_format == "media" and (
             media_dhash_store or media_phash_store or media_afp_store
         ):
@@ -551,12 +560,6 @@ def main(
                     media_afp_store, name,
                     max_hamming=media_afp_max_hamming,
                 ))
-            cached_df = df.persist()
-            df = cached_df
-            for st in stores:
-                tok = st.batch_token(cached_df)
-                tokens.append(tok)
-                df = st.filter_new(df, tok)
         elif near_dedup_store and dedup_active:
             # cross-RUN incremental near-dedup: drop documents whose
             # MinHash bands collide with the persistent per-collection
@@ -567,20 +570,17 @@ def main(
             # crash-retries idempotent (see plans/neardedup_store.py).
             from mongo2pq_spark.plans.neardedup_store import NearDedupStore
 
-            store = NearDedupStore(
+            stores.append(NearDedupStore(
                 near_dedup_store, name,
                 text_col=dedup_text_col,
                 threshold=near_dedup_threshold,
-            )
-            stores.append(store)
-            # the token aggregate, the signature build, and the EL
-            # write each materialize this lineage (source scan + the
-            # exact-dedup shuffles); cache it once — spill-to-disk
-            # beats three full recomputations, and the finally block
-            # below releases it
-            cached_df = df.persist()
-            tokens.append(store.batch_token(cached_df))
-            df = store.filter_new(cached_df, tokens[0])
+            ))
+        if stores:
+            df = pin(df)
+        # every token comes from the store input; the filters chain
+        tokens = [st.batch_token(df) for st in stores]
+        for st, tok in zip(stores, tokens):
+            df = st.filter_new(df, tok)
         if substring_store and dedup_text_col and dedup_text_col in df.columns:
             # cross-RUN incremental ExactSubstr removal: tokens covered
             # by an 8-token span seen in ANY previous batch (or
@@ -602,13 +602,7 @@ def main(
                 text_col=dedup_text_col,
                 span_words=substring_span_words,
             )
-            if cached_df is None:
-                # the token digest, the span write and the EL write
-                # each materialize this lineage (the sibling stores'
-                # rationale); released in finally
-                cached_df = df.persist()
-                df = cached_df
-            proj = df.withColumn(
+            proj = pin(df).withColumn(
                 "__span_id", F_span.md5(F_span.col(dedup_text_col))
             )
             cleaned = sstore.process_increment(
@@ -684,161 +678,132 @@ def main(
                 nb_id_col,
                 "left",
             )
-        if (
-            inverted_index
-            and index_text_col
-            and cached_df is None
-            and index_text_col in df.columns
-            and index_id_col in df.columns
-        ):
-            # the EL write, the token aggregate and the index write
-            # each materialize this lineage — cache it once (the
-            # near-dedup branch's rationale); released in finally
-            cached_df = df.persist()
-            df = cached_df
-        if name in dq_contract and cached_df is None:
-            # the contract pass and the EL write both materialize
-            # this lineage — cache it once (the near-dedup branch's
-            # rationale); released in finally
-            cached_df = df.persist()
-            df = cached_df
-        try:
-            if name in dq_contract:
-                # validate BEFORE the EL write: --dq-fail-on-violation
-                # exists to stop bad data from being PUBLISHED, so the
-                # judgment must precede the publish. Rules judge the
-                # SCHEMA-APPLIED frame — the exact typed/renamed rows
-                # the sink writes — not the raw source frame: file
-                # sources carry strings until Schema.apply casts them,
-                # and a numeric range rule against an uncast string
-                # column would crash under ANSI (found by the sf0.1
-                # CLI scale drive). The report is bounded at
-                # len(rules) rows; inside the try so the finally below
-                # releases caches/stores on a raise.
-                import json as jsonlib
+        index_active = bool(
+            inverted_index and index_text_col
+            and index_text_col in df.columns and index_id_col in df.columns
+        )
+        if index_active or name in dq_contract:
+            # the EL write plus the index token, its range sample and
+            # its write, or the DQ pass, each read the written frame
+            df = pin(df)
+        if name in dq_contract:
+            # validate BEFORE the EL write: --dq-fail-on-violation
+            # exists to stop bad data from being PUBLISHED, so the
+            # judgment must precede the publish. Rules judge the
+            # SCHEMA-APPLIED frame — the exact typed/renamed rows
+            # the sink writes — not the raw source frame: file
+            # sources carry strings until Schema.apply casts them,
+            # and a numeric range rule against an uncast string
+            # column would crash under ANSI (found by the sf0.1
+            # CLI scale drive). The report is bounded at
+            # len(rules) rows; on a raise the scope still releases
+            # the pins.
+            import json as jsonlib
 
-                from mongo2pq_spark.operators.contracts import (
-                    validate_rules,
-                )
+            from mongo2pq_spark.operators.contracts import validate_rules
 
-                published = schema.apply(df, strict_compat=strict_compat)
-                rules = []
-                for r in dq_contract[name]:
-                    rr = dict(r)
-                    if rr["col"] not in published.columns:
+            published = schema.apply(df, strict_compat=strict_compat)
+            rules = []
+            for r in dq_contract[name]:
+                rr = dict(r)
+                if rr["col"] not in published.columns:
+                    print(
+                        f"WARNING: dq rule {rr['rule_id']!r} column "
+                        f"{rr['col']!r} not in '{name}'; rule skipped",
+                        file=sys.stderr,
+                    )
+                    continue
+                if rr["kind"] == "fk":
+                    dim_name = rr.pop("dim")
+                    if dim_name not in readers:
                         print(
-                            f"WARNING: dq rule {rr['rule_id']!r} column "
-                            f"{rr['col']!r} not in '{name}'; rule skipped",
+                            f"WARNING: dq rule {rr['rule_id']!r} dim "
+                            f"collection {dim_name!r} not in this "
+                            "run; rule skipped",
                             file=sys.stderr,
                         )
                         continue
-                    if rr["kind"] == "fk":
-                        dim_name = rr.pop("dim")
-                        if dim_name not in readers:
-                            print(
-                                f"WARNING: dq rule {rr['rule_id']!r} dim "
-                                f"collection {dim_name!r} not in this "
-                                "run; rule skipped",
-                                file=sys.stderr,
-                            )
-                            continue
-                        rr["dim_df"], _ = readers[dim_name]()
-                        rr.setdefault("dim_col", rr["col"])
-                    rules.append(rr)
-                if rules:
-                    report = [
-                        row.asDict()
-                        for row in validate_rules(
-                            published, rules
-                        ).collect()
-                    ]
-                    with open(
-                        outdir / f"{name}_dq_report.json", "w"
-                    ) as fh:
-                        jsonlib.dump(report, fh, indent=1)
-                    failed = [
-                        r["rule_id"] for r in report if not r["passed"]
-                    ]
-                    print(
-                        f"{name}: dq contract {len(report)} rules, "
-                        f"{len(failed)} failed"
-                        + (f" ({', '.join(failed)})" if failed else ""),
-                        file=sys.stderr,
+                    rr["dim_df"], _ = readers[dim_name]()
+                    rr.setdefault("dim_col", rr["col"])
+                rules.append(rr)
+            if rules:
+                report = [
+                    row.asDict()
+                    for row in validate_rules(published, rules).collect()
+                ]
+                with open(outdir / f"{name}_dq_report.json", "w") as fh:
+                    jsonlib.dump(report, fh, indent=1)
+                failed = [r["rule_id"] for r in report if not r["passed"]]
+                print(
+                    f"{name}: dq contract {len(report)} rules, "
+                    f"{len(failed)} failed"
+                    + (f" ({', '.join(failed)})" if failed else ""),
+                    file=sys.stderr,
+                )
+                if failed and dq_fail_on_violation:
+                    raise ValueError(
+                        f"dq contract failed for '{name}': "
+                        f"{', '.join(failed)} — collection NOT "
+                        "written"
                     )
-                    if failed and dq_fail_on_violation:
-                        raise ValueError(
-                            f"dq contract failed for '{name}': "
-                            f"{', '.join(failed)} — collection NOT "
-                            "written"
-                        )
-            metrics: dict = {}
-            extract_load_collection(
+        metrics: dict = {}
+        extract_load_collection(
+            df,
+            schema,
+            outdir,
+            partition_key=partition_key,
+            strict_compat=strict_compat,
+            max_records_per_file=max_records_per_file,
+            single_file=single_file,
+            compression=compression,
+            metrics=metrics,
+            dynamic_partition_overwrite=dynamic_partition_overwrite,
+        )
+        # rows-written observed by the write job itself (no
+        # recount) — the reference's tqdm progress accounting,
+        # Spark-style
+        print(
+            f"{name}: {metrics.get('rows_written', '?')} rows written",
+            file=sys.stderr,
+        )
+        for st, tok in zip(stores, tokens):
+            # index the SURVIVORS only, and only after the EL write
+            # succeeded — a crash before this commit leaves output
+            # and store consistent (docs never indexed-but-
+            # unwritten); the commit overwrites the batch's OWN
+            # partitions, so a retry is idempotent rather than
+            # self-colliding
+            st.commit(tok)
+        if index_active:
+            # retrieval-index-at-ingest: append this run's WRITTEN
+            # rows as one batch= partition of the collection's
+            # inverted-index tree — O(increment) maintenance, same
+            # post-write commit rule as the dedup stores (a crash
+            # before this point leaves no rows indexed-but-
+            # unwritten; the content-derived token makes retries
+            # overwrite their own batch)
+            from mongo2pq_spark.operators.text import write_inverted_index
+
+            tok = _index_batch_token(df, index_id_col, index_text_col)
+            write_inverted_index(
                 df,
-                schema,
-                outdir,
-                partition_key=partition_key,
-                strict_compat=strict_compat,
-                max_records_per_file=max_records_per_file,
-                single_file=single_file,
-                compression=compression,
-                metrics=metrics,
-                dynamic_partition_overwrite=dynamic_partition_overwrite,
+                str(Path(inverted_index) / name),
+                id_col=index_id_col,
+                text_col=index_text_col,
+                batch_token=tok,
             )
-            # rows-written observed by the write job itself (no
-            # recount) — the reference's tqdm progress accounting,
-            # Spark-style
             print(
-                f"{name}: {metrics.get('rows_written', '?')} rows written",
+                f"{name}: postings appended to inverted index "
+                f"(batch={tok})",
                 file=sys.stderr,
             )
-            for st, tok in zip(stores, tokens):
-                # index the SURVIVORS only, and only after the EL write
-                # succeeded — a crash before this commit leaves output
-                # and store consistent (docs never indexed-but-
-                # unwritten); the commit overwrites the batch's OWN
-                # partitions, so a retry is idempotent rather than
-                # self-colliding
-                st.commit(tok)
-            if inverted_index and index_text_col:
-                # retrieval-index-at-ingest: append this run's WRITTEN
-                # rows as one batch= partition of the collection's
-                # inverted-index tree — O(increment) maintenance, same
-                # post-write commit rule as the dedup stores (a crash
-                # before this point leaves no rows indexed-but-
-                # unwritten; the content-derived token makes retries
-                # overwrite their own batch)
-                if index_text_col not in df.columns or (
-                    index_id_col not in df.columns
-                ):
-                    print(
-                        f"WARNING: index columns ({index_text_col!r}, "
-                        f"{index_id_col!r}) not both in '{name}'; "
-                        "collection not indexed",
-                        file=sys.stderr,
-                    )
-                else:
-                    from mongo2pq_spark.operators.text import (
-                        write_inverted_index,
-                    )
-
-                    tok = _index_batch_token(df, index_id_col, index_text_col)
-                    write_inverted_index(
-                        df,
-                        str(Path(inverted_index) / name),
-                        id_col=index_id_col,
-                        text_col=index_text_col,
-                        batch_token=tok,
-                    )
-                    print(
-                        f"{name}: postings appended to inverted index "
-                        f"(batch={tok})",
-                        file=sys.stderr,
-                    )
-        finally:
-            for st in stores:
-                st.close()  # release cached sig/drop artifacts
-            if cached_df is not None:
-                cached_df.unpersist()
+        elif inverted_index and index_text_col:
+            print(
+                f"WARNING: index columns ({index_text_col!r}, "
+                f"{index_id_col!r}) not both in '{name}'; "
+                "collection not indexed",
+                file=sys.stderr,
+            )
 
     failures: list[tuple[str, Exception]] = []
     if parallel_collections > 1 and len(readers) > 1:

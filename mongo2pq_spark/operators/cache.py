@@ -1,43 +1,64 @@
-"""Bounded cache registry for multi-consumer streams.
+"""Cache registry for multi-consumer streams: scoped, or bounded.
 
 Catalyst has no cross-branch common-subexpression elimination, and
 (verified empirically) exchange reuse does not fire across the
 alias-renamed sides of a self-join — so a computed stream feeding k
-consumers executes k times unless persisted. The contract that keeps
-persists from ACCUMULATING across a long-running session: each
-`cache_stream` call evicts the OLDEST registered cache beyond a
-capacity of ``_MAX_LIVE``, UNLESS a live cache is semantically the
-same plan (`df.sameSemantics`), in which case it is returned as-is —
-repeated invocations of the same operator (a pairs query followed by
-a clusters query built on the same pairs, a bench repeat, a retried
-shard) hit the warm cache instead of recomputing. Capacity must cover
-cache NESTING (a query may cache an operator RESULT whose plan
-contains the operator's own internally cached sub-stream —
-semdedup_prune's assignment under semdedup_prune_consistency's
-result, the r11 case that forced a floor of 2: with capacity 1 the
-outer registration evicted the inner cache before the outer ever
-materialized, and the assignment subtree recomputed per branch of the
-outer plan, measurably SLOWER than no outer cache at all) and the
-widest real consumer graph (see ``_MAX_LIVE``). At most ``_MAX_LIVE``
-streams are resident between calls — O(1), not O(#queries);
-`release_caches()` empties even those.
+consumers executes k times unless persisted. Every registration
+(`cache_stream`, `pin`) lives in one of two places:
 
+- **A scope.** ``with cache_scope():`` (or ``@cache_scope()`` on a
+  function) opens a scope private to the calling thread; scopes nest.
+  Inside it, `cache_stream` and `pin` register in the innermost scope:
+  nothing is evicted while it is open (so no stream can be released
+  before it materializes), `cache_stream`'s sameSemantics memo looks
+  only at that scope, and leaving the scope unpersists everything
+  registered in it. The CLI opens one scope per collection, so the
+  collections ``--parallel-collections`` runs on a thread pool never
+  evict or release each other's streams, nor those of unscoped callers
+  in other threads, and a collection's caches end with the collection.
+- **The bounded registry** (no scope open in this thread: the
+  registered queries and `bench.py`). Each `cache_stream` call
+  evicts the OLDEST registered cache beyond a capacity of
+  ``_MAX_LIVE``, UNLESS a live cache is semantically the same plan
+  (`df.sameSemantics`), in which case it is returned as-is — repeated
+  invocations of the same operator (a pairs query followed by a
+  clusters query built on the same pairs, a bench repeat, a retried
+  shard) hit the warm cache instead of recomputing. Capacity must
+  cover cache NESTING (a query may cache an operator RESULT whose plan
+  contains the operator's own internally cached sub-stream —
+  semdedup_prune's assignment under semdedup_prune_consistency's
+  result, the r11 case that forced a floor of 2: with capacity 1 the
+  outer registration evicted the inner cache before the outer ever
+  materialized, and the assignment subtree recomputed per branch of
+  the outer plan, measurably SLOWER than no outer cache at all) and
+  the widest real consumer graph (see ``_MAX_LIVE``). At most
+  ``_MAX_LIVE`` streams are resident between calls — O(1), not
+  O(#queries); `release_caches()` empties even those. The list is
+  guarded by a lock, but its FIFO is shared: two unscoped lazy queries
+  built at once can still evict each other's streams, so a caller that
+  interleaves queries opens a scope for each.
+
+`pin` outside any scope is a plain persist that its caller releases.
 The memo is keyed by the logical plan, so like Spark's own
 CacheManager it assumes the underlying source files do not change
-between calls. Not safe for two interleaved lazy queries (the second
-build would release the first's cache mid-flight); the driver/bench
-run queries strictly one at a time.
+between calls.
 """
 
 from __future__ import annotations
 
 import logging
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
 _LOG = logging.getLogger(__name__)
 
+#: the bounded registry (callers outside any scope), FIFO order
 _LIVE_CACHES: list[DataFrame] = []
+_LOCK = threading.Lock()
+#: per-thread stack of open scopes, each the list of frames it holds
+_THREAD = threading.local()
 
 #: evictions of a cache that never materialized (ADVICE r18 /
 #: VERDICT r18 #7): the silent-regression mode of the bounded
@@ -95,59 +116,100 @@ def _is_materialized(df: DataFrame) -> bool:
 _MAX_LIVE = 4
 
 
+def _registry() -> list[DataFrame]:
+    """The innermost scope open in this thread, else the bounded
+    registry."""
+    stack = getattr(_THREAD, "scopes", None)
+    return stack[-1] if stack else _LIVE_CACHES
+
+
+@contextmanager
+def cache_scope():
+    """Hold every `cache_stream`/`pin` registration this thread makes
+    until the scope exits, then unpersist them all (module docstring).
+    Usable as ``with cache_scope():`` or as a decorator."""
+    held: list[DataFrame] = []
+    stack = _THREAD.__dict__.setdefault("scopes", [])
+    stack.append(held)
+    try:
+        yield
+    finally:
+        stack.pop()
+        for df in held:
+            df.unpersist(False)
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (Spark's default DataFrame level) for the rest of
+    the current scope. Outside a scope it is a plain persist, and the
+    caller unpersists it. A frame already persisted is returned as is,
+    held by whoever persisted it."""
+    if not df.is_cached:
+        df.persist()
+        if (live_list := _registry()) is not _LIVE_CACHES:
+            live_list.append(df)
+    return df
+
+
 def release_caches() -> None:
-    """Unpersist every stream cached by a prior operator call."""
-    while _LIVE_CACHES:
-        _LIVE_CACHES.pop().unpersist(False)
+    """Unpersist every stream in the bounded registry."""
+    with _LOCK:
+        while _LIVE_CACHES:
+            _LIVE_CACHES.pop().unpersist(False)
 
 
 def uncache_stream(df: DataFrame) -> None:
     """Targeted invalidation (ADVICE r18): unpersist ``df`` and drop
-    it from the registry if it is a live cached stream; no-op
-    otherwise. Callers whose cached plan reads a directory THEIR OWN
-    pipeline family rewrites (the tarshards generational ships) call
-    this when the stream's lifetime ends — the sources-never-change
-    assumption behind the sameSemantics memo must not outlive the
-    snapshot it was true for."""
-    for live in _LIVE_CACHES:
-        if live is df or live.sameSemantics(df):
-            _LIVE_CACHES.remove(live)
-            live.unpersist(False)
-            return
+    it from the current scope, or from the bounded registry outside
+    one, if it is a live cached stream there; no-op otherwise. Callers
+    whose cached plan reads a directory THEIR OWN pipeline family
+    rewrites (the tarshards generational ships) call this when the
+    stream's lifetime ends — the sources-never-change assumption
+    behind the sameSemantics memo must not outlive the snapshot it was
+    true for."""
+    live_list = _registry()
+    with _LOCK:
+        for live in live_list:
+            if live is df or live.sameSemantics(df):
+                live_list.remove(live)
+                live.unpersist(False)
+                return
 
 
 def cache_stream(df: DataFrame) -> DataFrame:
-    """Persist ``df`` (MEMORY_AND_DISK) under the bounded contract
-    documented in the module docstring."""
+    """Persist ``df`` (MEMORY_AND_DISK) in the current scope, or under
+    the bounded contract outside one (module docstring)."""
     from pyspark.storagelevel import StorageLevel
 
-    for live in _LIVE_CACHES:
-        if live.sameSemantics(df):
-            # refresh recency: a just-reused stream must not be the
-            # next eviction victim
-            _LIVE_CACHES.remove(live)
-            _LIVE_CACHES.append(live)
-            return live
-    while len(_LIVE_CACHES) >= _MAX_LIVE:
-        # FIFO: the oldest stream is the one least likely to be a
-        # live sub-plan of the stream being registered now
-        victim = _LIVE_CACHES.pop(0)
-        if not _is_materialized(victim):
-            # evicting a cache nobody has materialized yet means a
-            # composition outgrew _MAX_LIVE: every consumer of the
-            # victim will now re-execute its subtree (the r11
-            # slower-than-no-cache mode). Count + warn so the
-            # regression is observable instead of silent.
-            global _EVICTED_UNMATERIALIZED
-            _EVICTED_UNMATERIALIZED += 1
-            _LOG.warning(
-                "cache_stream: evicting a never-materialized cache "
-                "(capacity _MAX_LIVE=%d exceeded before the terminal "
-                "action) — consumers of the evicted stream will "
-                "re-execute its subtree",
-                _MAX_LIVE,
-            )
-        victim.unpersist(False)
-    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_CACHES.append(cached)
-    return cached
+    global _EVICTED_UNMATERIALIZED
+    live_list = _registry()
+    with _LOCK:
+        for live in live_list:
+            if live.sameSemantics(df):
+                # refresh recency: a just-reused stream must not be the
+                # next eviction victim
+                live_list.remove(live)
+                live_list.append(live)
+                return live
+        while live_list is _LIVE_CACHES and len(live_list) >= _MAX_LIVE:
+            # FIFO: the oldest stream is the one least likely to be a
+            # live sub-plan of the stream being registered now
+            victim = _LIVE_CACHES.pop(0)
+            if not _is_materialized(victim):
+                # evicting a cache nobody has materialized yet means a
+                # composition outgrew _MAX_LIVE: every consumer of the
+                # victim will now re-execute its subtree (the r11
+                # slower-than-no-cache mode). Count + warn so the
+                # regression is observable instead of silent.
+                _EVICTED_UNMATERIALIZED += 1
+                _LOG.warning(
+                    "cache_stream: evicting a never-materialized cache "
+                    "(capacity _MAX_LIVE=%d exceeded before the terminal "
+                    "action) — consumers of the evicted stream will "
+                    "re-execute its subtree",
+                    _MAX_LIVE,
+                )
+            victim.unpersist(False)
+        cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+        live_list.append(cached)
+        return cached

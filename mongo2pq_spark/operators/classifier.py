@@ -205,7 +205,13 @@ def nb_score(
     # it (no cross-branch CSE in Catalyst — unpersisted, each branch
     # would re-tokenize the corpus). explode_outer keeps empty docs
     # as a NULL-term row with tf 0, so they survive into the totals
-    # and score on priors alone.
+    # and score on priors alone. Corpus-sized, and kept on purpose:
+    # one (id, term, tf) row per distinct term of a document is of
+    # the order of the text it tokenizes (shard_members' persist,
+    # which has a recompute knob, carries payload bytes), and a
+    # recompute would tokenize twice. Under the CLI it lives in the
+    # collection's cache scope and is released when that collection
+    # is written; elsewhere it takes a bounded-registry slot.
     tf_doc = cache_stream(
         base.select("_nb_id", F.explode_outer("_nb_toks").alias("term"))
         .groupBy("_nb_id", "term")

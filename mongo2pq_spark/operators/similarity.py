@@ -22,8 +22,11 @@ n-gram dedup). Recall at a given cosine threshold is tuned by
 (H, L): wider buckets (small H) and more tables (large L) raise
 recall; the cap bounds the cost of wide buckets.
 
-All math is built-in higher-order functions (JVM codegen); no Python
-UDFs.
+Cosine and dot-product math is built-in higher-order functions (JVM
+codegen). The one Python stage is the LSH bucket assignment
+(``_assign_buckets_arrow``): an Arrow-batched NumPy ``mapInArrow``
+pass, bit-identical to the JVM fold. There are no row-at-a-time
+Python UDFs.
 """
 
 from __future__ import annotations
@@ -237,8 +240,8 @@ def _assign_buckets_arrow(
     IEEE add order per element), proven by exact-set equality against
     the HOF formulation in tests and by the unchanged DuckDB oracle.
 
-    Why Python here at all (the module header says "no Python UDFs in
-    the hot path"): the assignment is the ONE map-shaped stage whose
+    Why Python here at all (everything else in the module is JVM
+    math): the assignment is the ONE map-shaped stage whose
     per-row work is L·H·dim floating multiplies — interpreted
     lambda-eval in the JVM HOF chain, vectorized NumPy per Arrow
     batch here (guide §4.2). Measured r19: 16×5 planes over 64 dims,
@@ -270,24 +273,21 @@ def _assign_buckets_arrow(
                 continue
             ids = rb.column(0)
             vecs = rb.column(1)
-            if vecs.null_count or vecs.values.null_count:
+            # values is the backing buffer (absolute offsets — a
+            # sliced batch does not start at 0): only the elements
+            # inside off[0]:off[-1] belong to this batch
+            off = np.asarray(vecs.offsets)
+            values = vecs.values.slice(int(off[0]), int(off[-1] - off[0]))
+            if vecs.null_count or values.null_count:
                 raise ValueError(
                     "lsh assignment: null vector/element (embeddings "
                     "are a non-null fixed-width contract)"
                 )
-            off = np.asarray(vecs.offsets)
             if not ((off[1:] - off[:-1]) == dim).all():
                 raise ValueError(
                     f"lsh assignment: ragged vector (expected dim={dim})"
                 )
-            # values is the backing buffer (absolute offsets — a
-            # sliced batch does not start at 0), so slice before the
-            # reshape
-            X = (
-                np.asarray(vecs.values)[off[0]:off[-1]]
-                .reshape(n, dim)
-                .astype(np.float64)
-            )
+            X = np.asarray(values).reshape(n, dim).astype(np.float64)
             # strict left fold per element: acc = ((x0·p0 + x1·p1) + …)
             # — never einsum/BLAS, whose re-associated sums would not
             # be bit-identical to the JVM fold
@@ -396,10 +396,14 @@ def _cap_buckets(
     falls back to an unhinted join and lets AQE pick the strategy at
     runtime — unconditionally safe.
 
-    Self-contained: the assignment stream is cached HERE (idempotent
-    via ``cache_stream``'s sameSemantics memo when the caller already
-    cached it), so the guard job can never trigger a second full L×n
-    hyperplane projection for an uncached caller."""
+    Self-contained: the assignment stream is cached HERE, so the guard
+    job can never trigger a second full L×n hyperplane projection for
+    an uncached caller. This is not idempotent across calls: each
+    ``lsh_multi_assignments`` call wraps a fresh Python function, so
+    its ``mapInArrow`` plan never ``sameSemantics``-matches an earlier
+    one, and every call registers (and on its first action computes)
+    its own copy — in the current cache scope, or in the bounded
+    registry outside one (``operators/cache.py``)."""
     assignments = cache_stream(assignments)
     oversized = (
         assignments.groupBy("table_id", "bucket")

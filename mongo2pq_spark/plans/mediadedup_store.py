@@ -49,6 +49,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo2pq_spark.operators.cache import pin
 from mongo2pq_spark.plans.bandstore_core import (
     RunLog,
     consolidate_tree,
@@ -163,7 +164,7 @@ class MediaFingerprintStore:
         """Drop rows whose fingerprint lies within ``max_hamming`` of
         ANY previously ingested batch's fingerprint; other-modality and
         undecodable rows pass through (warned)."""
-        hashed = self._fp_or_null(df).persist()
+        hashed = pin(self._fp_or_null(df))
         self._hashed = hashed
         n_bad = hashed.filter(F.col("decode_err").isNotNull()).count()
         if n_bad:
@@ -199,13 +200,12 @@ class MediaFingerprintStore:
             )
         )
         ham = F.bit_count(F.col("fp").bitwiseXOR(F.col("other_fp")))
-        dropped = (
+        dropped = pin(
             self._banded(fp)
             .join(index, ["band_id", "band_value"])
             .filter(ham <= self.max_hamming)
             .select(STORE_ID)
             .distinct()
-            .persist()
         )
         self._dropped = dropped
         return df.join(
@@ -260,6 +260,8 @@ class MediaFingerprintStore:
         )
 
     def close(self) -> None:
+        """Release the pinned increment artifacts (an enclosing
+        ``cache_scope`` releases them too on exit)."""
         for cached in (self._hashed, self._dropped):
             if cached is not None:
                 cached.unpersist(False)

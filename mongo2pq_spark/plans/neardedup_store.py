@@ -45,6 +45,7 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mongo2pq_spark.operators.cache import pin
 from mongo2pq_spark.operators.dedup import (
     DEFAULT_BANDS,
     DEFAULT_K,
@@ -148,8 +149,9 @@ class NearDedupStore:
         """Drop documents that near-duplicate ANY previously ingested
         batch: band collision proposes, signature agreement ≥ threshold
         confirms. The increment's signatures are computed ONCE and
-        cached (k integers per doc) for reuse by ``commit``."""
-        sig = minhash_signatures(
+        pinned (k integers per doc; ``cache.pin``) for reuse by
+        ``commit``."""
+        sig = pin(minhash_signatures(
             df.select(
                 self._digest().alias(STORE_ID),
                 F.col(self.text_col),
@@ -159,7 +161,7 @@ class NearDedupStore:
             self.k,
             self.shingle_n,
             self.seed,
-        ).persist()
+        ))
         self._sig = sig
 
         spark = df.sparkSession
@@ -198,13 +200,12 @@ class NearDedupStore:
             F.when(F.col(f"mh{i}") == F.col(f"emh{i}"), 1).otherwise(0)
             for i in range(self.k)
         ) / float(self.k)
-        dropped = (
+        dropped = pin(
             cand.join(sig, STORE_ID)
             .join(renamed, "existing_id")
             .filter(agreement >= self.threshold)
             .select(STORE_ID)
             .distinct()
-            .persist()
         )
         self._dropped = dropped
         return df.join(
@@ -280,7 +281,8 @@ class NearDedupStore:
         )
 
     def close(self) -> None:
-        """Release the cached increment artifacts."""
+        """Release the pinned increment artifacts (an enclosing
+        ``cache_scope`` releases them too on exit)."""
         for cached in (self._sig, self._dropped):
             if cached is not None:
                 cached.unpersist()

@@ -1393,6 +1393,94 @@ def test_cli_inverted_index_at_ingest(spark, tmp_path):
     assert probe() == want
 
 
+def _ingest_base_then_increment(spark, src, root):
+    """Base then increment through cli.main with exact dedup, the
+    near-dedup store and the inverted index; returns the written rows,
+    the index postings and the store's sigs and bands, each sorted."""
+    for phase in ("base", "inc"):
+        rc = cli_main(
+            f"file:{src / phase}",
+            outdir=root / phase,
+            dedup_text_col="text",
+            dedup_id_col="doc_id",
+            near_dedup_store=root / "store",
+            inverted_index=root / "idx",
+            index_text_col="text",
+            use_source_types=True,
+            spark=spark,
+        )
+        assert rc == 0
+
+    def rows(path):
+        return sorted(
+            tuple(sorted(r.asDict().items()))
+            for r in spark.read.parquet(str(path)).collect()
+        )
+
+    return (
+        [rows(root / phase / "docs.parquet") for phase in ("base", "inc")],
+        rows(root / "idx" / "docs"),
+        rows(root / "store" / "docs" / "sigs"),
+        rows(root / "store" / "docs" / "bands"),
+    )
+
+
+def test_cli_written_frame_materialized_once(spark, tmp_path, monkeypatch):
+    """After the near-dedup filter, the frame handed to the EL write is
+    also read by the index token, its range sample and the index write.
+    It is materialized once: the frame write_inverted_index receives is
+    cached and its plan reads an in-memory table, with the store's
+    left-anti join only inside the cached relation, not re-run above
+    it. Rows, postings and the store equal an uncached run's."""
+    import json as jsonlib
+    import random
+
+    import mongo2pq_spark.operators.text as text_mod
+
+    rng = random.Random(5)
+    words = [f"w{i}" for i in range(300)]
+    base = [" ".join(rng.choices(words, k=30)) for _ in range(40)]
+    # an increment of one-word edits of base docs (near duplicates
+    # the store drops) and fresh docs
+    edited = [t.replace(t.split()[0], "edited", 1) for t in base[:12]]
+    fresh = [" ".join(rng.choices(words, k=30)) for _ in range(12)]
+    src = tmp_path / "src"
+    for phase, texts, first in (("base", base, 0), ("inc", edited + fresh, 1000)):
+        (src / phase).mkdir(parents=True)
+        (src / phase / "docs.jsonl").write_text("\n".join(
+            jsonlib.dumps({"doc_id": first + i, "text": t})
+            for i, t in enumerate(texts)
+        ))
+
+    seen = []
+    real_write = text_mod.write_inverted_index
+
+    def spy(df, *args, **kwargs):
+        plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+            df._jdf.queryExecution(), "formatted"  # noqa: SLF001
+        )
+        seen.append((df.is_cached, plan.split("\n\n")[0]))
+        return real_write(df, *args, **kwargs)
+
+    monkeypatch.setattr(text_mod, "write_inverted_index", spy)
+    cached = _ingest_base_then_increment(spark, src, tmp_path / "cached")
+    assert len(seen) == 2
+    inc_cached, inc_tree = seen[1]
+    assert inc_cached
+    above_cache = inc_tree.split("InMemoryRelation")[0]
+    assert "InMemoryTableScan" in above_cache
+    assert "Join" not in above_cache
+    assert "LeftAnti" in inc_tree  # the store's filter, inside the cache
+    # the increment really lost its near duplicates
+    assert 0 < len(cached[0][1]) < len(edited) + len(fresh)
+
+    # the reference run caches nothing at all
+    monkeypatch.setattr(type(spark.range(1)), "persist", lambda self, *a: self)
+    uncached = _ingest_base_then_increment(spark, src, tmp_path / "uncached")
+    assert not seen[-1][0]
+    assert cached == uncached
+
+
 def test_cli_media_phash_store_across_runs(spark, tmp_path):
     """--media-phash-store: the frequency-domain image store rides the
     same lifecycle — run 2's brightness-shifted re-crawls (identical
@@ -2548,6 +2636,78 @@ def test_cli_nb_classifier_at_ingest(spark, tmp_path):
             str(out7 / "unlabeled.parquet")
         ).collect()
     } == expect
+
+
+def test_cli_parallel_collections_scoped_caches(spark, tmp_path):
+    """--parallel-collections 2 with --nb-store: each collection's
+    thread registers its caches (nb_score's tf_doc among them) in its
+    own cache scope. So the run evicts no stream that another caller
+    registered and has not yet materialized, the evicted-unmaterialized
+    counter does not move, nothing the run cached is left in the
+    bounded registry, and the written rows equal the serial run's."""
+    from mongo2pq_spark.operators.cache import (
+        _LIVE_CACHES,
+        _MAX_LIVE,
+        cache_stream,
+        evicted_unmaterialized_count,
+        release_caches,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    labeled = [
+        (1, "spam buy now buy cheap", "spam"),
+        (2, "buy cheap spam spam offer", "spam"),
+        (3, "hello dear friend meeting", "ham"),
+        (4, "dear friend hello hello agenda", "ham"),
+    ]
+    spark.createDataFrame(
+        labeled, "doc_id long, text string, label string"
+    ).write.parquet(str(src / "labeled.parquet"))
+    spark.createDataFrame(
+        [(10, "buy spam offer"), (11, "hello agenda friend"), (12, "")],
+        "doc_id long, text string",
+    ).write.parquet(str(src / "unlabeled.parquet"))
+
+    def run(tag: str, parallel: int) -> dict:
+        out = tmp_path / tag
+        rc = cli_main(
+            f"file:{src}",
+            outdir=out,
+            nb_store=tmp_path / f"nb_{tag}",
+            nb_label_col="label",
+            parallel_collections=parallel,
+            use_source_types=True,
+            spark=spark,
+        )
+        assert rc == 0
+        return {
+            name: sorted(
+                tuple(sorted(r.asDict().items()))
+                for r in spark.read.parquet(
+                    str(out / f"{name}.parquet")
+                ).collect()
+            )
+            for name in ("labeled", "unlabeled")
+        }
+
+    serial = run("serial", 1)
+    release_caches()
+    # a full bounded registry of streams some other caller built and
+    # has not yet run
+    pending = [
+        cache_stream(spark.range(50 + i).select("id"))
+        for i in range(_MAX_LIVE)
+    ]
+    before = evicted_unmaterialized_count()
+    parallel = run("parallel", 2)
+    assert evicted_unmaterialized_count() == before
+    assert len(_LIVE_CACHES) == _MAX_LIVE
+    assert all(any(c is p for c in _LIVE_CACHES) for p in pending)
+    release_caches()
+    assert parallel == serial
+    # the rows carry the scores the threads computed
+    assert any(("nb_pred_label", "spam") in r for r in parallel["unlabeled"])
 
 
 def test_nb_cli_batch_id_sanitizes_any_collection_name():

@@ -26,6 +26,11 @@ CI instead of waiting for the next judge pass:
    and no ``epochfields`` reader option under ``sources/`` or
    ``plans/``. A mongodump read once cast epoch fields on a path of
    its own, and its types forked from the dumped schema.
+6. ``cli.py`` and the store modules (``plans/*store*.py``) never call
+   ``.persist(``: the CLI materializes a frame only through
+   ``operators/cache.py::pin`` in a collection's cache scope, so the
+   one materialization rule cannot fork back into per-branch persists
+   that outlive a collection or race ``--parallel-collections``.
 """
 
 from __future__ import annotations
@@ -102,4 +107,19 @@ def test_source_cast_only_in_schema_apply():
     assert offenders == [], (
         f"raw-to-typed cast outside schema/model.py: {offenders} — read "
         "source types and let Schema.apply cast them"
+    )
+
+
+def test_no_raw_persist_in_cli_or_stores():
+    offenders = [
+        f"{rel}:{i}: {line.strip()}"
+        for rel, src in _py_sources()
+        if rel == "cli.py"
+        or (rel.startswith("plans" + os.sep) and "store" in os.path.basename(rel))
+        for i, line in enumerate(src.split("\n"), 1)
+        if ".persist(" in line
+    ]
+    assert offenders == [], (
+        f"raw persist in the CLI or a store: {offenders} — use "
+        "operators/cache.py::pin inside the collection's cache_scope"
     )

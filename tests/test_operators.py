@@ -586,6 +586,56 @@ def test_uncache_stream_is_targeted_and_idempotent(spark):
     assert _LIVE_CACHES == []
 
 
+def test_cache_scope_is_thread_private(spark):
+    """Two threads, each inside its own cache_scope, register more
+    streams than _MAX_LIVE before anything materializes: nothing is
+    evicted (the counter does not move), the bounded registry of
+    unscoped callers is untouched, the sameSemantics memo answers
+    within a scope, and each scope releases only its own streams on
+    exit."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from mongo2pq_spark.operators.cache import (
+        _LIVE_CACHES,
+        _MAX_LIVE,
+        cache_scope,
+        cache_stream,
+        evicted_unmaterialized_count,
+        pin,
+        release_caches,
+    )
+
+    release_caches()
+    outside = cache_stream(spark.range(5).select("id"))
+    base = evicted_unmaterialized_count()
+    barrier = threading.Barrier(2, timeout=120)
+
+    def work(tag: int) -> None:
+        with cache_scope():
+            frames = [
+                cache_stream(spark.range(100 * tag + i).select("id"))
+                for i in range(_MAX_LIVE + 2)
+            ]
+            frames.append(pin(spark.range(7 + tag).select("id")))
+            assert cache_stream(
+                spark.range(100 * tag).select("id")
+            ) is frames[0]
+            barrier.wait()  # both scopes are full at the same time
+            assert all(f.is_cached for f in frames)
+            barrier.wait()  # neither released before both checked
+        assert not any(f.is_cached for f in frames)
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [pool.submit(work, tag) for tag in (1, 2)]
+    for future in futures:
+        future.result()  # re-raises a failed assertion in the thread
+    assert evicted_unmaterialized_count() == base
+    assert len(_LIVE_CACHES) == 1 and _LIVE_CACHES[0] is outside
+    assert outside.is_cached
+    release_caches()
+
+
 def test_minhash_estimate_self_join_reuses_exchange(spark, sf_dir):
     """minhash_jaccard_estimates stays persist-free: its two self-join
     sides are the identical banded-signature plan and the runtime
@@ -907,6 +957,45 @@ def test_lsh_arrow_assignment_bit_identical_to_hof_fold(spark):
         for r in lsh_bucket_assignments(emb, n_planes, dim, seed).collect()
     )
     assert got_single == ref_single
+
+
+def test_lsh_assignment_sliced_batch_nulls_outside_slice(spark, monkeypatch):
+    """A sliced Arrow batch shares its child values array with the
+    rows outside the slice. A null element there is not this batch's:
+    the assignment must bucket the slice exactly as the same rows in
+    an unsliced batch (it used to raise "null vector/element"). A null
+    element inside the slice still raises."""
+    import pyarrow as pa
+    import pytest
+
+    from mongo2pq_spark.operators.similarity import lsh_multi_assignments
+
+    captured = []
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    monkeypatch.setattr(
+        type(emb),
+        "mapInArrow",
+        lambda self, fn, schema, *a, **k: captured.append(fn) or self,
+    )
+    lsh_multi_assignments(emb, n_tables=3, n_hyperplanes=4, dim=2)
+    (assign,) = captured
+    vec_type = pa.list_(pa.float32())
+
+    def batch(ids, vecs):
+        return pa.record_batch(
+            [pa.array(ids, pa.int64()), pa.array(vecs, vec_type)],
+            names=["vec_id", "embedding"],
+        )
+
+    sliced = batch([0, 1, 2], [[None, 1.0], [1.0, -2.0], [-3.0, 4.0]]).slice(1)
+    whole = batch([1, 2], [[1.0, -2.0], [-3.0, 4.0]])
+    got = pa.Table.from_batches(list(assign(iter([sliced]))))
+    want = pa.Table.from_batches(list(assign(iter([whole]))))
+    assert got.num_rows == 2 * 3
+    assert got.to_pylist() == want.to_pylist()
+    bad = batch([0, 1, 2], [[0.0, 1.0], [1.0, None], [-3.0, 4.0]]).slice(1)
+    with pytest.raises(ValueError, match="null vector/element"):
+        list(assign(iter([bad])))
 
 
 def test_cap_buckets_drops_broadcast_hint_on_degenerate_corpus(spark):

@@ -1096,7 +1096,8 @@ def parse_args(argv: list[str] | None = None) -> Namespace | None:
                         default=128 * 1024 * 1024,
                         help="mongodump files larger than this many bytes "
                              "read as multiple byte-range partitions "
-                             "(parallel scan of one huge export); 0 "
+                             "(parallel scan of one huge export; every "
+                             "file starts a partition of its own); 0 "
                              "disables splitting")
     parser.add_argument("--on-nested", default="skip",
                         choices=("skip", "raise", "flatten"),

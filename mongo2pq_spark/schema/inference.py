@@ -51,6 +51,10 @@ def cast_from_string(value: str) -> PythonPrimitive:
         return True
     if lowered in ("false", "no"):
         return False
+    # a letter can start only "nan"/"inf"/"infinity" among the three
+    # parsers' inputs: skip three raised ValueErrors per plain word
+    if value[:1].isalpha() and value[0] not in "nNiI":
+        return value
     for parser in (int, float, datetime.fromisoformat):
         try:
             return parser(value)  # type: ignore[operator]
@@ -133,8 +137,22 @@ def infer_fields_from_rows(
     on_nested: str = "raise",
 ) -> dict[str, pa.DataType]:
     """Fold the single-value rule over a batch of rows, unifying
-    conflicts through the lattice. Missing keys are simply absent (the
-    reference drops schema-absent keys at export; SURVEY O-6).
+    conflicts through the lattice (``FieldInference``). Missing keys
+    are simply absent (the reference drops schema-absent keys at
+    export; SURVEY O-6)."""
+    inference = FieldInference(now, on_nested)
+    for row in rows:
+        for field_name, value in row.items():
+            inference.add(field_name, value)
+    return inference.fields
+
+
+class FieldInference:
+    """The single-value rule folded over values one at a time, so a
+    caller that walks its own documents infers in the same loop.
+
+    ``now`` anchors the epoch heuristic once for the whole fold (the
+    wall clock at construction when not injected).
 
     ``on_nested`` controls the flat-schema boundary (the reference
     fails outright on any dict/list value, schema.py:331-335):
@@ -143,37 +161,47 @@ def infer_fields_from_rows(
     falls under the schema-absent-keys-dropped-at-export rule, so a
     real mongoexport with subdocuments still loads (documented
     divergence, logged once per field)."""
-    if on_nested not in ("raise", "skip"):
-        raise ValueError(f"on_nested must be 'raise' or 'skip', got {on_nested!r}")
-    fields: dict[str, pa.DataType] = {}
-    poisoned: set[str] = set()
-    for row in rows:
-        for field_name, value in row.items():
-            # None and "" carry no type signal: both are suppressed to
-            # null at export (falsy-drop, SURVEY O-7), so they must not
-            # drag a column to `string` during inference either.
-            if value is None or (isinstance(value, str) and value == ""):
-                continue
-            if field_name in poisoned:
-                continue
-            try:
-                inferred = infer_type(value, field_name, now=now)
-            except NestedValueError:
-                if on_nested == "raise":
-                    raise
-                # a field with ANY nested value can't be delivered under
-                # a scalar type (other rows' scalars would coexist with
-                # dicts) — drop the whole field, not just this value
-                poisoned.add(field_name)
-                fields.pop(field_name, None)
-                _warn_nested_skipped(field_name)
-                continue
-            known = fields.get(field_name)
-            if known is None:
-                fields[field_name] = inferred
-            elif not known.equals(inferred):
-                fields[field_name] = unify_types(known, inferred)
-    return fields
+
+    def __init__(self, now: datetime | None = None, on_nested: str = "raise"):
+        if on_nested not in ("raise", "skip"):
+            raise ValueError(
+                f"on_nested must be 'raise' or 'skip', got {on_nested!r}"
+            )
+        self.now = now or datetime.now()
+        self.on_nested = on_nested
+        #: field → unified type, in first-seen order
+        self.fields: dict[str, pa.DataType] = {}
+        self._poisoned: set[str] = set()
+
+    def add(self, field_name: str, value: Any) -> pa.DataType | None:
+        """Fold one value into its field. Returns the value's own
+        inferred type, or None when it carries no type signal or its
+        field is dropped as nested."""
+        # None and "" carry no type signal: both are suppressed to
+        # null at export (falsy-drop, SURVEY O-7), so they must not
+        # drag a column to `string` during inference either.
+        if value is None or (isinstance(value, str) and value == ""):
+            return None
+        if field_name in self._poisoned:
+            return None
+        try:
+            inferred = infer_type(value, field_name, now=self.now)
+        except NestedValueError:
+            if self.on_nested == "raise":
+                raise
+            # a field with ANY nested value can't be delivered under
+            # a scalar type (other rows' scalars would coexist with
+            # dicts) — drop the whole field, not just this value
+            self._poisoned.add(field_name)
+            self.fields.pop(field_name, None)
+            _warn_nested_skipped(field_name)
+            return None
+        known = self.fields.get(field_name)
+        if known is None:
+            self.fields[field_name] = inferred
+        elif not known.equals(inferred):
+            self.fields[field_name] = unify_types(known, inferred)
+        return inferred
 
 
 def _warn_nested_skipped(field_name: str) -> None:

@@ -1,27 +1,30 @@
-"""Python DataSource (Spark 4 API) for MongoDB extended-JSON dumps.
+"""MongoDB extended-JSON dumps: the JVM scan behind ``read_mongodump``,
+and a Spark-4 Python DataSource for interchange.
 
 ``mongoexport`` / ``mongodump --jsonArray``-style line-delimited
 extended JSON is the standard OFFLINE interchange for Mongo
 collections — the file-based stand-in for the live connector path
 (``sources/mongo.py``), and the same decode surface the reference
-implements per-row over BSON (``/root/reference/mongo2pq/schema.py:110-164``:
-ObjectId→str, datetime→timestamp, numeric casts).
-
-This source registers as ``spark.read.format("mongodump")`` and
-unwraps the extended-JSON type wrappers:
+implements per-row over BSON (the reference's ``schema.py:110-164``:
+ObjectId→str, datetime→timestamp, numeric casts). The extended-JSON
+type wrappers unwrap as:
 
 - ``{"$oid": "..."}``        → string (24-hex ObjectId)
 - ``{"$date": "ISO-8601"}``  → timestamp (also ``{"$date": {"$numberLong": ms}}``)
 - ``{"$numberLong"/"$numberInt"/"$numberDouble": "n"}`` → numeric
 
-Scale shape: one input partition per dump file, and files larger than
-``splitsize`` (default 128 MB) further split into BYTE-RANGE
-partitions via the newline-delimited split protocol (``partitions()``)
-— a sharded export parallelizes across executors AND a single huge
-mongoexport is no longer a 1-task read; rows stream through
-``json.loads`` line-at-a-time (bounded memory). This is deliberately
-the Python slow path — the API-surface demonstration for sources Spark
-has no native reader for; live collections use the JVM connector.
+``read_mongodump`` (and so ``cli.main --source-format mongodump``)
+peeks a sample on the driver in Python, then decodes the whole dump in
+the JVM: ``spark.read.text`` splits the files (one partition per file,
+files larger than ``split_size`` in byte ranges), one ``from_json``
+parses each line, and Catalyst unwraps the wrappers and checks each
+line. No Python runs per line.
+
+``spark.read.format("mongodump")`` is the explicit-schema Python
+DataSource: its reader decodes line by line through the same
+``_decode_line`` the peek uses (the export round trip reads back
+through it), and its writer is the mongoexport side of the
+interchange.
 """
 
 from __future__ import annotations
@@ -30,8 +33,10 @@ import json
 import os
 import uuid
 from datetime import datetime, timezone
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -39,7 +44,6 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StringType
 
 
 def unwrap_extended_json(value):
@@ -99,25 +103,63 @@ def flatten_doc(doc: dict, sep: str = ".") -> dict:
     skip rule this emits no warning: flatten runs per-line inside
     executors, where a per-row warning would be noise at scale. The
     behavior is pinned by ``tests/test_mongodump.py``."""
-    out: dict = {}
-    for k, v in doc.items():
-        if isinstance(v, dict):
-            for sk, sv in flatten_doc(v, sep).items():
-                out[f"{k}{sep}{sk}"] = sv
+    return {sep.join(path): v for path, v in _leaves(doc, True)}
+
+
+#: the extended-JSON type wrappers, in the order
+#: ``unwrap_extended_json`` tests them
+_WRAPPERS = ("$oid", "$date", "$numberLong", "$numberInt", "$numberDouble")
+
+
+def _wrapper_key(value: dict) -> str | None:
+    for key in _WRAPPERS:
+        if key in value:
+            return key
+    return None
+
+
+def _leaves(doc: dict, flatten: bool, prefix: tuple = ()):
+    """``(key path, value)`` per field of ``doc``; with ``flatten`` a
+    subdocument (a dict that is no type wrapper) yields its own fields
+    instead, recursively."""
+    for key, value in doc.items():
+        path = prefix + (key,)
+        if flatten and isinstance(value, dict) and _wrapper_key(value) is None:
+            yield from _leaves(value, True, path)
         else:
-            out[k] = v
-    return out
+            yield path, value
 
 
-def _decode_line(line: str, flatten: bool) -> dict:
-    """json.loads + wrapper unwrap (+ optional subdoc flattening) —
-    the full per-line decode, inside ONE error boundary so permissive
-    mode skips corrupt wrappers exactly like corrupt JSON."""
+def _decode_raw(line: str, flatten: bool) -> tuple[dict, dict | None]:
+    """One ``json.loads`` of a line, still wrapped: ``({name: raw JSON
+    value}, {name: key path})``. Under ``flatten`` the names are dotted
+    paths (last wins on a collision, as in ``flatten_doc``); without it
+    they are the top-level keys and there is no path map."""
     raw = json.loads(line)
     if not isinstance(raw, dict):
         raise ValueError("line is not a JSON object")
-    doc = {k: unwrap_extended_json(v) for k, v in raw.items()}
-    return flatten_doc(doc) if flatten else doc
+    if not flatten:
+        return raw, None
+    raws, paths = {}, {}
+    for path, value in _leaves(raw, True):
+        name = ".".join(path)
+        raws[name], paths[name] = value, path
+    return raws, paths
+
+
+def _unwrap_doc(raws: dict) -> dict:
+    return {
+        k: unwrap_extended_json(v) if type(v) in (dict, list) else v
+        for k, v in raws.items()
+    }
+
+
+def _decode_line(line: str, flatten: bool) -> dict:
+    """The per-line decode: json.loads + wrapper unwrap (+ optional
+    subdoc flattening), as ``{name: unwrapped value}``. Both steps
+    sit inside ONE error boundary (``_DECODE_ERRORS``), so permissive
+    mode skips corrupt wrappers exactly like corrupt JSON."""
+    return _unwrap_doc(_decode_raw(line, flatten)[0])
 
 
 class _DumpFilePartition(InputPartition):
@@ -165,7 +207,7 @@ class MongoDumpReader(DataSourceReader):
         # (name, read as string): a string column takes any scalar
         # as its text, so a field mixing representations still reads
         self._columns = [
-            (f.name, isinstance(f.dataType, StringType)) for f in schema.fields
+            (f.name, isinstance(f.dataType, T.StringType)) for f in schema.fields
         ]
         # intra-file parallelism: files larger than splitsize bytes are
         # read as multiple byte-range partitions (the newline-delimited
@@ -266,25 +308,36 @@ def read_mongodump(
     split_size: int = 128 * 1024 * 1024,
 ):
     """Read an extended-JSON dump as a typed DataFrame, with the
-    engine's OWN schema inference: one sample, one inference, one cast.
+    engine's OWN schema inference: one sample, one inference, one
+    scan, one cast.
 
-    1. **One sample.** Peek up to ``sample_lines`` unwrapped documents
-       driver-side: the dump analog of the reference's ``$sample``
-       phase (``schema.py:219-239``), a bounded read, not a full pass.
-    2. **One inference** over those rows gives two schemas:
+    1. **One sample.** Peek up to ``sample_lines`` documents
+       driver-side, one ``json.loads`` per line: the dump analog of the
+       reference's ``$sample`` phase (``schema.py:219-239``), a bounded
+       read, not a full pass.
+    2. **One inference**, in the same loop, gives two schemas:
 
        - the *typed* fields, by the reference's rules
-         (``infer_fields_from_rows``). A field whose sampled values are
-         raw epoch numbers, possibly mixed with ``$date`` wrappers, is
-         ``timestamp[s]``: both mean "point in time", and the unify
-         lattice alone would degrade the mix to string.
-       - the *read* schema, by each field's JSON-level source type:
-         bool → boolean, int → long, float (or int and float) →
-         double, ``$date`` → timestamp, anything else or a mix →
-         string. For a string column the reader delivers every scalar
-         as text (datetimes in ISO form), so no sampled value can fail
-         the scan.
-    3. **One cast.** ``Schema.apply`` (``schema/model.py``) turns the
+         (``FieldInference`` over the unwrapped values). A field whose
+         sampled values are raw epoch numbers, possibly mixed with
+         ``$date`` wrappers, is ``timestamp[s]``: both mean "point in
+         time", and the unify lattice alone would degrade the mix to
+         string.
+       - the *read* schema, by each field's raw JSON kinds: plain
+         scalars keep their JSON type (bool → boolean, int → long,
+         float or int and float → double, else string); a field that
+         only ever holds wrappers reads as a struct of the wrapper keys
+         sampled in it (``struct<$oid: string>``) and is unwrapped in
+         Catalyst (ISO ``$date`` →
+         timestamp, ``{"$date": {"$numberLong": ms}}`` → timestamp
+         from millis, ``$numberLong``/``$numberInt`` → long,
+         ``$numberDouble`` → double, or their text when the wrappers
+         mix); a field mixing wrappers and scalars reads as string,
+         each wrapper as its unwrapped text (datetimes in ISO form).
+    3. **One scan.** ``spark.read.text`` and ONE ``from_json`` per
+       line; the wrapper unwrap and the per-line check below run in
+       the same projection, in the JVM.
+    4. **One cast.** ``Schema.apply`` (``schema/model.py``) turns the
        read types into the typed fields in one Catalyst projection:
        quoted scalars ("yes", "12", ISO strings) parse, and raw epoch
        numbers become timestamps, as the reference's
@@ -303,20 +356,58 @@ def read_mongodump(
     holding an EMPTY subdocument (``{"a": {}}``) flattens to nothing
     and is absent from the inferred schema — see ``flatten_doc``.
 
-    ``mode``: ``failfast`` (default) dies on the first malformed line
-    — corrupt JSON or a corrupt type wrapper like
-    ``{"$numberLong": "x"}`` — with file:line context; ``permissive``
-    skips such lines in both the driver-side sample and the
-    distributed read: at scale one corrupt export line must not fail
-    the whole job. (The driver-side sample reports file:line; the
-    distributed read reports file:byte-offset — splits don't know
-    their global line number.)
+    ``mode``: a line is bad when it is malformed JSON, is not a JSON
+    object, holds a type wrapper with an invalid payload (like
+    ``{"$numberLong": "x"}``) in any field, read or not, or holds a
+    value of another JSON type than the peek saw for a read field
+    (``{"n": "abc"}`` after int ``n`` values). ``failfast`` (default)
+    dies on the first bad line; ``permissive`` skips bad lines in both
+    the driver-side sample and the distributed read: at scale one
+    corrupt export line must not fail the whole job. The sample
+    reports file:line; the distributed read names the file and the
+    byte range of the split holding the line (a split does not know
+    its global line number).
 
     ``split_size``: files larger than this many bytes are read as
-    multiple byte-range partitions (newline-delimited split protocol),
-    so ONE huge mongoexport still parallelizes across executors —
-    without it the file-per-partition layout makes it a 1-task read.
-    0 disables splitting.
+    multiple byte-range partitions (Spark's newline-delimited split
+    protocol), so ONE huge mongoexport still parallelizes across
+    executors; every file starts a partition of its own. 0 disables
+    splitting. Spark takes the split size from the session, not the
+    read, so the scan runs in a child session (``spark.newSession()``
+    with the caller's runtime conf) and the caller's
+    ``spark.sql.files.*`` settings are left alone.
+
+    Where the JVM scan delivers other values than the Python decode
+    (``_decode_line`` and ``_field_value``), all of them outside the
+    documents ``mongoexport`` writes:
+
+    - in a string column, a bool reads ``true``/``false`` (Python
+      ``str()``: ``True``/``False``), a float reads in Java's form
+      (``1.0E20``, Python ``1e+20``), and a subdocument or list reads
+      as its compact JSON text;
+    - in a field mixing wrappers with plain scalars, a
+      ``$numberLong``/``$numberDouble`` reads as its payload text as
+      written (Python: ``"0012"`` → ``12``), a ``$date`` with a UTC
+      offset as the UTC wall time, and a string whose text is itself
+      a compact wrapper (``'{"$oid":"x"}'``) is unwrapped;
+    - a wrapper past the peek in a field sampled with strings only
+      reads as its compact JSON text; past the peek in a field
+      sampled with other plain scalars only, or another wrapper key
+      or a plain scalar in a wrapper-only field, makes its line bad;
+    - a line with trailing garbage after its object parses;
+    - the wrapper check accepts the payloads Spark's casts parse:
+      integer ``$numberLong``/``$numberInt`` text or JSON integers,
+      decimal or NaN/Infinity ``$numberDouble`` text or JSON numbers,
+      ``YYYY-MM-DD[Thh:mm[:ss[.f]]][Z|±hh[:mm]]`` or at most 15-digit
+      millis for ``$date``. Python also takes ``"1_000"``, a
+      fractional JSON number in ``$numberLong`` and compact ISO forms,
+      and takes millis up to year 9999 only; Python checks only the
+      first wrapper key of an object, the JVM every one;
+    - under ``flatten``, a key holding a subdocument in some sampled
+      lines and a scalar in others reads as the scalar column, its
+      dotted fields dropped with a warning; a literal dotted key
+      colliding with a flattened path takes the value of the path
+      the sample saw first when a line holds both.
     """
     return read_mongodump_fields(
         spark, path, sample_lines, on_nested, mode, split_size
@@ -328,83 +419,351 @@ def read_mongodump_fields(spark, path, sample_lines, on_nested, mode, split_size
     type) its inference produced. Types such as ``timestamp[s]`` and
     ``date64`` do not survive a round trip through the frame's Spark
     types, so the map is handed over rather than re-derived."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    from mongo2pq_spark.schema.inference import (
-        infer_fields_from_rows,
-        is_epoch_timestamp,
-    )
     from mongo2pq_spark.schema.model import Schema
 
     if on_nested not in ("raise", "skip", "flatten"):
         raise ValueError(
             f"on_nested must be 'raise', 'skip' or 'flatten', got {on_nested!r}"
         )
+    if mode not in ("failfast", "permissive"):
+        raise ValueError(f"mongodump mode must be failfast or permissive, got {mode!r}")
     flatten = on_nested == "flatten"
-    rows = []
-    for fp in _dump_files(path):
-        if len(rows) >= sample_lines:
-            break
+    files = _dump_files(path)
+    fields, reads = _peek(files, sample_lines, flatten, on_nested, mode)
+    scan = _scan(spark, files, reads, mode, split_size)
+    return Schema(os.path.basename(path), fields).apply(scan), fields
+
+
+def _sample(files, sample_lines, flatten, mode):
+    """Yield the first ``sample_lines`` documents, each as ``(raw
+    values, unwrapped values, key paths)`` (see ``_decode_raw``); a bad
+    line raises with file:line context, or is skipped under
+    permissive."""
+    n = 0
+    for fp in files:
         with open(fp, encoding="utf-8") as fh:
             for lineno, line in enumerate(fh, start=1):
                 line = line.strip()
                 if not line:
                     continue
                 try:
-                    rows.append(_decode_line(line, flatten))
+                    raws, paths = _decode_raw(line, flatten)
+                    values = _unwrap_doc(raws)
                 except _DECODE_ERRORS as exc:
                     if mode == "permissive":
                         continue
                     raise ValueError(
                         f"malformed extended-JSON at {fp}:{lineno}: {exc}"
                     ) from exc
-                if len(rows) >= sample_lines:
-                    break
-    if not rows:
-        raise ValueError(f"mongodump at {path!r} contains no documents")
+                yield raws, values, paths
+                n += 1
+                if n >= sample_lines:
+                    return
+    if not n:
+        raise ValueError(f"mongodump at {files!r} contains no documents")
+
+
+#: the read type of a field by the Python types of its sampled
+#: (unwrapped) values; any other mix reads as string
+_READ_TYPES = {
+    frozenset({bool}): T.BooleanType(),
+    frozenset({int}): T.LongType(),
+    frozenset({float}): T.DoubleType(),
+    frozenset({int, float}): T.DoubleType(),
+    frozenset({datetime}): T.TimestampType(),
+}
+
+#: the Python type each wrapper unwraps to
+_UNWRAPPED = {
+    "$oid": str, "$date": datetime, "$numberLong": int, "$numberInt": int,
+    "$numberDouble": float,
+}
+
+#: the kind of a raw JSON number the epoch heuristic types timestamp[s]
+_EPOCH_KINDS = {int: "epoch int", float: "epoch float"}
+_EPOCH_TYPES = {kind: t for t, kind in _EPOCH_KINDS.items()}
+
+
+class _Read(NamedTuple):
+    """How the scan reads one field."""
+
+    #: key paths into the parsed document (more than one only when
+    #: flattened names collide)
+    paths: list
+    #: the type the scan delivers
+    type: T.DataType
+    #: the wrapper keys sampled in the field
+    wrappers: frozenset
+    #: whether plain JSON scalars were sampled in it too
+    plain: bool
+
+
+def _peek(files, sample_lines, flatten, on_nested, mode):
+    """Infer the typed fields and plan the read of each, in one loop
+    over the sample. Returns ``fields`` and ``{name: _Read}``."""
+    import pyarrow as pa
+
+    from mongo2pq_spark.schema.inference import FieldInference
+
+    epoch = pa.timestamp("s")
     # flatten already removed subdocs; remaining nested values (lists,
     # or subdocs under skip/raise) go through the requested rule
-    fields = infer_fields_from_rows(
-        rows, on_nested="skip" if flatten else on_nested
-    )
-
-    def _is_raw_epoch(v) -> bool:
-        return (
-            isinstance(v, (int, float))
-            and not isinstance(v, bool)
-            and is_epoch_timestamp(v)
-        )
-
-    read_types = {
-        frozenset({bool}): T.BooleanType(),
-        frozenset({int}): T.LongType(),
-        frozenset({float}): T.DoubleType(),
-        frozenset({int, float}): T.DoubleType(),
-        frozenset({datetime}): T.TimestampType(),
-    }
-    read_schema = T.StructType()
-    for name in list(fields):
-        vals = [r.get(name) for r in rows if r.get(name) is not None]
+    inference = FieldInference(on_nested="skip" if flatten else on_nested)
+    # name → the kinds of its values: a wrapper key, an epoch kind, or
+    # the JSON value's Python type
+    kinds: dict[str, set] = {}
+    # name → key paths (dict as an ordered set), under flatten only
+    name_paths: dict[str, dict] = {}
+    for raws, values, paths in _sample(files, sample_lines, flatten, mode):
+        for name, value in values.items():
+            inferred = inference.add(name, value)
+            if value is None:
+                continue
+            raw = raws[name]
+            kind = type(raw)
+            if kind is dict:
+                kind = _wrapper_key(raw)
+            elif kind in _EPOCH_KINDS and inferred == epoch:
+                kind = _EPOCH_KINDS[kind]
+            seen = kinds.get(name)
+            if seen is None:
+                seen = kinds[name] = set()
+            seen.add(kind)
+            if paths is not None:
+                name_paths.setdefault(name, {})[paths[name]] = None
+    fields = inference.fields
+    reads = {}
+    for name in fields:
+        seen = kinds[name]
         # decided from ALL sampled values, not the first: raw epoch
         # numbers mixed with $date wrappers are one point-in-time field
-        if any(_is_raw_epoch(v) for v in vals) and all(
-            _is_raw_epoch(v) or isinstance(v, datetime) for v in vals
-        ):
-            fields[name] = pa.timestamp("s")
-        kinds = frozenset(map(type, vals))
-        read_schema.add(name, read_types.get(kinds, T.StringType()))
-    register_mongodump_source(spark)
-    scan = (
-        spark.read.format("mongodump")
-        .schema(read_schema)
-        .option("path", path)
-        .option("mode", mode)
-        .option("flatten", "true" if flatten else "false")
-        .option("splitsize", str(split_size))
-        .load()
+        if seen & _EPOCH_TYPES.keys() and seen <= _EPOCH_TYPES.keys() | {"$date"}:
+            fields[name] = epoch
+        wrappers = frozenset(seen & _UNWRAPPED.keys())
+        plain = seen - wrappers
+        types = frozenset(
+            [_UNWRAPPED[k] for k in wrappers] + [_EPOCH_TYPES.get(k, k) for k in plain]
+        )
+        read = _READ_TYPES.get(types, T.StringType())
+        if wrappers and plain:
+            read = T.StringType()  # wrappers mixed with plain scalars: text
+        paths = list(name_paths[name]) if flatten else [(name,)]
+        reads[name] = _Read(paths, read, wrappers, bool(plain))
+    # under flatten a key can be a scalar in one line and a subdocument
+    # in another; the read schema holds one of them, the scalar
+    leaves = {p for read in reads.values() for p in read.paths}
+    for name, read in list(reads.items()):
+        if any(p[:i] in leaves for p in read.paths for i in range(1, len(p))):
+            del reads[name], fields[name]
+            _warn_shadowed(name)
+    return fields, reads
+
+
+def _warn_shadowed(name: str) -> None:
+    import logging
+
+    logging.getLogger(__name__).warning(
+        "Field %r lies under a key that also holds scalars; dropped "
+        "from the flattened schema", name,
     )
-    return Schema(os.path.basename(path), fields).apply(scan), fields
+
+
+#: from_json's column for a line it cannot parse
+_CORRUPT = "_corrupt_record"
+
+#: a wrapper as from_json renders it into a string column:
+#: ``{"$key":payload}``, the payload unquoted (group 1)
+_WRAPPER_TEXT = r'^\{"\$(?:oid|date|numberLong|numberInt|numberDouble)":"?(.*?)"?\}$'
+
+_INT = r'"\s*[+-]?\d+\s*"|-?\d+\s*[,}\]]'
+_DOUBLE = (
+    r'"\s*[+-]?(?:(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?|(?i:nan|inf|infinity))\s*"'
+    r"|-?\d"
+)
+_DATE = (
+    r'"\d{4}-\d{2}-\d{2}(?:[T ]\d{2}:\d{2}(?::\d{2}(?:\.\d+)?)?)?'
+    r'(?:Z|[+-]\d{2}(?::?\d{2})?)?"'
+    r'|\{\s*"\$numberLong"\s*:\s*(?:"[+-]?\d{1,15}"|-?\d{1,15})\s*\}'
+)
+#: a type wrapper with an invalid payload, anywhere in a raw line. The
+#: alternatives share the literal ``"$`` prefix, so the scan tests
+#: them only where a ``"$`` occurs. The blanks before a payload are
+#: matched possessively, or the lookahead would test from inside them.
+_BAD_WRAPPER = (
+    r'"\$(?:number(?:Long|Int)"\s*:\s*+(?!' + _INT + r")"
+    r'|numberDouble"\s*:\s*+(?!' + _DOUBLE + r")"
+    r'|date"\s*:\s*+(?!' + _DATE + r"))"
+)
+
+
+def _scan(spark, files, reads, mode, split_size):
+    """The distributed read: one ``from_json`` per line against the
+    read schema, the unwrap, and the per-line check folded into the
+    one column that keeps or drops (or fails on) the line. The
+    expressions are SQL text: one call builds a projection, where
+    Column objects would cost a py4j round trip per operator."""
+    tree: dict = {}
+    for read in reads.values():
+        for path in read.paths:
+            node = tree
+            for key in path[:-1]:
+                node = node.setdefault(key, {})
+            node[path[-1]] = (
+                T.StructType([
+                    T.StructField(k, T.StringType())
+                    for k in _WRAPPERS if k in read.wrappers
+                ])
+                if read.wrappers and not read.plain
+                else read.type
+            )
+    schema = _struct(tree).add(_CORRUPT, T.StringType())
+    session = _split_session(
+        spark, split_size or max(map(os.path.getsize, files)) + 1
+    )
+    parsed = session.read.text(files).select(
+        "value",
+        "_metadata",
+        F.from_json(
+            "value", schema,
+            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": _CORRUPT},
+        ).alias("doc"),
+    )
+    # values as _v<i>, and _w<i> for whether a wrapper-only field holds
+    # a wrapper: one projection over the parsed struct
+    checked, drift = [], []
+    for i, read in enumerate(reads.values()):
+        cols = [_name("doc", *path) for path in read.paths]
+        if read.wrappers and not read.plain:
+            value = ", ".join(_unwrap(c, read) for c in cols)
+            checked.append(
+                " OR ".join(f"{c} IS NOT NULL" for c in cols) + f" AS _w{i}"
+            )
+            # a wrapper the field's type cannot take: drift past the peek
+            drift.append(f" OR (_w{i} AND _v{i} IS NULL)")
+        elif read.wrappers:
+            value = ", ".join(map(_text, cols))
+        else:
+            value = ", ".join(cols)
+        checked.append(f"coalesce({value}) AS _v{i}")
+    checked = parsed.selectExpr(
+        *checked,
+        "doc IS NULL AS _blank",
+        f"doc.{_CORRUPT} IS NOT NULL OR value RLIKE {_raw(_BAD_WRAPPER)} AS _bad",
+        "value",
+        "_metadata",
+    )
+    bad = "_bad" + "".join(drift)
+    # the keep/drop decision is an explode over a 0- or 1-element
+    # array, not a filter: a filter on the parsed columns would be
+    # pushed below the projection and parse every line again. The
+    # exploded expression must not be a bare column, or Spark infers
+    # that filter itself.
+    if mode == "permissive":
+        keep = f"CASE WHEN NOT _blank AND NOT ({bad}) THEN array(1) END"
+    else:
+        keep = (
+            f"CASE WHEN _blank THEN NULL WHEN {bad} THEN raise_error(concat("
+            "'malformed extended-JSON in ', _metadata.file_path, ':bytes ', "
+            "CAST(_metadata.file_block_start AS STRING), '-', "
+            "CAST(_metadata.file_block_start + _metadata.file_block_length "
+            "AS STRING), ': ', substr(value, 1, 200))) ELSE array(1) END"
+        )
+    return checked.selectExpr(
+        *(f"_v{i} AS {_name(name)}" for i, name in enumerate(reads)),
+        f"explode({keep}) AS _keep",
+    ).drop("_keep")
+
+
+def _struct(tree: dict) -> T.StructType:
+    return T.StructType([
+        T.StructField(k, _struct(v) if isinstance(v, dict) else v)
+        for k, v in tree.items()
+    ])
+
+
+def _split_session(spark, split_bytes: int):
+    """A child session of ``spark``'s context carrying its runtime conf,
+    whose file scans split at ``split_bytes`` and start a partition
+    per file (open cost = split size)."""
+    session = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            session.conf.set(key, value)
+    session.conf.set("spark.sql.files.maxPartitionBytes", str(split_bytes))
+    session.conf.set("spark.sql.files.openCostInBytes", str(split_bytes))
+    return session
+
+
+def _name(*parts: str) -> str:
+    """A SQL reference to a (nested) column, every part quoted."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+
+
+def _raw(pattern: str) -> str:
+    """A regex as a SQL raw string literal."""
+    assert "'" not in pattern
+    return f"r'{pattern}'"
+
+
+def _date_value(text: str) -> str:
+    """A ``$date`` payload as from_json reads it (ISO-8601 text, or the
+    JSON text of ``{"$numberLong": ms}``) as a timestamp."""
+    millis = f"try_cast(regexp_extract({text}, {_raw(r'-?[0-9]+')}, 0) AS BIGINT)"
+    return (
+        f"CASE WHEN startswith({text}, '{{') "
+        f"THEN timestamp_micros(try_multiply({millis}, 1000)) "
+        f"ELSE try_cast({text} AS TIMESTAMP) END"
+    )
+
+
+def _iso(ts: str) -> str:
+    """``datetime.isoformat()`` of a naive timestamp: the fraction only
+    when there are microseconds."""
+    return (
+        f"regexp_replace(date_format({ts}, 'yyyy-MM-dd\\'T\\'HH:mm:ss.SSSSSS'), "
+        f"{_raw(r'[.]000000$')}, '')"
+    )
+
+
+def _unwrap(wrapper: str, read: _Read) -> str:
+    """A wrapper-only field's value as its read type, from the wrapper
+    keys its sample held (another key reads NULL: drift)."""
+    keys = [k for k in _WRAPPERS if k in read.wrappers]
+    date = _date_value(f"{wrapper}.`$date`")
+    number = "try_cast(coalesce({}) AS BIGINT)".format(", ".join(
+        f"{wrapper}.`{k}`" for k in keys if k in ("$numberLong", "$numberInt")
+    ))
+    double = f"try_cast({wrapper}.`$numberDouble` AS DOUBLE)"
+    if isinstance(read.type, T.TimestampType):
+        return date
+    if isinstance(read.type, T.LongType):
+        return number
+    if isinstance(read.type, T.DoubleType):
+        if keys == ["$numberDouble"]:
+            return double
+        return f"coalesce(CAST({number} AS DOUBLE), {double})"
+    text = {
+        "$oid": f"{wrapper}.`$oid`",
+        "$date": _iso(date),
+        "$numberLong": f"CAST({number} AS STRING)",
+        "$numberInt": f"CAST({number} AS STRING)",
+        "$numberDouble": f"CAST({double} AS STRING)",
+    }
+    return "coalesce({})".format(", ".join(dict.fromkeys(text[k] for k in keys)))
+
+
+def _text(col: str) -> str:
+    """The value of a field mixing wrappers with plain scalars, read as
+    string: from_json renders an object there as its compact JSON
+    text, so a wrapper reads as its payload text, a ``$date`` in ISO
+    form."""
+    payload = f"regexp_extract({col}, {_raw(_WRAPPER_TEXT)}, 1)"
+    return (
+        f"CASE WHEN NOT startswith({col}, '{{\"$') THEN {col} "
+        f"WHEN startswith({col}, '{{\"$date\"') THEN {_iso(_date_value(payload))} "
+        f"WHEN {col} RLIKE {_raw(_WRAPPER_TEXT)} THEN {payload} "
+        f"ELSE {col} END"
+    )
 
 
 # -- writer: the mongoexport side of the interchange ------------------------

@@ -707,3 +707,195 @@ def test_cli_mongodump_infers_once_from_the_samples_peek(
     assert fields == {"n": pa.int32()}
     assert sorted(r["n"] for r in rows) == list(range(20))
     assert all("late" not in r.asDict() for r in rows)
+
+
+# -- the JVM scan: one text scan, one from_json, the per-line checks kept --
+
+#: plan nodes that would mean a Python worker touches every line; a
+#: Python data source scan prints as ``BatchScan <name>[...] (Python)``
+PYTHON_NODES = (
+    "BatchEvalPython", "ArrowEvalPython", "MapInArrow", "MapInPandas",
+    "(Python)",
+)
+
+
+def _executed_plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+
+
+def test_scan_plan_has_no_python_node_and_one_from_json(spark, dump_path):
+    """The executed plan of ``read_mongodump`` decodes in the JVM: no
+    Python node, and exactly one ``from_json`` — a filter on the parsed
+    struct would be pushed below the projection and parse again."""
+    for kwargs in ({}, {"on_nested": "flatten"}, {"mode": "permissive"}):
+        plan = _executed_plan(read_mongodump(spark, dump_path, **kwargs))
+        assert [n for n in PYTHON_NODES if n in plan] == [], plan
+        assert plan.count("from_json(") == 1, plan
+
+
+def test_cli_never_plans_the_python_reader(spark, tmp_path, monkeypatch):
+    """``cli.main --source-format mongodump`` plans no read of the
+    Python ``mongodump`` DataSource."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    real_format = DataFrameReader.format
+
+    def format(self, source):
+        assert source != "mongodump", "Python reader planned on the EL path"
+        return real_format(self, source)
+
+    monkeypatch.setattr(DataFrameReader, "format", format)
+    docs = [{"_id": {"$oid": f"{i:024x}"}, "n": i} for i in range(12)]
+    _, rows = _cli_dump(spark, tmp_path, "jvm", docs, split_size=64)
+    assert sorted(r["n"] for r in rows) == list(range(12))
+
+
+def test_split_size_leaves_the_caller_conf_alone(spark, tmp_path):
+    """Spark takes the split size from the session, so the scan splits
+    in a child session: the read splits, and the caller's
+    ``spark.sql.files.*`` values are the same afterwards."""
+    from pyspark.sql import functions as F
+
+    def files_conf():
+        conf = spark.conf.getAll
+        return {k: v for k, v in conf.items() if k.startswith("spark.sql.files.")}, [
+            spark.conf.get(k)
+            for k in (
+                "spark.sql.files.maxPartitionBytes",
+                "spark.sql.files.openCostInBytes",
+            )
+        ]
+
+    path = tmp_path / "conf.jsonl"
+    path.write_text(
+        "\n".join(json.dumps({"n": i, "pad": "x" * 20}) for i in range(400)) + "\n"
+    )
+    before = files_conf()
+    df = read_mongodump(spark, str(path), split_size=512)
+    parts = df.select(F.spark_partition_id()).distinct().count()
+    assert df.count() == 400
+    assert parts > 10
+    assert files_conf() == before
+
+
+def test_drifted_json_type_past_the_peek_marks_its_line_bad(spark, tmp_path):
+    """A value past the peek whose JSON type drifts (``"abc"`` after
+    int ``n`` values) no longer fails the job outright: failfast names
+    the file and the split, permissive skips the line."""
+    docs = [{"n": i} for i in range(20)] + [{"n": "abc"}]
+    path = tmp_path / "drift.jsonl"
+    path.write_text("\n".join(json.dumps(d) for d in docs) + "\n")
+
+    ok = read_mongodump(spark, str(path), sample_lines=10, mode="permissive")
+    assert sorted(r["n"] for r in ok.collect()) == list(range(20))
+
+    with pytest.raises(Exception) as exc:
+        read_mongodump(spark, str(path), sample_lines=10).collect()
+    assert "drift.jsonl:bytes" in str(exc.value)
+
+
+EQUIVALENCE_DOCS = [
+    {
+        "_id": {"$oid": "64b0c0ffee64b0c0ffee0001"},
+        "iso": {"$date": "2024-01-05T10:20:30.123456"},
+        "iso_z": {"$date": "2024-01-05T10:20:30.123Z"},
+        "sub_us": {"$date": "2024-01-05T10:20:30.1234567Z"},
+        "millis": {"$date": {"$numberLong": "1704450030123"}},
+        "long": {"$numberLong": "9007199254740993"},
+        "long_num": {"$numberLong": 12},
+        "int32": {"$numberInt": "-7"},
+        "double": {"$numberDouble": "1.5"},
+        "inf": {"$numberDouble": "Infinity"},
+        "oid_or_long": {"$oid": "abc"},
+        "long_or_double": {"$numberLong": "5"},
+        "epoch": EPOCH_NOW,
+        "epoch_f": EPOCH_NOW + 0.25,
+        "when": EPOCH_NOW,
+        "count": 3,
+        "ratio": 1,
+        "flag": True,
+        "text": "alpha",
+        "mixed": 5,
+        "meta": {"kind": "click", "at": {"$date": "2024-02-01T00:00:00Z"}},
+    },
+    {
+        "_id": {"$oid": "64b0c0ffee64b0c0ffee0002"},
+        "iso": {"$date": "2023-12-31T23:59:59"},
+        "iso_z": {"$date": "2023-12-31T23:59:59Z"},
+        "sub_us": None,
+        "millis": {"$date": {"$numberLong": "-1000"}},
+        "long": {"$numberLong": "-3"},
+        "long_num": None,
+        "int32": {"$numberInt": "2147483647"},
+        "double": {"$numberDouble": "-2.25e3"},
+        "inf": {"$numberDouble": "-Infinity"},
+        "oid_or_long": {"$numberLong": "77"},
+        "long_or_double": {"$numberDouble": "2.5"},
+        "epoch": EPOCH_NOW + 1,
+        "epoch_f": None,
+        "when": {"$date": "2024-01-05T10:20:30.5Z"},
+        "count": None,
+        "ratio": 2.5,
+        "flag": False,
+        "text": "",
+        "mixed": {"$numberLong": "6"},
+        "meta": {"kind": "", "at": {"$date": {"$numberLong": "1706745600000"}}},
+    },
+    {
+        "_id": {"$oid": "64b0c0ffee64b0c0ffee0003"},
+        "when": {"$date": {"$numberLong": "1704450030000"}},
+        "text": None,
+        "mixed": "seven",
+        "meta": {},
+    },
+]
+
+
+def assert_jvm_and_python_are_equal_collect(spark, path, flatten):
+    """Collect the JVM scan once (before the cast) and compare it, row
+    for row, with the pure-Python decode of the same lines
+    (``_decode_line`` + ``_field_value``) under the same read types."""
+    from pyspark.sql import types as T
+
+    from mongo2pq_spark.sources import mongodump
+
+    on_nested = "flatten" if flatten else "skip"
+    _, reads = mongodump._peek([path], 100, flatten, on_nested, "failfast")
+    jvm = mongodump._scan(spark, [path], reads, "failfast", 0).collect()
+    python = []
+    with open(path) as fh:
+        for line in fh:
+            if not line.strip():
+                continue
+            doc = mongodump._decode_line(line, flatten)
+            python.append(tuple(
+                mongodump._field_value(
+                    doc.get(name), isinstance(read.type, T.StringType)
+                )
+                for name, read in reads.items()
+            ))
+    assert [tuple(r) for r in jvm] == python
+    return reads
+
+
+@pytest.mark.parametrize("flatten", [False, True])
+def test_jvm_scan_equals_the_python_decode(spark, tmp_path, flatten):
+    """Every wrapper shape, ``$date`` with and without ``Z`` and past
+    millisecond precision, raw epoch numbers, fields mixing wrappers
+    with scalars, nulls and empty strings, blank lines, and flatten:
+    the JVM scan delivers what the Python decode does."""
+    from pyspark.sql import types as T
+
+    path = tmp_path / "equiv.jsonl"
+    lines = [json.dumps(d) for d in EQUIVALENCE_DOCS]
+    path.write_text(lines[0] + "\n\n" + lines[1] + "\n   \n" + lines[2] + "\n")
+    reads = assert_jvm_and_python_are_equal_collect(spark, str(path), flatten)
+    read_types = {name: read.type for name, read in reads.items()}
+    # the fixture covers each read shape
+    assert isinstance(read_types["when"], T.StringType)  # epoch + $date
+    assert isinstance(read_types["mixed"], T.StringType)  # int + wrapper
+    assert isinstance(read_types["millis"], T.TimestampType)
+    assert isinstance(read_types["oid_or_long"], T.StringType)
+    assert isinstance(read_types["long_or_double"], T.DoubleType)
+    assert ("meta.at" in reads) is flatten

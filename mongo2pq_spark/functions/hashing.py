@@ -51,8 +51,9 @@ def hash64(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10).cast("bigint")
 
 
-def minhash_col(hash_col: Column, a: int, b: int) -> Column:
-    return (hash_col * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)
+def spark_token_hash32(expr: str) -> str:
+    """``token_hash32`` as Spark SQL text (for ``selectExpr``)."""
+    return f"CAST(conv(substring(md5(CAST({expr} AS BINARY)), 1, 8), 16, 10) AS BIGINT)"
 
 
 # -- DuckDB SQL fragments ----------------------------------------------------
@@ -66,4 +67,5 @@ def sql_hash64(expr: str) -> str:
 
 
 def sql_minhash(hash_expr: str, a: int, b: int) -> str:
+    """One MinHash permutation; the same text is valid Spark SQL."""
     return f"(({hash_expr}) * {a} + {b}) % {MERSENNE_P}"

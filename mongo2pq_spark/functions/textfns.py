@@ -58,6 +58,35 @@ def stopword_hits(tokens_col: Column, words: list[str]) -> Column:
     return F.size(F.filter(tokens_col, lambda t: F.array_contains(wordset, t)))
 
 
+# -- Spark SQL text ----------------------------------------------------------
+# The Column forms' arrays from one regex scan, without lambdas (so the
+# projection is generated code), as one selectExpr string instead of a
+# py4j call per Column node.
+
+def spark_ident(name: str) -> str:
+    """A column name as a quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def spark_tokens(expr: str) -> str:
+    """``tokens(expr)``: every maximal run of non-whitespace (Java
+    ``\\S``; ``trim`` strips only spaces, and ``split`` + the empty
+    filter leave exactly these runs)."""
+    return f"regexp_extract_all({expr}, r'\\S+', 0)"
+
+
+def spark_word_shingles(expr: str, n: int = 3) -> str:
+    """``word_shingles(tokens(expr), n)``: whitespace runs collapse to
+    one space, then a lookahead anchored at each token start captures
+    the next ``n`` tokens. Overlapping matches are what the zero-width
+    match buys; texts shorter than ``n`` tokens yield an empty array."""
+    words = " ".join([r"\S+"] * n)
+    return (
+        f"regexp_extract_all(regexp_replace({expr}, r'\\s+', ' '), "
+        f"r'(?<!\\S)(?=({words}))', 1)"
+    )
+
+
 # -- DuckDB SQL fragments ----------------------------------------------------
 
 def sql_tokens(expr: str) -> str:

@@ -27,11 +27,17 @@ from pyspark.sql import functions as F
 
 from mongo2pq_spark.functions.hashing import (
     hash64,
-    minhash_col,
     minhash_perms,
+    spark_token_hash32,
+    sql_minhash,
     token_hash32,
 )
-from mongo2pq_spark.functions.textfns import tokens, word_shingles
+from mongo2pq_spark.functions.textfns import (
+    spark_ident as _q,
+    spark_word_shingles,
+    tokens,
+    word_shingles,
+)
 
 DEFAULT_K = 32          # minhash permutations
 DEFAULT_BANDS = 8       # LSH bands (rows per band = K / BANDS = 4)
@@ -62,57 +68,60 @@ def drop_exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "
     (ties on id broken by a whole-row digest, so the survivor is
     deterministic even with non-unique ids).
 
-    Survivor selection is two-phase: aggregate ``min(struct(id,
-    row_digest))`` per text digest — partial-aggregation-friendly, so a
-    boilerplate text duplicated millions of times combines map-side
-    instead of routing every copy into one straggler task (the skew
-    trap of the row_number-over-digest-partition formulation) — then a
-    multi-key semi-join picks the winning rows back out. A final
-    whole-row dropDuplicates collapses fully-identical copies of a
-    winning row (same id AND same bytes), whose join keys tie; its key
-    is the entire row, so it is skew-free too. Costs one extra shuffle
-    vs the window form; at corpus scale, skew resilience wins.
+    One aggregate per text digest picks the survivor:
+    ``min_by(<row struct>, struct(<id>, <row digest>))``. It runs over
+    one hash shuffle on the digest and combines map-side, so a
+    boilerplate text duplicated millions of times shrinks to one row
+    per task before the shuffle instead of routing every copy into one
+    straggler task (the skew trap of the row_number-over-digest
+    formulation). Fully identical copies of the winning row collapse in
+    the same aggregate. The plan is SQL text: a handful of py4j calls
+    however wide the row.
 
     NULL-text rows pass through UNTOUCHED: a missing text is not a
-    duplicate of anything (and the old digest-equality join silently
-    dropped every such row — r12 fix; callers that want null texts
-    gone should filter explicitly, not lose them to a dedup)."""
-    digest = F.md5(F.col(text_col).cast("binary"))
-    row_digest = F.md5(
-        F.to_json(F.struct(*[F.col(c) for c in df.columns])).cast("binary")
-    )
-    nulls = df.filter(F.col(text_col).isNull())
-    df = df.filter(F.col(text_col).isNotNull())
-    keyed = df.withColumn("__digest", digest).withColumn("__rd", row_digest)
-    winners = (
-        keyed.groupBy("__digest")
-        .agg(F.min(F.struct(F.col(id_col).alias("id"), F.col("__rd").alias("rd"))).alias("w"))
-        .select(
-            F.col("__digest").alias("__wdigest"),
-            F.col("w.id").alias("__wid"),
-            F.col("w.rd").alias("__wrd"),
-        )
-    )
+    duplicate of anything (callers that want null texts gone should
+    filter explicitly, not lose them to a dedup)."""
+    row = "struct(" + ", ".join(_q(c) for c in df.columns) + ")"
+    text = _q(text_col)
+    key = f"struct({_q(id_col)}, md5(CAST(to_json({row}) AS BINARY)))"
     return (
-        keyed.join(
-            winners,
-            (F.col("__digest") == F.col("__wdigest"))
-            & (F.col(id_col) == F.col("__wid"))
-            & (F.col("__rd") == F.col("__wrd")),
-            "left_semi",
-        )
-        .dropDuplicates(["__rd"])
-        .drop("__digest", "__rd")
-        .unionByName(nulls)
+        df.where(f"{text} IS NOT NULL")
+        .groupBy(F.expr(f"md5(CAST({text} AS BINARY))"))
+        .agg(F.expr(f"min_by({row}, {key}) AS __row"))
+        .selectExpr("__row.*")
+        .unionByName(df.where(f"{text} IS NULL"))
     )
 
 
 def _doc_shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(id, h): distinct 32-bit shingle hashes per document."""
-    sh = word_shingles(tokens(F.col(text_col)), n)
+    """(id, h): distinct 32-bit shingle hashes per document.
+
+    The shingles come from one regex scan of the whitespace-collapsed
+    text (``textfns.spark_word_shingles``), the same arrays as
+    ``word_shingles(tokens(text), n)`` without their interpreted
+    lambdas; each distinct shingle hashes to its md5 prefix
+    (``token_hash32``). Built as SQL text, so the whole stream is
+    generated code and costs a few py4j calls to plan."""
+    shingles = spark_word_shingles(_q(text_col), n)
+    return df.selectExpr(
+        _q(id_col), f"explode(array_distinct({shingles})) AS shingle"
+    ).selectExpr(_q(id_col), f"{spark_token_hash32('shingle')} AS h")
+
+
+def _signatures(
+    hashes: DataFrame, id_col: str, k: int, seed: int, extra: str = ""
+) -> DataFrame:
+    """(id, mh0..mh{k-1}[, extra]) from a ``_doc_shingle_hashes``
+    stream: k ``min`` aggregates in one struct, so the aggregation is
+    one SQL expression (and one py4j call), not k Column trees."""
+    mins = ", ".join(
+        f"min({sql_minhash('h', a, b)}) AS mh{i}"
+        for i, (a, b) in enumerate(minhash_perms(k, seed))
+    )
     return (
-        df.select(F.col(id_col), F.explode(F.array_distinct(sh)).alias("shingle"))
-        .select(F.col(id_col), token_hash32(F.col("shingle")).alias("h"))
+        hashes.groupBy(id_col)
+        .agg(F.expr(f"struct({mins}{extra}) AS __sig"))
+        .selectExpr(_q(id_col), "__sig.*")
     )
 
 
@@ -126,13 +135,32 @@ def minhash_signatures(
 ) -> DataFrame:
     """doc → k-wide MinHash signature, computed in a single groupBy
     pass (columns mh0..mh{k-1})."""
-    hashes = _doc_shingle_hashes(df, id_col, text_col, shingle_n)
-    perms = minhash_perms(k, seed)
-    aggs = [
-        F.min(minhash_col(F.col("h"), a, b)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(perms)
-    ]
-    return hashes.groupBy(id_col).agg(*aggs)
+    return _signatures(
+        _doc_shingle_hashes(df, id_col, text_col, shingle_n), id_col, k, seed
+    )
+
+
+def _bands(k: int, bands: int) -> str:
+    """The LSH band rows of a signature as one ``inline`` generator:
+    (band_id, band_hash) per band, band_hash = md5 of the band's
+    comma-joined MinHash values."""
+    rows = k // bands
+    structs = ", ".join(
+        f"named_struct('band_id', {b}, 'band_hash', md5(CAST(concat_ws(',', "
+        + ", ".join(f"mh{b * rows + r}" for r in range(rows))
+        + ") AS BINARY)))"
+        for b in range(bands)
+    )
+    return f"inline(array({structs}))"
+
+
+def minhash_agreement(left: str, right: str, k: int) -> str:
+    """SQL count of the MinHash components two signatures share;
+    ``left``/``right`` prefix the ``mh<i>`` column names."""
+    return " + ".join(
+        f"CASE WHEN {left}mh{i} = {right}mh{i} THEN 1 ELSE 0 END"
+        for i in range(k)
+    )
 
 
 def minhash_band_table(
@@ -143,23 +171,7 @@ def minhash_band_table(
     the PERSISTABLE index form: at scale the corpus band table is
     written once and every future increment probes it by equi-join
     without re-shingling history (see incremental_near_dup_candidates)."""
-    rows = k // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        ",", *[F.col(f"mh{b * rows + r}") for r in range(rows)]
-                    ).cast("binary")
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return sig.select(F.col(id_col), F.explode(band_structs).alias("band")).select(
-        id_col, "band.band_id", "band.band_hash"
-    )
+    return sig.selectExpr(_q(id_col), _bands(k, bands))
 
 
 def band_candidate_pairs(
@@ -171,20 +183,24 @@ def band_candidate_pairs(
     on (band_id, band_hash) — linear-ish in corpus size. Public so
     pipelines holding a persisted/cached band table pair it without
     re-shingling the text (see pipeline_generation_resplit)."""
-    left = banded.alias("a")
-    right = banded.alias("b")
+    return _band_pairs(banded, id_col).distinct()
+
+
+def _band_pairs(banded: DataFrame, id_col: str, *cols: str) -> DataFrame:
+    """(doc_a, doc_b, *cols) per band two docs share, doc_a < doc_b:
+    the band table's self equi-join on (band_id, band_hash); ``cols``
+    are SQL over the ``a``/``b`` sides."""
+    idq = _q(id_col)
     return (
-        left.join(
-            right,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        banded.alias("a")
+        .join(
+            banded.alias("b"),
+            F.expr(
+                "a.band_id = b.band_id AND a.band_hash = b.band_hash"
+                f" AND a.{idq} < b.{idq}"
+            ),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
-        .distinct()
+        .selectExpr(f"a.{idq} AS doc_a", f"b.{idq} AS doc_b", *cols)
     )
 
 
@@ -242,42 +258,11 @@ def minhash_jaccard_estimates(
     """
     if k % bands:
         raise ValueError("k must be divisible by bands")
-    rows = k // bands
     sig = minhash_signatures(df, id_col, text_col, k, shingle_n, seed)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        ",", *[F.col(f"mh{b * rows + r}") for r in range(rows)]
-                    ).cast("binary")
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sig.select(
-        F.col(id_col), F.explode(band_structs).alias("band"), *[
-            F.col(f"mh{i}") for i in range(k)
-        ]
-    ).select(id_col, "band.band_id", "band.band_hash", *[f"mh{i}" for i in range(k)])
-    a, b = banded.alias("a"), banded.alias("b")
-    agree = sum(
-        F.when(F.col(f"a.mh{i}") == F.col(f"b.mh{i}"), 1).otherwise(0)
-        for i in range(k)
-    )
     return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            agree.alias("agree"),
+        _band_pairs(
+            sig.selectExpr("*", _bands(k, bands)), id_col,
+            f"{minhash_agreement('a.', 'b.', k)} AS agree",
         )
         # a pair colliding in several bands appears once per band with
         # the same agreement count — collapse, then scale to [0, 1]
@@ -318,56 +303,16 @@ def minhash_containment_estimates(
     """
     if k % bands:
         raise ValueError("k must be divisible by bands")
-    rows = k // bands
     hashes = _doc_shingle_hashes(df, id_col, text_col, shingle_n)
-    perms = minhash_perms(k, seed)
-    aggs = [
-        F.min(minhash_col(F.col("h"), a, b)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(perms)
-    ]
     # signature + exact set size in ONE aggregation; cached because the
     # banded self-join reads it twice
-    sig = _cache_stream(
-        hashes.groupBy(id_col).agg(*aggs, F.count("*").alias("sz"))
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        ",", *[F.col(f"mh{b * rows + r}") for r in range(rows)]
-                    ).cast("binary")
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sig.select(
-        F.col(id_col), F.explode(band_structs).alias("band"),
-        *[F.col(f"mh{i}") for i in range(k)], F.col("sz"),
-    ).select(
-        id_col, "band.band_id", "band.band_hash",
-        *[f"mh{i}" for i in range(k)], "sz",
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    agree = sum(
-        F.when(F.col(f"a.mh{i}") == F.col(f"b.mh{i}"), 1).otherwise(0)
-        for i in range(k)
-    )
+    sig = _cache_stream(_signatures(hashes, id_col, k, seed, ", count(*) AS sz"))
     paired = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            agree.alias("agree"),
-            F.col("a.sz").alias("sz_a"),
-            F.col("b.sz").alias("sz_b"),
+        _band_pairs(
+            sig.selectExpr("*", _bands(k, bands)), id_col,
+            f"{minhash_agreement('a.', 'b.', k)} AS agree",
+            "a.sz AS sz_a",
+            "b.sz AS sz_b",
         )
         .groupBy("doc_a", "doc_b")
         .agg(
@@ -1067,9 +1012,9 @@ def chunk_dedup_reassemble(
 
     Scale shape: tokenize+chunk is one narrow pass (materialized token
     array projected BEFORE the posexplode — the `chunk_documents`
-    anti-inlining pattern). Survivor selection is the TWO-PHASE
-    min-struct of ``drop_exact_duplicates``, not a window over the
-    chunk key: ``groupBy(key).agg(min(struct(doc, chunk)))`` combines
+    anti-inlining pattern). Survivor selection is a min-struct
+    aggregate per chunk key, as in ``drop_exact_duplicates``, not a
+    window over the chunk key: ``groupBy(key).agg(min(struct(doc, chunk)))`` combines
     map-side, so a boilerplate chunk duplicated millions of times
     never routes every copy into one straggler task (the
     window-over-key formulation cannot partial-aggregate and AQE
@@ -1077,8 +1022,7 @@ def chunk_dedup_reassemble(
     that picks winners back out). The rebuild is one shuffle back on
     the doc id (collect_list of (chunk_id, text) sorted in-group —
     per-group memory is one document). Costs one extra exchange vs
-    the window form; at corpus scale, skew resilience wins — the same
-    trade `drop_exact_duplicates` documents."""
+    the window form; at corpus scale, skew resilience wins."""
     base = df.select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("__toks")
     ).select(id_col, "__toks", F.size("__toks").alias("__n"))

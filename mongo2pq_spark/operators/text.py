@@ -10,7 +10,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mongo2pq_spark.functions.hashing import hash64, token_hash32
-from mongo2pq_spark.functions.textfns import STOPWORDS, stopword_hits, tokens
+from mongo2pq_spark.functions.textfns import (
+    STOPWORDS,
+    spark_ident as _q,
+    spark_tokens,
+    stopword_hits,
+    tokens,
+)
 
 #: BPE-ish word/number/punctuation regex (word pieces, digit runs,
 #: single punctuation marks) — a cheap token-count proxy.
@@ -553,15 +559,18 @@ def write_inverted_index(
     compress far better than raw 64-bit ids — the classic postings
     trick) alongside parallel term frequencies.
 
-    Layout at scale: postings are range-partitioned and sorted BY TERM
-    (``repartitionByRange`` + ``sortWithinPartitions``), so every
-    parquet row group covers a tight term range and a term-equality
+    Layout at scale: each token is given its ``shard = doc_id %
+    n_shards`` first, and ONE ``repartitionByRange`` on (term, shard)
+    serves both aggregates (per-doc term frequency, then the posting
+    list) and the ``sortWithinPartitions`` write: one exchange. Every
+    parquet row group covers a tight term range, so a term-equality
     probe prunes to a handful of row groups via footer stats — the
     lakehouse answer to a high-cardinality partition key (a hive
     ``partitionBy(term)`` would create one directory per vocabulary
-    entry). Sharding by ``doc_id % n_shards`` bounds each posting ROW:
-    a stopword's corpus-wide list splits across shards instead of
-    forming one giant array cell.
+    entry). The shard bounds each posting ROW, and because it is part
+    of the range key it also bounds the task: a stopword's corpus-wide
+    list splits across shards, and its shards across range partitions,
+    instead of forming one giant array cell in one straggler task.
 
     Incremental maintenance: each call writes ONE
     ``batch=<batch_token>`` partition under ``out_dir`` — indexing a
@@ -601,48 +610,40 @@ def write_inverted_index(
         # duplicate every posting, and consolidation (a pure regroup)
         # would bake the duplicates in
         return
-    if positions:
-        toks = df.select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(tokens(F.col(text_col))).alias("pos", "term"),
-        )
-        tf = toks.groupBy("term", "doc_id").agg(
-            F.count("*").alias("tf"),
-            F.sort_array(F.collect_list("pos")).alias("positions"),
-        )
-    else:
-        toks = df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokens(F.col(text_col))).alias("term"),
-        )
-        tf = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    out = _encode_postings(tf, n_shards)
+    doc_id = _q(id_col)
+    term = spark_tokens(_q(text_col))
+    toks = df.selectExpr(
+        f"{doc_id} AS doc_id",
+        f"CAST({doc_id} % {n_shards} AS INT) AS shard",
+        f"posexplode({term}) AS (pos, term)" if positions
+        else f"explode({term}) AS term",
+    ).repartitionByRange(
+        max(df.sparkSession.sparkContext.defaultParallelism, 4), "term", "shard"
+    )
+    tf = toks.groupBy("term", "shard", "doc_id").agg(
+        F.expr("count(*) AS tf"),
+        *([F.expr("sort_array(collect_list(pos)) AS positions")] if positions else []),
+    )
     (
-        out.repartitionByRange(max(df.sparkSession.sparkContext.defaultParallelism, 4), "term")
+        _encode_postings(tf)
         .sortWithinPartitions("term", "shard")
         .write.mode("overwrite")
         .parquet(os.path.join(out_dir, f"batch={batch_token}"))
     )
 
 
-def _encode_postings(tf: DataFrame, n_shards: int | None = None) -> DataFrame:
-    """(term, doc_id, tf) rows → encoded posting rows (term, shard,
-    df_shard, doc_id_deltas, tfs). The single definition of the gap
-    encoding — write and consolidate must never diverge. With
-    ``n_shards`` None the input already carries a ``shard`` column.
-    A ``positions`` column (sorted array<int> per posting), when
+def _encode_postings(tf: DataFrame) -> DataFrame:
+    """(term, shard, doc_id, tf) rows → encoded posting rows (term,
+    shard, df_shard, doc_id_deltas, tfs). The single definition of the
+    gap encoding — write and consolidate must never diverge. A
+    ``positions`` column (sorted array<int> per posting), when
     present, rides along as a parallel ``pos_lists`` array — the
     positional-index variant."""
-    sharded = (
-        tf.withColumn("shard", (F.col("doc_id") % n_shards).cast("int"))
-        if n_shards is not None
-        else tf
-    )
-    positional = "positions" in sharded.columns
+    positional = "positions" in tf.columns
     struct_cols = ["doc_id", "tf"] + (["positions"] if positional else [])
     # doc_id is unique within (term, shard), so struct sort order never
     # reaches the array field
-    postings = sharded.groupBy("term", "shard").agg(
+    postings = tf.groupBy("term", "shard").agg(
         F.sort_array(F.collect_list(F.struct(*struct_cols))).alias("__p")
     )
     ids = F.transform(F.col("__p"), lambda s: s["doc_id"])

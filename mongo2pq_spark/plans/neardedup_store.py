@@ -49,6 +49,7 @@ from mongo2pq_spark.operators.cache import pin
 from mongo2pq_spark.operators.dedup import (
     DEFAULT_BANDS,
     DEFAULT_K,
+    minhash_agreement,
     minhash_band_table,
     minhash_signatures,
 )
@@ -192,19 +193,16 @@ class NearDedupStore:
         index_sigs = spark.read.parquet(*sig_dirs).filter(
             F.col("src_token") != token
         )
-        renamed = index_sigs.select(
-            F.col(STORE_ID).alias("existing_id"),
-            *[F.col(f"mh{i}").alias(f"emh{i}") for i in range(self.k)],
-        )
-        agreement = sum(
-            F.when(F.col(f"mh{i}") == F.col(f"emh{i}"), 1).otherwise(0)
-            for i in range(self.k)
-        ) / float(self.k)
+        # the k-term verify is one SQL string over the aliased sides
+        agreement = minhash_agreement("n.", "e.", self.k)
         dropped = pin(
-            cand.join(sig, STORE_ID)
-            .join(renamed, "existing_id")
-            .filter(agreement >= self.threshold)
-            .select(STORE_ID)
+            cand.join(sig, STORE_ID).alias("n")
+            .join(index_sigs.alias("e"), F.expr(f"n.existing_id = e.{STORE_ID}"))
+            .where(
+                f"({agreement}) / CAST({self.k} AS DOUBLE)"
+                f" >= CAST('{self.threshold!r}' AS DOUBLE)"
+            )
+            .selectExpr(f"n.{STORE_ID}")
             .distinct()
         )
         self._dropped = dropped

@@ -173,10 +173,13 @@ class FieldInference:
         self.fields: dict[str, pa.DataType] = {}
         self._poisoned: set[str] = set()
 
-    def add(self, field_name: str, value: Any) -> pa.DataType | None:
+    def add(
+        self, field_name: str, value: Any, typed: pa.DataType | None = None
+    ) -> pa.DataType | None:
         """Fold one value into its field. Returns the value's own
-        inferred type, or None when it carries no type signal or its
-        field is dropped as nested."""
+        inferred type (``typed`` when the caller already knows it), or
+        None when it carries no type signal or its field is dropped as
+        nested."""
         # None and "" carry no type signal: both are suppressed to
         # null at export (falsy-drop, SURVEY O-7), so they must not
         # drag a column to `string` during inference either.
@@ -185,7 +188,10 @@ class FieldInference:
         if field_name in self._poisoned:
             return None
         try:
-            inferred = infer_type(value, field_name, now=self.now)
+            inferred = (
+                typed if typed is not None
+                else infer_type(value, field_name, now=self.now)
+            )
         except NestedValueError:
             if self.on_nested == "raise":
                 raise

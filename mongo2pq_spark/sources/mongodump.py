@@ -45,6 +45,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from mongo2pq_spark.functions.textfns import spark_ident
+
 
 def unwrap_extended_json(value):
     """Recursively unwrap Mongo extended-JSON type wrappers."""
@@ -516,14 +518,18 @@ def _peek(files, sample_lines, flatten, on_nested, mode):
     name_paths: dict[str, dict] = {}
     for raws, values, paths in _sample(files, sample_lines, flatten, mode):
         for name, value in values.items():
-            inferred = inference.add(name, value)
-            if value is None:
-                continue
             raw = raws[name]
             kind = type(raw)
             if kind is dict:
                 kind = _wrapper_key(raw)
-            elif kind in _EPOCH_KINDS and inferred == epoch:
+            # an ObjectId is a string, as in the reference: never parse
+            # its hex (leading zeros would be cast away as an int)
+            inferred = inference.add(
+                name, value, pa.string() if kind == "$oid" else None
+            )
+            if value is None:
+                continue
+            if kind in _EPOCH_KINDS and inferred == epoch:
                 kind = _EPOCH_KINDS[kind]
             seen = kinds.get(name)
             if seen is None:
@@ -696,7 +702,7 @@ def _split_session(spark, split_bytes: int):
 
 def _name(*parts: str) -> str:
     """A SQL reference to a (nested) column, every part quoted."""
-    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+    return ".".join(map(spark_ident, parts))
 
 
 def _raw(pattern: str) -> str:

@@ -899,3 +899,31 @@ def test_jvm_scan_equals_the_python_decode(spark, tmp_path, flatten):
     assert isinstance(read_types["oid_or_long"], T.StringType)
     assert isinstance(read_types["long_or_double"], T.DoubleType)
     assert ("meta.at" in reads) is flatten
+
+
+def test_oid_payloads_type_as_string(spark, tmp_path, monkeypatch):
+    """An ObjectId is a string, as in the reference: an all-digit hex
+    ``$oid`` keeps its leading zeros, and the peek never runs the
+    speculative string parsers over it."""
+    from mongo2pq_spark.schema import inference
+    from mongo2pq_spark.sources.mongodump import read_mongodump_fields
+
+    path = tmp_path / "oids.jsonl"
+    path.write_text("".join(
+        json.dumps({"_id": {"$oid": f"{i:024x}"}, "n": i}) + "\n"
+        for i in range(1, 6)
+    ))
+    parsed = []
+    cast = inference.cast_from_string
+    monkeypatch.setattr(
+        inference, "cast_from_string", lambda v: parsed.append(v) or cast(v)
+    )
+    df, fields = read_mongodump_fields(
+        spark, str(path), 100, "raise", "failfast", 128 * 1024 * 1024
+    )
+    assert str(fields["_id"]) == "string"
+    assert dict(df.dtypes)["_id"] == "string"
+    assert sorted(r["_id"] for r in df.collect()) == [
+        f"{i:024x}" for i in range(1, 6)
+    ]
+    assert parsed == []

@@ -8821,3 +8821,113 @@ def test_webp_triage_and_fail_louds():
         parse_webp_metadata(
             b"RIFF\x0c\x00\x00\x00WEBPEXIF\x00\x00\x00\x00"
         )
+
+
+def test_drop_exact_duplicates_composes_with_except_all(spark):
+    """The survivors frame must compose with set operators: under the
+    semi-join + dropDuplicates form, ``exceptAll`` over it failed with
+    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND whatever frame was on the
+    right."""
+    df = spark.createDataFrame(
+        [(1, "a b c"), (2, "a b c"), (3, "x y"), (4, None)],
+        "doc_id long, text string",
+    )
+    kept = drop_exact_duplicates(df)
+    assert kept.exceptAll(df).count() == 0
+    assert [tuple(r) for r in df.exceptAll(kept).collect()] == [(2, "a b c")]
+
+
+def test_sql_text_tokens_and_shingles_equal_column_forms(spark):
+    """``spark_tokens``/``spark_word_shingles`` (one regex scan each)
+    return the arrays of ``tokens``/``word_shingles`` for n = 2, 3, 8
+    on adversarial whitespace, in one collect."""
+    from mongo2pq_spark.functions.textfns import (
+        spark_tokens,
+        spark_word_shingles,
+        tokens,
+        word_shingles,
+    )
+
+    texts = [
+        "a b c d e f g h i j",
+        "  lead and trail  ",
+        "tab\tsep\tword\tlist\there",
+        "new\nline\r\nand\fform\x0bfeed",
+        "runs   of\t\t spaces \n\n here x y",
+        "nbsp\u00a0glued to\u00a0 words \u00a0 and more\u00a0\u00a0words",
+        "\x01ctrl \x1fchars\x00 kept as token chars",
+        "one",
+        "two words",
+        " ",
+        "",
+        None,
+        "w " * 12,
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    cols, exprs = [], []
+    for n in (2, 3, 8):
+        cols.append(word_shingles(tokens(F.col("text")), n).alias(f"col{n}"))
+        exprs.append(F.expr(f"{spark_word_shingles('text', n)} AS sql{n}"))
+    rows = df.select(
+        "text",
+        tokens(F.col("text")).alias("col_tok"),
+        F.expr(f"{spark_tokens('text')} AS sql_tok"),
+        *cols,
+        *exprs,
+    ).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert r["sql_tok"] == r["col_tok"], r["text"]
+        for n in (2, 3, 8):
+            assert r[f"sql{n}"] == r[f"col{n}"], (n, r["text"])
+    assert [r["sql3"] for r in rows if r["text"] == "tab\tsep\tword\tlist\there"] == [
+        ["tab sep word", "sep word list", "word list here"]
+    ]
+
+
+def test_minhash_signatures_match_python_reference(spark):
+    """Each signature component is min((h*a + b) mod p) over the
+    document's distinct 3-word shingles, h = the md5 prefix as an
+    unsigned 32-bit int, with the pinned permutations; a document with
+    fewer than 3 tokens has no signature."""
+    import hashlib
+    import re
+
+    from mongo2pq_spark.functions.hashing import MERSENNE_P, minhash_perms
+    from mongo2pq_spark.operators.dedup import minhash_signatures
+
+    docs = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumps over the lazy cat"),
+        (3, "a  b\tc a b c a b c"),
+        (4, "too short"),
+        (5, "ünïcode wörds\u00a0glued \u00a0 and more words here"),
+        (6, None),
+    ]
+    perms = minhash_perms(32, 42)
+    want = {}
+    for doc_id, text in docs:
+        toks = re.findall(r"[^ \t\n\x0b\f\r]+", text or "")
+        shingles = {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+        if not shingles:
+            continue
+        hs = [int(hashlib.md5(s.encode()).hexdigest()[:8], 16) for s in shingles]
+        want[doc_id] = tuple(min((h * a + b) % MERSENNE_P for h in hs) for a, b in perms)
+    sig = minhash_signatures(
+        spark.createDataFrame(docs, "doc_id long, text string")
+    ).collect()
+    got = {r["doc_id"]: tuple(r[f"mh{i}"] for i in range(32)) for r in sig}
+    assert got == want
+
+
+def test_drop_exact_duplicates_keeps_a_group_whose_min_id_is_null(spark):
+    """A text whose min-ordered key has a NULL id still keeps one row:
+    the survivor is chosen inside the aggregate, not re-matched by an
+    id equality that NULL never satisfies."""
+    df = spark.createDataFrame(
+        [(None, "t"), (2, "t"), (3, "u")], "doc_id long, text string"
+    )
+    got = sorted(
+        (r["text"], r["doc_id"] or 0) for r in drop_exact_duplicates(df).collect()
+    )
+    assert got == [("t", 0), ("u", 3)]

@@ -1119,3 +1119,82 @@ def test_r17_codec_queries_are_map_only(spark, sf_dir):
         # the decode itself is Arrow-batched mapInPandas, never
         # row-at-a-time Python
         assert "BatchEvalPython" not in plan, name
+
+
+def _shuffles(df) -> int:
+    """Shuffle exchanges in the executed plan (broadcasts excluded)."""
+    import re
+
+    return len(re.findall(r"(?<!Broadcast)Exchange \(", _plan(df)))
+
+
+def _docs(spark):
+    return spark.createDataFrame(
+        [(1, "a b c d", "en"), (2, "a b c d", "de"), (3, "x y z", "en"),
+         (4, None, "fr")],
+        "doc_id long, text string, lang string",
+    )
+
+
+def test_minhash_signature_plan_has_no_lambda(spark):
+    """Shingles come from one regex scan, so the signature stream is
+    generated code: no interpreted higher-order-function lambda."""
+    from mongo2pq_spark.operators.dedup import minhash_signatures
+
+    analyzed = minhash_signatures(_docs(spark))._jdf.queryExecution().analyzed()
+    assert "lambdafunction" not in analyzed.toString().lower()
+
+
+def test_exact_dedup_plans_one_shuffle(spark):
+    """One aggregate per text digest: one hash exchange, combined
+    map-side (a partial aggregate below it), no join."""
+    from mongo2pq_spark.operators.dedup import drop_exact_duplicates
+
+    kept = drop_exact_duplicates(_docs(spark))
+    plan = _plan(kept)
+    assert _shuffles(kept) == 1
+    assert "partial_min_by" in plan
+    assert "Join" not in plan
+
+
+def test_inverted_index_plans_one_shuffle(spark, tmp_path, monkeypatch):
+    """Both posting aggregates and the sorted write reuse one range
+    exchange on (term, shard)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from mongo2pq_spark.operators.text import write_inverted_index
+
+    written = []
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet", lambda self, path, *a, **k: written.append(self._df)
+    )
+    for positions in (False, True):
+        write_inverted_index(_docs(spark), str(tmp_path / "idx"), positions=positions)
+    assert len(written) == 2
+    for df in written:
+        plan = _plan(df)
+        assert _shuffles(df) == 1
+        assert "rangepartitioning(term" in plan and ", shard" in plan
+
+
+def test_minhash_plans_cost_few_py4j_calls(spark, monkeypatch):
+    """Building (not running) ``minhash_signatures`` plus
+    ``minhash_band_table`` stays under 100 py4j round trips: SQL text
+    for the shingles, the k aggregates and the band rows, where Column
+    trees cost thousands (a call per node, plus call-site capture)."""
+    from py4j.clientserver import ClientServerConnection
+
+    from mongo2pq_spark.operators.dedup import minhash_band_table, minhash_signatures
+
+    docs = _docs(spark)
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        calls.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    minhash_band_table(minhash_signatures(docs))
+    monkeypatch.undo()
+    assert 0 < len(calls) < 100, len(calls)

@@ -116,6 +116,18 @@ def _is_materialized(df: DataFrame) -> bool:
 _MAX_LIVE = 4
 
 
+def _is_live(df: DataFrame) -> bool:
+    """Was ``df`` persisted, and does Spark still hold its cache?
+    ``df.is_cached`` alone stays True after the cache is dropped
+    outside the registry (``spark.catalog.clearCache()``, an
+    ``unpersist`` of an equivalent frame); ``storageLevel`` asks the
+    CacheManager and then reads neither memory nor disk."""
+    if not df.is_cached:
+        return False
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
+
+
 def _registry() -> list[DataFrame]:
     """The innermost scope open in this thread, else the bounded
     registry."""
@@ -142,9 +154,9 @@ def cache_scope():
 def pin(df: DataFrame) -> DataFrame:
     """Persist ``df`` (Spark's default DataFrame level) for the rest of
     the current scope. Outside a scope it is a plain persist, and the
-    caller unpersists it. A frame already persisted is returned as is,
-    held by whoever persisted it."""
-    if not df.is_cached:
+    caller unpersists it. A frame already persisted, with its cache
+    still held, is returned as is, held by whoever persisted it."""
+    if not _is_live(df):
         df.persist()
         if (live_list := _registry()) is not _LIVE_CACHES:
             live_list.append(df)
@@ -186,9 +198,11 @@ def cache_stream(df: DataFrame) -> DataFrame:
     with _LOCK:
         for live in live_list:
             if live.sameSemantics(df):
+                live_list.remove(live)
+                if not _is_live(live):
+                    break  # dropped outside the registry: persist anew
                 # refresh recency: a just-reused stream must not be the
                 # next eviction victim
-                live_list.remove(live)
                 live_list.append(live)
                 return live
         while live_list is _LIVE_CACHES and len(live_list) >= _MAX_LIVE:

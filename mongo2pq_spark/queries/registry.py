@@ -46,6 +46,14 @@ def register(name: str, oracle: Optional[str], doc: str = ""):
 # parity queries rotate to the back. Every name must exist — load_all
 # fails loudly on a typo.
 _DRIVER_WINDOW_FIRST = [
+    # hash-moved re-entries (rotation contract): the export round trip
+    # now reads its dump back through read_mongodump (the Python format
+    # reader is gone; its oracle mirrors the float32 inference of
+    # `value`), and el_mongodump_scan's doc note describes the JVM
+    # scan. They take the slots of corpus_vocab_growth and
+    # corpus_dsir_select (unchanged, green driver rows r12/r18/r19).
+    "el_mongodump_export_roundtrip",
+    "el_mongodump_scan",
     # r19 window = the r18 window with the two hash-moved re-entries
     # of the r19 OPTIMIZATION round at the front (rotation contract:
     # a changed query must re-enter the window or its green driver
@@ -112,9 +120,10 @@ _DRIVER_WINDOW_FIRST = [
     "multimodal_image_cell_features",
     "multimodal_image_dhash_incremental",
     "multimodal_wav_audio_stats",
-    # (c) the oldest 10 of the 42 r12-latest entries, registry order
-    # (the remaining r12s are the staged r19 front — the rotation's
-    # oldest cohort after this round);
+    # (c) the oldest of the 42 r12-latest entries, registry order,
+    # less the two rotated out for the mongodump re-entries at the
+    # front (the remaining r12s are the staged r19 front — the
+    # rotation's oldest cohort after this round);
     "events_pivot_daily",
     "graph_pagerank_interactions",
     "graph_pagerank_weighted",
@@ -122,8 +131,6 @@ _DRIVER_WINDOW_FIRST = [
     "text_bigram_logprob",
     "text_trigram_backoff",
     "corpus_perplexity_buckets",
-    "corpus_vocab_growth",
-    "corpus_dsir_select",
 ]
 
 

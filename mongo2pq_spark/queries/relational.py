@@ -462,24 +462,22 @@ def el_csv_roundtrip(spark, sf_dir):
            max(date_trunc('second', ts)) AS max_created
     FROM events GROUP BY event_type
     """,
-    doc="Mongo extended-JSON dump ingestion via a CUSTOM PYTHON DATA "
-        "SOURCE (Spark-4 spark.dataSource API): the events table is "
-        "staged as a mongoexport-style dump ($oid ObjectIds, $date "
-        "timestamps at microsecond fidelity, $numberLong wrappers, a "
-        "RAW epoch-seconds number, and a nested subdocument) by a "
-        "distributed write, then read back through read_mongodump — "
-        "the engine's OWN sampling inference over unwrapped documents, "
-        "one input partition per dump file, wrappers unwrapped per the "
-        "reference's BSON decode rules "
-        "(/root/reference/mongo2pq/schema.py:110-164) — and aggregated; "
-        "must equal the batch aggregate of the original table. "
-        "Inference consequences the oracle mirrors: `value` infers "
-        "float32 (reference rule: any float within float32 range), so "
-        "the oracle quantizes through CAST(value AS FLOAT); `created` "
-        "is a raw epoch int that the ±5-year heuristic types "
-        "timestamp[s] — delivered as DOUBLE at the scan and cast via "
-        "timestamp_seconds, equal to date_trunc('second', ts); the "
-        "nested `meta` subdoc is DROPPED by on_nested='skip' (the "
+    doc="Mongo extended-JSON dump ingestion through read_mongodump: "
+        "the events table is staged as a mongoexport-style dump ($oid "
+        "ObjectIds, $date timestamps at microsecond fidelity, "
+        "$numberLong wrappers, a RAW epoch-seconds number, and a nested "
+        "subdocument) by a distributed write, then read back — the "
+        "engine's OWN sampling inference over unwrapped documents, a "
+        "JVM text scan with one from_json per line, wrappers unwrapped "
+        "per the reference's BSON decode rules (schema.py:110-164) — "
+        "and aggregated; must equal the batch aggregate of the original "
+        "table. Inference consequences the oracle mirrors: `value` "
+        "infers float32 (reference rule: any float within float32 "
+        "range), so the oracle quantizes through CAST(value AS FLOAT); "
+        "`created` is a raw epoch int that the ±5-year heuristic types "
+        "timestamp[s] — read as long at the scan and cast to a "
+        "timestamp in Schema.apply, equal to date_trunc('second', ts); "
+        "the nested `meta` subdoc is DROPPED by on_nested='skip' (the "
         "reference fails outright on nested values, schema.py:331-335). "
         "The offline companion to the gated live-connector path",
 )
@@ -731,25 +729,29 @@ def profile_events_stats(spark, sf_dir):
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n_events,
            CAST(sum(CAST(user_id AS BIGINT)) AS BIGINT) AS user_id_sum,
-           round(sum(value), 4) AS value_sum,
+           CAST(sum(CAST(CAST(value AS FLOAT) AS DECIMAL(18,2))) AS DOUBLE)
+               AS value_sum,
            min(ts) AS first_ts,
            max(ts) AS last_ts
     FROM events
     WHERE event_id < 20000
     GROUP BY event_type
     """,
-    doc="mongodump EXPORT round trip — the WRITE side of the Python "
-        "DataSource (sources/mongodump.py::MongoDumpWriter): events "
-        "rows are serialized to line-delimited extended JSON ($date "
-        "with lossless sub-ms widening, $numberLong beyond the "
-        "double-safe range, $oid for 24-hex _id, per-task atomic "
-        "part-file rename so retries are idempotent), read back "
-        "through the existing mongodump READER, and aggregated; the "
-        "oracle aggregates the original table directly, so the "
-        "export must be value-lossless through both directions of "
-        "the interchange — timestamps at microsecond precision "
-        "included. Completes the offline-Mongo story: the engine can "
-        "now CONSUME and PRODUCE the dump format",
+    doc="mongodump EXPORT round trip — the Python DataSource writer "
+        "(sources/mongodump.py::MongoDumpWriter): events rows are "
+        "serialized to line-delimited extended JSON ($date with "
+        "lossless sub-ms widening, $numberLong beyond the double-safe "
+        "range, $oid for 24-hex _id, per-task atomic part-file rename "
+        "so retries are idempotent), read back through read_mongodump "
+        "(the one reader of a dump: sampled inference, JVM scan, one "
+        "cast), and aggregated; the oracle aggregates the original "
+        "table directly, so the export must be value-lossless through "
+        "both directions of the interchange — timestamps at "
+        "microsecond precision included. The oracle mirrors the "
+        "inference: `value` infers float32, so the oracle sums it "
+        "through CAST(value AS FLOAT) to DECIMAL(18,2). Completes the "
+        "offline-Mongo story: the engine can CONSUME and PRODUCE the "
+        "dump format",
 )
 def el_mongodump_export_roundtrip(spark, sf_dir):
     import os
@@ -757,7 +759,10 @@ def el_mongodump_export_roundtrip(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from mongo2pq_spark.deploy import ensure_shipped
-    from mongo2pq_spark.sources.mongodump import register_mongodump_source
+    from mongo2pq_spark.sources.mongodump import (
+        read_mongodump,
+        register_mongodump_source,
+    )
     from mongo2pq_spark.sources.registry import read_sf_table
 
     # the writer class executes ON EXECUTORS (pickled) — without the
@@ -774,18 +779,13 @@ def el_mongodump_export_roundtrip(spark, sf_dir):
         sf_dir, "el_mongodump_export", table="events"
     )
     ev.write.format("mongodump").mode("overwrite").save(out)
-    back = (
-        spark.read.format("mongodump")
-        .schema(
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double"
-        )
-        .load(out)
-    )
+    back = read_mongodump(spark, out)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.sum("user_id").cast("bigint").alias("user_id_sum"),
-        F.round(F.sum("value"), 4).alias("value_sum"),
+        F.sum(F.col("value").cast("decimal(18,2)"))
+        .cast("double")
+        .alias("value_sum"),
         F.min("ts").alias("first_ts"),
         F.max("ts").alias("last_ts"),
     )

@@ -1,5 +1,6 @@
-"""MongoDB extended-JSON dumps: the JVM scan behind ``read_mongodump``,
-and a Spark-4 Python DataSource for interchange.
+"""MongoDB extended-JSON dumps: ``read_mongodump``, the one reader of
+a dump, and the ``mongodump`` Spark-4 Python DataSource that writes
+one.
 
 ``mongoexport`` / ``mongodump --jsonArray``-style line-delimited
 extended JSON is the standard OFFLINE interchange for Mongo
@@ -20,11 +21,9 @@ files larger than ``split_size`` in byte ranges), one ``from_json``
 parses each line, and Catalyst unwraps the wrappers and checks each
 line. No Python runs per line.
 
-``spark.read.format("mongodump")`` is the explicit-schema Python
-DataSource: its reader decodes line by line through the same
-``_decode_line`` the peek uses (the export round trip reads back
-through it), and its writer is the mongoexport side of the
-interchange.
+``df.write.format("mongodump")`` is the export side
+(``MongoDumpWriter``): it writes line-delimited extended JSON that
+``read_mongodump`` reads back.
 """
 
 from __future__ import annotations
@@ -33,15 +32,13 @@ import json
 import os
 import uuid
 from datetime import datetime, timezone
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceWriter,
-    InputPartition,
     WriterCommitMessage,
 )
 
@@ -88,26 +85,6 @@ def _parse_iso(s: str) -> datetime:
 _DECODE_ERRORS = (ValueError, TypeError, OverflowError, OSError)
 
 
-def flatten_doc(doc: dict, sep: str = ".") -> dict:
-    """Flatten nested subdocuments into dotted-path keys, recursively
-    (``{"a": {"b": {"c": 1}}}`` → ``{"a.b.c": 1}``). Applied AFTER
-    extended-JSON unwrapping, so type wrappers are already scalars and
-    only genuine subdocuments flatten. Lists are left in place (no
-    positional flattening) — under ``on_nested="flatten"`` a
-    list-valued field then falls to the skip rule. A dotted key
-    colliding with a flattened path resolves last-wins (insertion
-    order of the source document).
-
-    An EMPTY subdocument contributes no keys: ``{"a": {}}`` → ``{}``
-    — the field disappears from the flattened document entirely (there
-    is no scalar to carry, and a ``NULL`` placeholder column would
-    invent a path the data never contains). Unlike the driver-side
-    skip rule this emits no warning: flatten runs per-line inside
-    executors, where a per-row warning would be noise at scale. The
-    behavior is pinned by ``tests/test_mongodump.py``."""
-    return {sep.join(path): v for path, v in _leaves(doc, True)}
-
-
 #: the extended-JSON type wrappers, in the order
 #: ``unwrap_extended_json`` tests them
 _WRAPPERS = ("$oid", "$date", "$numberLong", "$numberInt", "$numberDouble")
@@ -135,8 +112,9 @@ def _leaves(doc: dict, flatten: bool, prefix: tuple = ()):
 def _decode_raw(line: str, flatten: bool) -> tuple[dict, dict | None]:
     """One ``json.loads`` of a line, still wrapped: ``({name: raw JSON
     value}, {name: key path})``. Under ``flatten`` the names are dotted
-    paths (last wins on a collision, as in ``flatten_doc``); without it
-    they are the top-level keys and there is no path map."""
+    paths (a later path overwrites an earlier one of the same name) and
+    an empty subdocument yields no name; without it they are the
+    top-level keys and there is no path map."""
     raw = json.loads(line)
     if not isinstance(raw, dict):
         raise ValueError("line is not a JSON object")
@@ -156,27 +134,6 @@ def _unwrap_doc(raws: dict) -> dict:
     }
 
 
-def _decode_line(line: str, flatten: bool) -> dict:
-    """The per-line decode: json.loads + wrapper unwrap (+ optional
-    subdoc flattening), as ``{name: unwrapped value}``. Both steps
-    sit inside ONE error boundary (``_DECODE_ERRORS``), so permissive
-    mode skips corrupt wrappers exactly like corrupt JSON."""
-    return _unwrap_doc(_decode_raw(line, flatten)[0])
-
-
-class _DumpFilePartition(InputPartition):
-    """A byte range [start, end) of one dump file. ``start == 0``
-    owns the file head; a later split owns every line whose FIRST
-    byte falls inside its range (the standard newline-delimited
-    split protocol: seek, discard the partial line unless at 0,
-    stop after passing ``end``)."""
-
-    def __init__(self, path: str, start: int = 0, end: int | None = None):
-        self.path = path
-        self.start = start
-        self.end = end
-
-
 def _dump_files(path: str) -> list[str]:
     """The files of a dump: ``path`` itself, or the sorted entries of
     the directory ``path`` that are not hidden (``.``) or markers
@@ -191,111 +148,20 @@ def _dump_files(path: str) -> list[str]:
     )
 
 
-class MongoDumpReader(DataSourceReader):
-    def __init__(self, schema, options):
-        self._path = options.get("path")
-        # failfast (default): a malformed line kills the read WITH
-        # file + byte-offset context; permissive: skip malformed lines
-        # — at 100 TB one corrupt export line must not fail the job
-        self._mode = options.get("mode", "failfast").lower()
-        if self._mode not in ("failfast", "permissive"):
-            raise ValueError(
-                f"mongodump mode must be failfast or permissive, got {self._mode!r}"
-            )
-        if not self._path:
-            raise ValueError("mongodump source requires a 'path' option")
-        # dotted-path subdocument flattening (on_nested="flatten")
-        self._flatten = options.get("flatten", "false").lower() == "true"
-        # (name, read as string): a string column takes any scalar
-        # as its text, so a field mixing representations still reads
-        self._columns = [
-            (f.name, isinstance(f.dataType, T.StringType)) for f in schema.fields
-        ]
-        # intra-file parallelism: files larger than splitsize bytes are
-        # read as multiple byte-range partitions (the newline-delimited
-        # split protocol Spark's own text source uses) — without it a
-        # single huge mongoexport is a ONE-task read no matter how many
-        # executors the cluster has. 0 disables splitting.
-        self._split_size = int(options.get("splitsize", 128 * 1024 * 1024))
-
-    def partitions(self):
-        parts: list[_DumpFilePartition] = []
-        for p in _dump_files(self._path):
-            size = os.path.getsize(p)
-            if self._split_size <= 0 or size <= self._split_size:
-                parts.append(_DumpFilePartition(p, 0, None))
-                continue
-            start = 0
-            while start < size:
-                end = min(start + self._split_size, size)
-                parts.append(_DumpFilePartition(p, start, end))
-                start = end
-        return parts
-
-    def read(self, partition: _DumpFilePartition) -> Iterator[tuple]:
-        # binary mode: byte offsets must agree with os.path.getsize —
-        # text mode would count decoded characters
-        with open(partition.path, "rb") as fh:
-            if partition.start > 0:
-                # a line straddling the boundary belongs to the
-                # PREVIOUS split (which reads past its end to finish
-                # it). Seek to start-1, not start: if the byte at
-                # start-1 is the previous line's '\n', readline()
-                # consumes exactly that newline and a line beginning
-                # AT the boundary is correctly kept; seeking to start
-                # would discard it (it starts inside this range).
-                fh.seek(partition.start - 1)
-                fh.readline()
-            offset = fh.tell()
-            for raw_line in fh:
-                line_start = offset
-                offset += len(raw_line)
-                # a split owns lines that START inside [start, end)
-                if partition.end is not None and line_start >= partition.end:
-                    break
-                line = raw_line.decode("utf-8").strip()
-                if not line:
-                    continue
-                try:
-                    doc = _decode_line(line, self._flatten)
-                except _DECODE_ERRORS as exc:
-                    if self._mode == "permissive":
-                        continue
-                    raise ValueError(
-                        f"malformed extended-JSON at {partition.path}:"
-                        f"byte {line_start}: {exc}"
-                    ) from exc
-                yield tuple(
-                    _field_value(doc.get(name), as_str)
-                    for name, as_str in self._columns
-                )
-
-
-def _field_value(value, as_str: bool):
-    if not as_str or value is None or isinstance(value, str):
-        return value
-    return value.isoformat() if isinstance(value, datetime) else str(value)
-
-
 class MongoDumpDataSource(DataSource):
+    """The ``mongodump`` format: writes only; ``read_mongodump`` reads."""
+
     @classmethod
     def name(cls) -> str:
         return "mongodump"
-
-    def schema(self) -> str:
-        # a user-supplied .schema(ddl) overrides this default; the
-        # default covers the bare _id case for quick inspection
-        return "_id STRING"
-
-    def reader(self, schema) -> MongoDumpReader:
-        return MongoDumpReader(schema, self.options)
 
     def writer(self, schema, overwrite: bool) -> "MongoDumpWriter":
         return MongoDumpWriter(schema, self.options, overwrite)
 
 
 def register_mongodump_source(spark) -> None:
-    """Idempotently register the mongodump Python data source."""
+    """Idempotently register the mongodump Python data source (the
+    export writer)."""
     from mongo2pq_spark.sources.registry import register_python_source
 
     register_python_source(spark, MongoDumpDataSource)
@@ -355,8 +221,10 @@ def read_mongodump(
     subdocuments into dotted-path columns (``meta.kind``) — the mode a
     real mongoexport user usually wants — with list-valued fields
     still falling to the skip rule (no positional flattening). A field
-    holding an EMPTY subdocument (``{"a": {}}``) flattens to nothing
-    and is absent from the inferred schema — see ``flatten_doc``.
+    holding an EMPTY subdocument (``{"a": {}}``) flattens to nothing:
+    it is absent from the inferred schema, with no warning and no
+    ``NULL`` placeholder column (that would invent a path the data
+    never holds).
 
     ``mode``: a line is bad when it is malformed JSON, is not a JSON
     object, holds a type wrapper with an invalid payload (like
@@ -379,9 +247,9 @@ def read_mongodump(
     with the caller's runtime conf) and the caller's
     ``spark.sql.files.*`` settings are left alone.
 
-    Where the JVM scan delivers other values than the Python decode
-    (``_decode_line`` and ``_field_value``), all of them outside the
-    documents ``mongoexport`` writes:
+    Where the scan delivers other values than the peek's Python unwrap
+    (``unwrap_extended_json``), all of them outside the documents
+    ``mongoexport`` writes:
 
     - in a string column, a bool reads ``true``/``false`` (Python
       ``str()``: ``True``/``False``), a float reads in Java's form
@@ -401,10 +269,10 @@ def read_mongodump(
       integer ``$numberLong``/``$numberInt`` text or JSON integers,
       decimal or NaN/Infinity ``$numberDouble`` text or JSON numbers,
       ``YYYY-MM-DD[Thh:mm[:ss[.f]]][Z|±hh[:mm]]`` or at most 15-digit
-      millis for ``$date``. Python also takes ``"1_000"``, a
+      millis for ``$date``. The peek also takes ``"1_000"``, a
       fractional JSON number in ``$numberLong`` and compact ISO forms,
-      and takes millis up to year 9999 only; Python checks only the
-      first wrapper key of an object, the JVM every one;
+      and takes millis up to year 9999 only; the peek checks only the
+      first wrapper key of an object, the scan every one;
     - under ``flatten``, a key holding a subdocument in some sampled
       lines and a scalar in others reads as the scalar column, its
       dotted fields dropped with a warning; a literal dotted key
@@ -781,8 +649,8 @@ def wrap_extended_json(value, field: str | None = None):
     """Inverse of ``unwrap_extended_json``: Python/Row values →
     extended-JSON. ``datetime`` → ``{"$date": ISO-8601}``; ints beyond
     the double-safe range → ``{"$numberLong": "n"}`` (smaller ints are
-    plain JSON numbers, which the reader accepts as-is); non-finite
-    floats → ``{"$numberDouble": "..."}``; a 24-hex string in the
+    plain JSON numbers); non-finite floats →
+    ``{"$numberDouble": "..."}``; a 24-hex string in the
     ``_id`` field → ``{"$oid": ...}`` (the mongoexport convention);
     nested dicts/lists recurse. Binary is a loud TypeError — extended
     JSON would need base64 ``$binary`` support on BOTH sides, and a
@@ -803,8 +671,8 @@ def wrap_extended_json(value, field: str | None = None):
         }
     if isinstance(value, datetime):
         # canonical extended JSON is millisecond $date; sub-ms values
-        # widen to microseconds so the round trip is LOSSLESS (the
-        # reader's fromisoformat accepts both). $date is UTC by
+        # widen to microseconds so the round trip is LOSSLESS
+        # (``read_mongodump`` reads both). $date is UTC by
         # definition: tz-aware values are converted to UTC and the
         # offset dropped (isoformat()+"Z" on an aware value would emit
         # the invalid "…+00:00Z"); NAIVE datetimes are stamped as UTC

@@ -289,8 +289,9 @@ def test_cli_on_nested_flatten(spark, tmp_path):
 
 def test_flatten_nested_epoch_field_delivers_timestamp(spark, tmp_path):
     """A raw epoch int INSIDE a subdocument must survive the full
-    pipeline: flatten → dotted field → ±5-year heuristic → DOUBLE read
-    schema → timestamp_seconds on a backtick-quoted dotted column."""
+    pipeline: flatten → dotted field → ±5-year heuristic → long read
+    type → timestamp in the one cast, on a backtick-quoted dotted
+    column."""
     docs = [
         {"n": 1, "meta": {"created": EPOCH_NOW}},
         {"n": 2, "meta": {"created": EPOCH_NOW + 30}},
@@ -305,25 +306,38 @@ def test_flatten_nested_epoch_field_delivers_timestamp(spark, tmp_path):
     ).replace(tzinfo=None)
 
 
-def test_flatten_dotted_key_collision_last_wins(spark, tmp_path):
-    """A literal dotted key colliding with a flattened path resolves
-    last-wins in document insertion order (documented in flatten_doc)."""
-    from mongo2pq_spark.sources.mongodump import flatten_doc
-
-    assert flatten_doc({"a.b": 1, "a": {"b": 2}}) == {"a.b": 2}
-    assert flatten_doc({"a": {"b": 2}, "a.b": 1}) == {"a.b": 1}
+def test_flatten_dotted_key_collision_takes_the_first_sampled_path(
+    spark, tmp_path
+):
+    """A literal dotted key colliding with a flattened path is one
+    column; a line holding both takes the value of the path the sample
+    saw first (here the subdocument's), whatever the key order of that
+    line."""
+    docs = [
+        {"n": 1, "a": {"b": 2}},
+        {"n": 2, "a.b": 3},
+        {"n": 3, "a.b": 4, "a": {"b": 5}},
+        {"n": 4, "a": {"b": 7}, "a.b": 6},
+    ]
+    path = tmp_path / "collide.jsonl"
+    path.write_text("\n".join(json.dumps(d) for d in docs) + "\n")
+    df = read_mongodump(spark, str(path), on_nested="flatten")
+    assert df.columns == ["n", "a.b"]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (1, 2), (2, 3), (3, 5), (4, 7),
+    ]
 
 
 def test_flatten_empty_subdoc_field_vanishes(spark, tmp_path):
-    """Pin the documented flatten_doc contract: a field holding an
-    EMPTY subdocument contributes no dotted-path keys — it is absent
-    from the flattened document and therefore from the inferred
+    """Pin the documented flatten contract: a field holding an EMPTY
+    subdocument contributes no dotted-path keys — it is absent from
+    the peek's flattened document and therefore from the inferred
     schema (there is no scalar to carry; a NULL placeholder would
     invent a path the data never contains)."""
-    from mongo2pq_spark.sources.mongodump import flatten_doc
+    from mongo2pq_spark.sources.mongodump import _decode_raw
 
-    assert flatten_doc({"a": {}, "n": 1}) == {"n": 1}
-    assert flatten_doc({"a": {"b": {}}, "n": 1}) == {"n": 1}
+    assert _decode_raw('{"a": {}, "n": 1}', True) == ({"n": 1}, {"n": ("n",)})
+    assert _decode_raw('{"a": {"b": {}}, "n": 1}', True)[0] == {"n": 1}
 
     docs = [{"n": 1, "empty": {}}, {"n": 2, "empty": {}}]
     path = tmp_path / "empty.jsonl"
@@ -334,11 +348,11 @@ def test_flatten_empty_subdoc_field_vanishes(spark, tmp_path):
 
 
 def test_multi_file_dump_reads_one_partition_per_file(spark, tmp_path):
-    """The mongodump source assigns one input partition per dump file
-    (sources/mongodump.py::partitions), so a many-file dump dir reads
-    in parallel — the distributed-read contract a single-task scan
-    would silently break. Asserted from the executors' own
-    spark_partition_id, not the planner's claim."""
+    """The scan opens one input partition per dump file (its session's
+    open cost is the split size, ``_split_session``), so a many-file
+    dump dir reads in parallel — the distributed-read contract a
+    single-task scan would silently break. Asserted from the executors'
+    own spark_partition_id, not the planner's claim."""
     from pyspark.sql import functions as F
 
     d = tmp_path / "dump"
@@ -359,7 +373,7 @@ def test_multi_file_dump_reads_one_partition_per_file(spark, tmp_path):
 
 
 def test_split_single_file_parallel_and_identical(spark, tmp_path):
-    """A single dump file larger than splitsize must read as multiple
+    """A single dump file larger than split_size must read as multiple
     byte-range partitions (no more 1-task scans of a huge mongoexport)
     and deliver EXACTLY the unsplit content — boundary lines belong to
     the split where they start, the next split discards its leading
@@ -430,7 +444,7 @@ def test_cli_split_size_parallel_el(spark, tmp_path):
 
 def test_mongodump_writer_roundtrip_and_wrap_rules(spark, tmp_path):
     """The write side of the interchange: $oid/$date/$numberLong/
-    $numberDouble wrapping is the exact inverse of the reader's
+    $numberDouble wrapping is the exact inverse of read_mongodump's
     unwrapping (lossless round trip incl. sub-ms timestamps and
     beyond-double-safe longs); nulls are omitted like mongoexport;
     binary columns fail loud; a rerun overwrites its own part files."""
@@ -456,7 +470,7 @@ def test_mongodump_writer_roundtrip_and_wrap_rules(spark, tmp_path):
     df.write.format("mongodump").mode("overwrite").save(out)
     df.write.format("mongodump").mode("overwrite").save(out)  # rerun
 
-    back = spark.read.format("mongodump").schema(ddl).load(out)
+    back = read_mongodump(spark, out)
     got = sorted([tuple(r) for r in back.collect()])
     assert got == sorted(rows)
 
@@ -491,7 +505,7 @@ def test_mongodump_writer_overwrite_drops_stale_parts(spark, tmp_path):
     wide.write.format("mongodump").mode("overwrite").save(out)
     narrow = spark.createDataFrame([(100, "only")], ddl).repartition(1)
     narrow.write.format("mongodump").mode("overwrite").save(out)
-    back = spark.read.format("mongodump").schema(ddl).load(out)
+    back = read_mongodump(spark, out)
     assert [tuple(r) for r in back.collect()] == [(100, "only")]
 
 
@@ -515,7 +529,7 @@ def test_mongodump_writer_append_preserves_existing_parts(spark, tmp_path):
     third = spark.createDataFrame([(200, "c0")], ddl)
     third.write.format("mongodump").mode("append").save(out)
 
-    back = spark.read.format("mongodump").schema(ddl).load(out)
+    back = read_mongodump(spark, out)
     assert sorted(r["k"] for r in back.collect()) == [
         0, 1, 2, 3, 100, 101, 200,
     ]
@@ -523,7 +537,7 @@ def test_mongodump_writer_append_preserves_existing_parts(spark, tmp_path):
     # included
     narrow = spark.createDataFrame([(999, "z")], ddl).repartition(1)
     narrow.write.format("mongodump").mode("overwrite").save(out)
-    back = spark.read.format("mongodump").schema(ddl).load(out)
+    back = read_mongodump(spark, out)
     assert [tuple(r) for r in back.collect()] == [(999, "z")]
 
 
@@ -574,14 +588,10 @@ def test_mongodump_writer_struct_and_unsupported_types(spark, tmp_path):
     for f in sorted((tmp_path / "dump").glob("part-*")):
         lines += [l for l in f.read_text().splitlines() if l]
     assert jsonlib.loads(lines[0])["s"] == {"a": 7, "b": "x"}
-    # flatten=true reads it back as dotted paths — the round trip the
-    # reader advertises for subdocuments
-    back = (
-        spark.read.format("mongodump")
-        .schema("k long, `s.a` int, `s.b` string")
-        .option("flatten", "true")
-        .load(out)
-    )
+    # on_nested="flatten" reads it back as dotted paths — the round
+    # trip read_mongodump advertises for subdocuments
+    back = read_mongodump(spark, out, on_nested="flatten")
+    assert back.columns == ["k", "s.a", "s.b"]
     assert [tuple(r) for r in back.collect()] == [(1, 7, "x")]
 
     from decimal import Decimal
@@ -852,10 +862,19 @@ EQUIVALENCE_DOCS = [
 ]
 
 
+def _field_value(value, as_str: bool):
+    """A Python-decoded value as the scan delivers it in a column read
+    as string (``as_str``): its text, a datetime in ISO form."""
+    if not as_str or value is None or isinstance(value, str):
+        return value
+    return value.isoformat() if isinstance(value, datetime) else str(value)
+
+
 def assert_jvm_and_python_are_equal_collect(spark, path, flatten):
     """Collect the JVM scan once (before the cast) and compare it, row
-    for row, with the pure-Python decode of the same lines
-    (``_decode_line`` + ``_field_value``) under the same read types."""
+    for row, with the pure-Python decode of the same lines (the peek's
+    ``_decode_raw`` + ``_unwrap_doc``, then ``_field_value``) under the
+    same read types."""
     from pyspark.sql import types as T
 
     from mongo2pq_spark.sources import mongodump
@@ -868,11 +887,9 @@ def assert_jvm_and_python_are_equal_collect(spark, path, flatten):
         for line in fh:
             if not line.strip():
                 continue
-            doc = mongodump._decode_line(line, flatten)
+            doc = mongodump._unwrap_doc(mongodump._decode_raw(line, flatten)[0])
             python.append(tuple(
-                mongodump._field_value(
-                    doc.get(name), isinstance(read.type, T.StringType)
-                )
+                _field_value(doc.get(name), isinstance(read.type, T.StringType))
                 for name, read in reads.items()
             ))
     assert [tuple(r) for r in jvm] == python

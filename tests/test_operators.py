@@ -586,6 +586,36 @@ def test_uncache_stream_is_targeted_and_idempotent(spark):
     assert _LIVE_CACHES == []
 
 
+def test_cache_dropped_outside_the_registry_is_persisted_again(spark):
+    """``spark.catalog.clearCache()`` drops every cache but leaves
+    ``df.is_cached`` True: the sameSemantics memo must not hand back
+    the dead frame (each consumer would recompute the stream it was
+    meant to share), and ``pin`` must persist such a frame again."""
+    from mongo2pq_spark.operators.cache import cache_stream, pin, release_caches
+
+    def stream():
+        return spark.range(40).withColumn("h", F.col("id") % 7)
+
+    def live(df):
+        return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+    release_caches()
+    first = cache_stream(stream())
+    first.count()
+    pinned = pin(spark.range(30).withColumn("g", F.col("id") * 5))
+    spark.catalog.clearCache()
+    assert first.is_cached and not live(first)
+
+    again = cache_stream(stream())
+    assert live(again)
+    again.count()
+    plan = again._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    assert "InMemoryTableScan" in plan
+    assert live(pin(pinned))
+    release_caches()
+    pinned.unpersist()
+
+
 def test_cache_scope_is_thread_private(spark):
     """Two threads, each inside its own cache_scope, register more
     streams than _MAX_LIVE before anything materializes: nothing is

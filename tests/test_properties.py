@@ -134,13 +134,20 @@ docs = st.dictionaries(
 )
 
 
+def _peek_decode(doc: dict, flatten: bool) -> dict:
+    """A document through the peek's per-line decode."""
+    import json
+
+    from mongo2pq_spark.sources.mongodump import _decode_raw, _unwrap_doc
+
+    return _unwrap_doc(_decode_raw(json.dumps(doc), flatten)[0])
+
+
 @given(doc=docs)
 def test_flatten_doc_removes_all_dicts_and_is_idempotent(doc):
-    from mongo2pq_spark.sources.mongodump import flatten_doc
-
-    flat = flatten_doc(doc)
+    flat = _peek_decode(doc, True)
     assert all(not isinstance(v, dict) for v in flat.values())
-    assert flatten_doc(flat) == flat  # idempotent
+    assert _peek_decode(flat, True) == flat  # idempotent
     # no leaf is lost unless shadowed by a dotted-key collision
     def leaves(d, prefix=""):
         n = 0
@@ -164,51 +171,54 @@ def test_unwrap_extended_json_total_on_wrapper_free_docs(doc):
 
 @given(line=st.text(max_size=60), flatten=st.booleans())
 def test_decode_line_never_raises_outside_decode_errors(line, flatten):
-    """The permissive contract: ANY input line either decodes or
-    raises one of _DECODE_ERRORS — nothing else can escape, so
-    permissive mode can never crash on a corrupt line."""
-    from mongo2pq_spark.sources.mongodump import _DECODE_ERRORS, _decode_line
+    """The permissive contract of the peek: ANY input line either
+    decodes or raises one of _DECODE_ERRORS — nothing else can escape,
+    so permissive mode can never crash on a corrupt line."""
+    from mongo2pq_spark.sources.mongodump import (
+        _DECODE_ERRORS,
+        _decode_raw,
+        _unwrap_doc,
+    )
 
     try:
-        out = _decode_line(line, flatten)
+        out = _unwrap_doc(_decode_raw(line, flatten)[0])
         assert isinstance(out, dict)
     except _DECODE_ERRORS:
         pass
 
 
-@settings(max_examples=60, deadline=None)
+#: the most read tasks one example of the split property may plan
+MAX_SPLITS = 64
+
+
+@settings(max_examples=15, deadline=None)
 @given(
     pads=st.lists(st.integers(min_value=0, max_value=40), min_size=1, max_size=60),
-    split_size=st.integers(min_value=1, max_value=200),
+    data=st.data(),
 )
-def test_split_read_partition_protocol_is_exact(tmp_path_factory, pads, split_size):
+def test_split_read_partition_protocol_is_exact(spark, tmp_path_factory, pads, data):
     """PROPERTY: for any file of variable-length JSON lines and any
-    split size, the union of byte-range partition reads equals the
-    unsplit read — no line lost, none duplicated, regardless of where
-    boundaries fall (mid-line, on a newline, at a line start). Pure
-    driver-side: exercises MongoDumpReader.partitions()/read() without
-    Spark jobs."""
+    split size, the byte-range split read of ``read_mongodump`` equals
+    the unsplit read — no line lost, none duplicated, regardless of
+    where boundaries fall (mid-line, on a newline, at a line start).
+    The split size is bounded below by the file size over
+    ``MAX_SPLITS``, so no example plans more tasks than that."""
     import json as jsonlib
 
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from mongo2pq_spark.sources.mongodump import MongoDumpReader
+    from mongo2pq_spark.sources.mongodump import read_mongodump
 
     d = tmp_path_factory.mktemp("splitfuzz")
     path = d / "f.jsonl"
     lines = [jsonlib.dumps({"n": i, "p": "x" * pad}) for i, pad in enumerate(pads)]
     path.write_text("\n".join(lines) + "\n")
+    size = path.stat().st_size
+    split_size = data.draw(
+        st.integers(min_value=-(-size // MAX_SPLITS), max_value=size), "split_size"
+    )
 
-    schema = StructType([StructField("n", LongType())])
-
-    def read_all(size):
-        reader = MongoDumpReader(
-            schema, {"path": str(path), "splitsize": str(size)}
-        )
-        out = []
-        for part in reader.partitions():
-            out.extend(row[0] for row in reader.read(part))
-        return sorted(out)
+    def read_all(k):
+        df = read_mongodump(spark, str(path), split_size=k)
+        return sorted(r["n"] for r in df.collect())
 
     whole = read_all(0)
     assert whole == list(range(len(pads)))

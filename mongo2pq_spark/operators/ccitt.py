@@ -38,6 +38,8 @@ like operators/tiff.py it plugs into.
 
 from __future__ import annotations
 
+from mongo2pq_spark.operators.bitio import BitReader, BitWriter, prefix_lut
+
 # ITU-T T.4 Table 2 — white run codes (run: bitstring).
 _WHITE_CODES = {
     0: "00110101", 1: "000111", 2: "0111", 3: "1000", 4: "1011",
@@ -118,51 +120,35 @@ _V_CODES = {
     0: "1", 1: "011", 2: "000011", 3: "0000011",
     -1: "010", -2: "000010", -3: "0000010",
 }
-_PASS = "0001"
-_HORIZ = "001"
-_EOL = "000000000001"
+# pass and horizontal mode codes (T.4 Table 4) and EOL, as (code, nbits)
+_PASS = (0b0001, 4)
+_HORIZ = (0b001, 3)
+_EOL = (0b000000000001, 12)
 
 
-def _decode_table(codes: dict[int, str]) -> dict[tuple[int, int], int]:
-    t = {(len(c), int(c, 2)): run for run, c in codes.items()}
-    t.update(
-        {(len(c), int(c, 2)): run for run, c in _EXT_CODES.items()}
-    )
-    return t
+def _codes(bitstrings: dict) -> dict:
+    """value → (code, nbits), from the spec's bit strings."""
+    return {v: (int(c, 2), len(c)) for v, c in bitstrings.items()}
 
 
-_DEC_WHITE = _decode_table(_WHITE_CODES)
-_DEC_BLACK = _decode_table(_BLACK_CODES)
+def _decoder(codes: dict) -> tuple[dict, list]:
+    """The (table, lut) pair ``BitReader.read_code`` decodes with."""
+    table = {(nbits, code): v for v, (code, nbits) in codes.items()}
+    return table, prefix_lut(table)
+
+
 _ENC_RUNS = (
-    {**_WHITE_CODES, **_EXT_CODES},
-    {**_BLACK_CODES, **_EXT_CODES},
+    _codes({**_WHITE_CODES, **_EXT_CODES}),
+    _codes({**_BLACK_CODES, **_EXT_CODES}),
 )
-_DEC_MODES = {
-    (len(c), int(c, 2)): ("v", d) for d, c in _V_CODES.items()
-}
-_DEC_MODES[(len(_PASS), int(_PASS, 2))] = ("p", 0)
-_DEC_MODES[(len(_HORIZ), int(_HORIZ, 2))] = ("h", 0)
-
-
-def _first_level_lut(table: dict) -> list:
-    """8-bit first-level decode LUT (r19, guide §4.2 — the per-bit
-    dict-probe loops dominated fax decode): window → (code length,
-    value) for every code of ≤8 bits; longer codes leave None and
-    fall back to the original bitwise walk. Pure reindexing of the
-    (nbits, code)→value table — decode results identical by
-    construction."""
-    lut = [None] * 256
-    for (nbits, code), val in table.items():
-        if nbits <= 8:
-            base = code << (8 - nbits)
-            for i in range(1 << (8 - nbits)):
-                lut[base + i] = (nbits, val)
-    return lut
-
-
-_LUT_WHITE = _first_level_lut(_DEC_WHITE)
-_LUT_BLACK = _first_level_lut(_DEC_BLACK)
-_LUT_MODES = _first_level_lut(_DEC_MODES)  # mode codes are ≤7 bits
+_ENC_V = _codes(_V_CODES)
+_DEC_RUNS = tuple(_decoder(codes) for codes in _ENC_RUNS)
+_DEC_MODES = _decoder(
+    {("v", d): code for d, code in _ENC_V.items()}
+    | {("p", 0): _PASS, ("h", 0): _HORIZ}
+)
+_RUN_MAX_BITS = 13  # the longest run codes (black makeup 512..1728)
+_MODE_MAX_BITS = 7
 
 
 _BIT_REVERSE = bytes(
@@ -178,107 +164,29 @@ def reverse_fill_order(data: bytes) -> bytes:
     return bytes(data).translate(_BIT_REVERSE)
 
 
-class _BitWriter:
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, bits: str) -> None:
-        acc, n = self.acc, self.nbits
-        for ch in bits:
-            acc = (acc << 1) | (ch == "1")
-            n += 1
-            if n == 8:
-                self.out.append(acc)
-                acc, n = 0, 0
-        self.acc, self.nbits = acc, n
-
-    def byte_align(self) -> None:
-        if self.nbits:
-            self.out.append(self.acc << (8 - self.nbits))
-            self.acc, self.nbits = 0, 0
-
-    def getvalue(self) -> bytes:
-        self.byte_align()
-        return bytes(self.out)
-
-
-class _BitReader:
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read_bit(self) -> int:
-        i = self.pos
-        if i >= len(self.data) * 8:
-            raise ValueError("truncated CCITT stream")
-        self.pos = i + 1
-        return (self.data[i >> 3] >> (7 - (i & 7))) & 1
-
-    def peek8(self) -> int:
-        """The next 8 bits, NOT consumed (caller guarantees ≥8 bits
-        remain) — feeds the first-level decode LUTs."""
-        p = self.pos
-        end = p + 8
-        chunk = int.from_bytes(self.data[p >> 3:(end + 7) >> 3], "big")
-        return (chunk >> (-end & 7)) & 0xFF
-
-    def byte_align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-    def exhausted(self, slack_bits: int = 7) -> bool:
-        return self.pos + slack_bits >= len(self.data) * 8
-
-
-def _emit_run(bw: _BitWriter, run: int, color: int) -> None:
+def _emit_run(bw: BitWriter, run: int, color: int) -> None:
     """One run as [extended-makeup]* [makeup] terminating-code."""
     table = _ENC_RUNS[color]
     while run > 2623:  # 2560 extended + 63 terminating headroom
-        bw.write(table[2560])
+        bw.write(*table[2560])
         run -= 2560
     if run >= 64:
-        bw.write(table[(run // 64) * 64])
+        bw.write(*table[(run // 64) * 64])
         run %= 64
-    bw.write(table[run])
+    bw.write(*table[run])
 
 
-def _decode_run(br: _BitReader, color: int) -> int:
+def _decode_run(br: BitReader, color: int) -> int:
     """MH run for ``color``: makeup codes accumulate until a
-    terminating (<64) code closes the run. Fast path: one 8-bit peek
-    through the first-level LUT resolves every ≤8-bit code; a miss
-    (longer code, or <8 bits left in the stream) falls back to the
-    original bitwise walk from the same position."""
-    table = _DEC_BLACK if color else _DEC_WHITE
-    lut = _LUT_BLACK if color else _LUT_WHITE
-    total_bits = len(br.data) * 8
+    terminating (<64) code closes the run."""
+    table, lut = _DEC_RUNS[color]
     total = 0
     while True:
-        val = None
-        pos = br.pos
-        if pos + 8 <= total_bits:
-            hit = lut[br.peek8()]
-            if hit is not None:
-                nbits, val = hit
-                br.pos = pos + nbits
+        val = br.read_code(table, lut, _RUN_MAX_BITS)
         if val is None:
-            acc = 0
-            nbits = 0
-            while True:
-                acc = (acc << 1) | br.read_bit()
-                nbits += 1
-                if (nbits, acc) in table:
-                    break
-                if nbits > 13:
-                    raise ValueError(
-                        f"invalid CCITT {'black' if color else 'white'} "
-                        f"code {acc:0{nbits}b}"
-                    )
-            val = table[(nbits, acc)]
+            raise ValueError(
+                f"invalid CCITT {'black' if color else 'white'} code"
+            )
         total += val
         if val < 64:
             return total
@@ -313,7 +221,7 @@ def _b1_b2(ref_changes: list[int], a0: int, color: int, w: int):
     return b1, b2
 
 
-def _encode_1d_row(bw: _BitWriter, row: bytes) -> None:
+def _encode_1d_row(bw: BitWriter, row: bytes) -> None:
     """MH row: alternating runs, white first (zero-length white code
     when the row opens black)."""
     runs = []
@@ -331,7 +239,7 @@ def _encode_1d_row(bw: _BitWriter, row: bytes) -> None:
         _emit_run(bw, r, i & 1)
 
 
-def _encode_2d_row(bw: _BitWriter, row: bytes, ref: bytes, w: int) -> None:
+def _encode_2d_row(bw: BitWriter, row: bytes, ref: bytes, w: int) -> None:
     ref_changes = _changes(ref)
     a0, color = -1, 0
     while a0 < w:
@@ -342,23 +250,23 @@ def _encode_2d_row(bw: _BitWriter, row: bytes, ref: bytes, w: int) -> None:
         while a1 < w and row[a1] == color:
             a1 += 1
         if b2 < a1:
-            bw.write(_PASS)
+            bw.write(*_PASS)
             a0 = b2
         elif abs(a1 - b1) <= 3:
-            bw.write(_V_CODES[a1 - b1])
+            bw.write(*_ENC_V[a1 - b1])
             a0 = a1
             color ^= 1
         else:
             a2 = a1
             while a2 < w and row[a2] == (color ^ 1):
                 a2 += 1
-            bw.write(_HORIZ)
+            bw.write(*_HORIZ)
             _emit_run(bw, a1 - max(a0, 0), color)
             _emit_run(bw, a2 - a1, color ^ 1)
             a0 = a2
 
 
-def _decode_1d_row(br: _BitReader, w: int) -> bytes:
+def _decode_1d_row(br: BitReader, w: int) -> bytes:
     row = bytearray(w)
     pos = 0
     color = 0
@@ -375,32 +283,17 @@ def _decode_1d_row(br: _BitReader, w: int) -> bytes:
     return bytes(row)
 
 
-def _decode_2d_row(br: _BitReader, ref: bytes, w: int) -> bytes:
+def _decode_2d_row(br: BitReader, ref: bytes, w: int) -> bytes:
     ref_changes = _changes(ref)
+    mode_table, mode_lut = _DEC_MODES
     row = bytearray(w)
     a0, color = -1, 0
     while a0 < w:
         b1, b2 = _b1_b2(ref_changes, a0, color, w)
-        hit = None
-        pos = br.pos
-        if pos + 8 <= len(br.data) * 8:
-            hit = _LUT_MODES[br.peek8()]
-        if hit is not None:  # every mode code is ≤7 bits
-            nbits, (mode, d) = hit
-            br.pos = pos + nbits
-        else:  # <8 bits left in the stream: original bitwise walk
-            acc = 0
-            nbits = 0
-            while True:
-                acc = (acc << 1) | br.read_bit()
-                nbits += 1
-                if (nbits, acc) in _DEC_MODES:
-                    break
-                if nbits > 7:
-                    raise ValueError(
-                        f"invalid CCITT 2-D mode code {acc:0{nbits}b}"
-                    )
-            mode, d = _DEC_MODES[(nbits, acc)]
+        hit = br.read_code(mode_table, mode_lut, _MODE_MAX_BITS)
+        if hit is None:
+            raise ValueError("invalid CCITT 2-D mode code")
+        mode, d = hit
         start = max(a0, 0)
         if mode == "p":
             if color:
@@ -434,14 +327,10 @@ def _decode_2d_row(br: _BitReader, ref: bytes, w: int) -> bytes:
     return bytes(row)
 
 
-def _expect_eol(br: _BitReader) -> None:
+def _expect_eol(br: BitReader) -> None:
     """Consume fill bits + EOL: zeros until the terminating 1, at
     least 11 of them (T.4 §4.1.2; fill lengthens the zero span)."""
-    zeros = 0
-    while True:
-        if br.read_bit():
-            break
-        zeros += 1
+    zeros = br.read_unary()
     if zeros < 11:
         raise ValueError(
             f"expected CCITT EOL, saw {zeros} zero bits before 1"
@@ -461,17 +350,17 @@ def ccitt_encode(
     h, w = a.shape
     if int(a.max(initial=0)) > 1:
         raise ValueError("CCITT input must be 0/1 bilevel")
-    bw = _BitWriter()
+    bw = BitWriter()
     if mode == 2:
         for y in range(h):
             _encode_1d_row(bw, a[y].tobytes())
-            bw.byte_align()
+            bw.align(0)
     elif mode == 3:
         prev = None
         for y in range(h):
-            bw.write(_EOL)
+            bw.write(*_EOL)
             if two_d:
-                bw.write("1" if prev is None else "0")
+                bw.write(1 if prev is None else 0, 1)  # 1: 1-D row
             if two_d and prev is not None:
                 _encode_2d_row(bw, a[y].tobytes(), prev, w)
             else:
@@ -483,9 +372,11 @@ def ccitt_encode(
             cur = a[y].tobytes()
             _encode_2d_row(bw, cur, ref, w)
             ref = cur
-        bw.write(_EOL + _EOL)  # EOFB
+        bw.write(*_EOL)  # EOFB: two EOLs
+        bw.write(*_EOL)
     else:
         raise ValueError(f"CCITT fixture mode {mode}")
+    bw.align(0)
     return bw.getvalue()
 
 
@@ -508,11 +399,12 @@ def ccitt_encode_k(
         return ccitt_encode(a, 4)
     if k > 0:
         return ccitt_encode(a, 3, two_d=True)
-    bw = _BitWriter()
+    bw = BitWriter()
     for y in range(h):
         _encode_1d_row(bw, a[y].tobytes())
         if byte_align:
-            bw.byte_align()
+            bw.align(0)
+    bw.align(0)
     return bw.getvalue()
 
 
@@ -530,11 +422,11 @@ def ccitt_decode_k(
         return ccitt_decode(data, w, n_rows, 4)
     if k > 0:
         return ccitt_decode(data, w, n_rows, 3, two_d=True)
-    br = _BitReader(data)
+    br = BitReader(data, "CCITT stream")
     rows = []
     for y in range(n_rows):
         if byte_align and y:
-            br.byte_align()
+            br.align()
         rows.append(_decode_1d_row(br, w))
     arr = np.frombuffer(b"".join(rows), dtype="uint8").reshape(
         n_rows, w
@@ -551,13 +443,13 @@ def ccitt_decode(
     value (2/3/4); ``two_d`` is T4Options bit 0 for mode 3."""
     import numpy as np
 
-    br = _BitReader(data)
+    br = BitReader(data, "CCITT stream")
     rows = []
     ref = bytes(w)
     for y in range(n_rows):
         if mode == 2:
             if y:
-                br.byte_align()
+                br.align()
             row = _decode_1d_row(br, w)
         elif mode == 3:
             _expect_eol(br)

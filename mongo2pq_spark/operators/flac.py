@@ -25,6 +25,8 @@ import hashlib
 
 from pyspark.sql import DataFrame
 
+from mongo2pq_spark.operators.bitio import BitReader, BitWriter
+
 FLAC_MAGIC = b"fLaC"
 
 # fixed-predictor coefficient table, order 0..4 (the spec's closed
@@ -86,96 +88,7 @@ def _crc16(data: bytes) -> int:
     return crc
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        if nbits == 0:
-            return
-        self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
-        self.nbits += nbits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def write_signed(self, value: int, nbits: int) -> None:
-        self.write(value & ((1 << nbits) - 1), nbits)
-
-    def write_unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)  # q zeros then a 1
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def getvalue(self) -> bytes:
-        assert self.nbits == 0, "unaligned"
-        return bytes(self.buf)
-
-
-class _BitReader:
-    """Bit-level reader over the frame bytes. The hot paths (r19,
-    guide §4.2 — `read` and `read_unary` were >50% of a frame decode
-    in profiling) avoid per-bit Python loops: `read` slices the
-    covering byte span through one C-level ``int.from_bytes``, and
-    `read_unary` scans whole bytes via ``bit_length`` instead of
-    pulling one bit per call. Values are bit-identical to the former
-    per-bit formulation by construction."""
-
-    def __init__(self, data: bytes, pos_bytes: int = 0) -> None:
-        self.data = data
-        self.pos = pos_bytes * 8
-        self._nbits = len(data) * 8
-
-    def read(self, nbits: int) -> int:
-        pos = self.pos
-        end = pos + nbits
-        if end > self._nbits:
-            raise ValueError("truncated FLAC bitstream")
-        chunk = int.from_bytes(
-            self.data[pos >> 3:(end + 7) >> 3], "big"
-        )
-        self.pos = end
-        return (chunk >> (-end & 7)) & ((1 << nbits) - 1)
-
-    def read_signed(self, nbits: int) -> int:
-        v = self.read(nbits)
-        if v >= 1 << (nbits - 1):
-            v -= 1 << nbits
-        return v
-
-    def read_unary(self) -> int:
-        data, pos, total = self.data, self.pos, self._nbits
-        q = 0
-        while True:
-            if pos >= total:
-                raise ValueError("truncated FLAC bitstream")
-            # bits remaining in the current byte, high-to-low
-            avail = 8 - (pos & 7)
-            window = data[pos >> 3] & ((1 << avail) - 1)
-            if window:
-                lead_zeros = avail - window.bit_length()
-                self.pos = pos + lead_zeros + 1  # consume the 1 bit
-                return q + lead_zeros
-            q += avail
-            pos += avail
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-    def byte_pos(self) -> int:
-        assert self.pos % 8 == 0
-        return self.pos >> 3
-
-
-def _utf8_code(bw: _BitWriter, value: int) -> None:
+def _utf8_code(bw: BitWriter, value: int) -> None:
     """The frame header's UTF-8-style variable-length number."""
     if value < 0x80:
         bw.write(value, 8)
@@ -190,7 +103,7 @@ def _utf8_code(bw: _BitWriter, value: int) -> None:
         bw.write(0x80 | ((value >> (6 * k)) & 0x3F), 8)
 
 
-def _utf8_decode(br: _BitReader) -> int:
+def _utf8_decode(br: BitReader) -> int:
     lead = br.read(8)
     if lead < 0x80:
         return lead
@@ -244,7 +157,7 @@ def _best_rice_param(zz, max_param: int = 14) -> int:
     return best_p
 
 
-def _write_residuals(bw: _BitWriter, res, block_size: int, order: int) -> None:
+def _write_residuals(bw: BitWriter, res, block_size: int, order: int) -> None:
     """Residual coding: rice method 0, best partition order among the
     divisible ones, per-partition best parameter with the ESCAPE
     (raw verbatim bits) chosen whenever it is cheaper — the full
@@ -307,7 +220,7 @@ def _write_residuals(bw: _BitWriter, res, block_size: int, order: int) -> None:
                 bw.write(v, arg)
 
 
-def _read_residuals(br: _BitReader, block_size: int, order: int):
+def _read_residuals(br: BitReader, block_size: int, order: int):
     import numpy as np
 
     method = br.read(2)
@@ -326,7 +239,7 @@ def _read_residuals(br: _BitReader, block_size: int, order: int):
         if param == escape:
             raw = br.read(5)
             for i in range(n):
-                out[idx + i] = br.read_signed(raw) if raw else 0
+                out[idx + i] = br.read_signed(raw)
         else:
             for i in range(n):
                 q = br.read_unary()
@@ -401,7 +314,7 @@ def _subframe_cost_fixed(samples, order: int) -> int:
     return len(zz) and _rice_cost(zz, _best_rice_param(zz))
 
 
-def _write_subframe(bw: _BitWriter, samples, bps: int) -> None:
+def _write_subframe(bw: BitWriter, samples, bps: int) -> None:
     """Best-of CONSTANT / FIXED(0..4) / LPC(8) subframe, with wasted-
     bits detection (common trailing zeros shift out, the spec's
     headroom trick) — every subframe type the decoder handles is
@@ -483,7 +396,7 @@ def _write_subframe(bw: _BitWriter, samples, bps: int) -> None:
     _write_residuals(bw, res, n, order)
 
 
-def _read_subframe(br: _BitReader, block_size: int, bps: int):
+def _read_subframe(br: BitReader, block_size: int, bps: int):
     import numpy as np
 
     if br.read(1):
@@ -526,11 +439,14 @@ def _read_subframe(br: _BitReader, block_size: int, bps: int):
         res = _read_residuals(br, block_size, order)
         out = np.empty(block_size, dtype=np.int64)
         out[:order] = warm
-        for i in range(order, block_size):
-            pred = 0
-            for j in range(order):
-                pred += coefs[j] * int(out[i - 1 - j])
-            out[i] = res[i - order] + (pred >> shift)
+        try:
+            for i in range(order, block_size):
+                pred = 0
+                for j in range(order):
+                    pred += coefs[j] * int(out[i - 1 - j])
+                out[i] = res[i - order] + (pred >> shift)
+        except OverflowError as exc:  # corrupt coefficients diverge
+            raise ValueError("LPC prediction overflows int64") from exc
     else:
         raise ValueError(f"reserved subframe type {stype}")
     if wasted:
@@ -622,7 +538,7 @@ def _encode_frame(blk, fno, sample_rate, bps, nominal_bs, stereo_mode):
     else:
         mode = "independent"
 
-    bw = _BitWriter()
+    bw = BitWriter()
     bw.write(0b11111111111110, 14)
     bw.write(0, 1)  # reserved
     bw.write(0, 1)  # fixed blocking
@@ -644,11 +560,8 @@ def _encode_frame(blk, fno, sample_rate, bps, nominal_bs, stereo_mode):
         bw.write(n - 1, 8)
     elif bs_code == 7:
         bw.write(n - 1, 16)
-    bw.align()
-    header = bw.getvalue()
-    bw = _BitWriter()
-    bw.buf = bytearray(header)
-    bw.write(_crc8(header), 8)
+    bw.align(0)
+    bw.write(_crc8(bw.getvalue()), 8)
 
     if mode == "independent":
         chans = [(blk[:, c], bps) for c in range(channels)]
@@ -663,11 +576,8 @@ def _encode_frame(blk, fno, sample_rate, bps, nominal_bs, stereo_mode):
         ]
     for ch, ch_bps in chans:
         _write_subframe(bw, ch, ch_bps)
-    bw.align()
-    frame = bw.getvalue()
-    bw = _BitWriter()
-    bw.buf = bytearray(frame)
-    bw.write(_crc16(frame), 16)
+    bw.align(0)
+    bw.write(_crc16(bw.getvalue()), 16)
     return bw.getvalue()
 
 
@@ -753,7 +663,7 @@ def decode_flac(payload: bytes) -> dict:
 def _decode_frame(payload: bytes, pos: int, info: dict):
     import numpy as np
 
-    br = _BitReader(payload, pos)
+    br = BitReader(payload, "FLAC bitstream", pos)
     if br.read(14) != 0b11111111111110:
         raise ValueError("lost frame sync")
     if br.read(1):

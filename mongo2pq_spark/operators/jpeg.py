@@ -53,6 +53,8 @@ import struct
 
 from pyspark.sql import DataFrame
 
+from mongo2pq_spark.operators.bitio import BitReader, BitWriter, prefix_lut
+
 JPEG_MAGIC = b"\xff\xd8"
 
 
@@ -131,82 +133,15 @@ def _dct_matrix():
     return m
 
 
-class _BitWriter:
-    def __init__(self):
-        self.buf = bytearray()
-        self._acc = 0
-        self._n = 0
-
-    def write(self, value: int, length: int) -> None:
-        for i in reversed(range(length)):
-            self._acc = (self._acc << 1) | ((value >> i) & 1)
-            self._n += 1
-            if self._n == 8:
-                self.buf.append(self._acc)
-                if self._acc == 0xFF:  # byte stuffing
-                    self.buf.append(0x00)
-                self._acc = 0
-                self._n = 0
-
-    def flush(self) -> None:
-        while self._n:
-            self.write(1, 1)  # pad final byte with 1-bits (F.1.2.3)
+_ENTROPY_STREAM = "JPEG entropy stream"
 
 
-class _BitReader:
-    """MSB-first bit reader over an un-stuffed entropy segment. The
-    hot paths (r19, guide §4.2 — entropy decoding was the profile's
-    top cost) avoid per-bit Python loops: multi-bit reads slice the
-    covering byte span through one C-level ``int.from_bytes``, and
-    ``peek8`` exposes the next 8 bits without consuming them for the
-    Huffman first-level lookup table. Values are bit-identical to the
-    former per-bit formulation."""
-
-    __slots__ = ("data", "pos", "_nbits")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-        self._nbits = len(data) * 8
-
-    def read_bit(self) -> int:
-        p = self.pos
-        if p >= self._nbits:
-            raise ValueError("truncated JPEG entropy stream")
-        self.pos = p + 1
-        return (self.data[p >> 3] >> (7 - (p & 7))) & 1
-
-    def read(self, length: int) -> int:
-        p = self.pos
-        end = p + length
-        if end > self._nbits:
-            raise ValueError("truncated JPEG entropy stream")
-        chunk = int.from_bytes(self.data[p >> 3:(end + 7) >> 3], "big")
-        self.pos = end
-        return (chunk >> (-end & 7)) & ((1 << length) - 1)
-
-    def peek8(self) -> int:
-        """The next 8 bits, NOT consumed (caller guarantees ≥8 bits
-        remain)."""
-        p = self.pos
-        end = p + 8
-        chunk = int.from_bytes(self.data[p >> 3:(end + 7) >> 3], "big")
-        return (chunk >> (-end & 7)) & 0xFF
-
-
-def _build_huff_lut(table) -> list:
-    """First-level Huffman LUT: 8-bit window → (code length, symbol)
-    for every code of ≤8 bits (each short code fills its 2^(8-len)
-    slots). Codes longer than 8 bits leave None and fall back to the
-    bitwise walk. Pure reindexing of the (length, code)→symbol dict —
-    decode results are identical by construction."""
-    lut = [None] * 256
-    for (length, code), sym in table.items():
-        if length <= 8:
-            base = code << (8 - length)
-            for i in range(1 << (8 - length)):
-                lut[base + i] = (length, sym)
-    return lut
+def _close_segment(bw: BitWriter) -> bytes:
+    """Close one entropy-coded segment: pad the last byte with 1-bits
+    and stuff every 0xFF to 0xFF 00 (F.1.2.3). Stuffing is per
+    segment, so the RSTn markers between segments stay markers."""
+    bw.align(1)
+    return bw.getvalue().replace(b"\xff", b"\xff\x00")
 
 
 def _category(v: int) -> int:
@@ -447,7 +382,8 @@ def encode_jpeg(
         raise ValueError("restart_interval must be >= 1")
 
     m = _dct_matrix()
-    writer = _BitWriter()
+    entropy = bytearray()
+    writer = BitWriter()
     dc_prev = [0] * n_comp
     mcu_idx = 0
     for my in range(ph // mcu_h):
@@ -457,10 +393,11 @@ def encode_jpeg(
                 and mcu_idx
                 and mcu_idx % restart_interval == 0
             ):
-                writer.flush()
-                writer.buf += bytes(
+                entropy += _close_segment(writer)
+                entropy += bytes(
                     [0xFF, 0xD0 + ((mcu_idx // restart_interval - 1) % 8)]
                 )
+                writer = BitWriter()
                 dc_prev = [0] * n_comp
             for ci, (hi, vi) in enumerate(samp):
                 for r in range(vi):
@@ -475,7 +412,7 @@ def encode_jpeg(
                             center=center, max_ac_size=max_ac,
                         )
             mcu_idx += 1
-    writer.flush()
+    entropy += _close_segment(writer)
 
     sos_comps = b"".join(
         struct.pack(">BB", cid + 1, 0x00) for cid in range(n_comp)
@@ -491,7 +428,7 @@ def encode_jpeg(
         + ac_dht
         + dri
         + _seg(0xDA, bytes([n_comp]) + sos_comps + b"\x00\x3f\x00")
-        + bytes(writer.buf)
+        + entropy
         + b"\xff\xd9"  # EOI
     )
 
@@ -694,7 +631,7 @@ def encode_jpeg_progressive(
 
     al_dc, al_ac = 1, 1
     # scan 1: DC first pass, all components, interleaved, Al=1
-    bw = _BitWriter()
+    bw = BitWriter()
     dc_prev = [0] * n_comp
     for ci, zz in mcu_dc_blocks():
         v = zz[0] >> al_dc  # DC point transform: arithmetic shift
@@ -705,8 +642,7 @@ def encode_jpeg_progressive(
         bw.write(code, ln)
         if cat:
             bw.write(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-    bw.flush()
-    out += sos(list(range(n_comp)), 0, 0, 0, al_dc) + bytes(bw.buf)
+    out += sos(list(range(n_comp)), 0, 0, 0, al_dc) + _close_segment(bw)
 
     def comp_blocks(ci):
         nby, nbx = spec_grid[ci]
@@ -719,26 +655,23 @@ def encode_jpeg_progressive(
     bands = [(1, 5), (6, 63)]
     for ci in range(n_comp):
         for ss, se in bands:
-            bw = _BitWriter()
+            bw = BitWriter()
             _emit_ac_first(
                 bw, comp_blocks(ci), ss, se, al_ac, ac_codes,
                 max_size=14 if precision == 12 else 10,
             )
-            bw.flush()
-            out += sos([ci], ss, se, 0, al_ac) + bytes(bw.buf)
+            out += sos([ci], ss, se, 0, al_ac) + _close_segment(bw)
     for ci in range(n_comp):
         for ss, se in bands:
-            bw = _BitWriter()
+            bw = BitWriter()
             _emit_ac_refine(bw, comp_blocks(ci), ss, se, 0, ac_codes)
-            bw.flush()
-            out += sos([ci], ss, se, al_ac, 0) + bytes(bw.buf)
+            out += sos([ci], ss, se, al_ac, 0) + _close_segment(bw)
 
     # final scan: DC refinement, one bit per block
-    bw = _BitWriter()
+    bw = BitWriter()
     for ci, zz in mcu_dc_blocks():
         bw.write(zz[0] & 1, 1)
-    bw.flush()
-    out += sos(list(range(n_comp)), 0, 0, al_dc, 0) + bytes(bw.buf)
+    out += sos(list(range(n_comp)), 0, 0, al_dc, 0) + _close_segment(bw)
 
     out += b"\xff\xd9"
     return bytes(out)
@@ -850,7 +783,8 @@ def decode_jpeg_pixels(payload: bytes):
                     bits = list(body[i + 1:i + 17])
                     n = sum(bits)
                     vals = list(body[i + 17:i + 17 + n])
-                    huff[(tc, th)] = _build_decode_map(bits, vals)
+                    table = _build_decode_map(bits, vals)
+                    huff[(tc, th)] = (table, prefix_lut(table))
                     i += 17 + n
             elif marker == 0xDD:  # DRI
                 (dri,) = struct.unpack(">H", body[:2])
@@ -893,6 +827,10 @@ def decode_jpeg_pixels(payload: bytes):
     for i in range(n_comp):
         cid, sampling, tq = sof[6 + 3 * i:9 + 3 * i]
         hi, vi = sampling >> 4, sampling & 15
+        if not (1 <= hi <= 4 and 1 <= vi <= 4):
+            raise ValueError(
+                f"sampling factors {hi}x{vi} corrupt (T.81: 1-4 each)"
+            )
         if hi not in (1, 2) or vi not in (1, 2):
             raise NotImplementedError(
                 f"sampling factors {hi}x{vi} unsupported "
@@ -1036,41 +974,18 @@ def _decode_scan(scan, comps, coefs, nblocks, mcus_y, mcus_x,
                     yield [(0, ci, by, bx)]
 
     state = {
-        "reader": _BitReader(segments[0]),
+        "reader": BitReader(segments[0], _ENTROPY_STREAM),
         "seg": 0,
         "dc_prev": [0] * len(idxs),
         "eobrun": 0,
     }
 
-    # per-scan first-level LUTs (tables are per-image dicts parsed
-    # from DHT; ≤8 distinct tables per scan, built once each)
-    huff_luts: dict[int, list] = {}
-
-    def decode_sym(table) -> int:
-        reader = state["reader"]
-        lut = huff_luts.get(id(table))
-        if lut is None:
-            lut = huff_luts[id(table)] = _build_huff_lut(table)
-        pos = reader.pos
-        if pos + 8 <= reader._nbits:  # noqa: SLF001
-            window = reader.peek8()
-            hit = lut[window]
-            if hit is not None:  # every ≤8-bit code hits the LUT
-                length, sym = hit
-                reader.pos = pos + length
-                return sym
-            code = window  # consumed below: the code is ≥9 bits
-            reader.pos = pos + 8
-            start = 9
-        else:
-            code = 0
-            start = 1
-        for length in range(start, 17):
-            code = (code << 1) | reader.read_bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid JPEG Huffman code")
+    def decode_sym(tbl) -> int:
+        table, lut = tbl
+        sym = state["reader"].read_code(table, lut, 16)
+        if sym is None:
+            raise ValueError("invalid JPEG Huffman code")
+        return sym
 
     unit_idx = 0
     for unit in units():
@@ -1080,7 +995,9 @@ def _decode_scan(scan, comps, coefs, nblocks, mcus_y, mcus_x,
                 raise ValueError(
                     "restart interval declared but marker missing"
                 )
-            state["reader"] = _BitReader(segments[state["seg"]])
+            state["reader"] = BitReader(
+                segments[state["seg"]], _ENTROPY_STREAM
+            )
             state["dc_prev"] = [0] * len(idxs)
             state["eobrun"] = 0
         for pos_in_scan, ci, by, bx in unit:
@@ -1090,7 +1007,8 @@ def _decode_scan(scan, comps, coefs, nblocks, mcus_y, mcus_x,
                 if dc_tbl is None or ac_tbl is None:
                     raise ValueError("SOS references an undeclared DHT")
                 _decode_block_seq(
-                    state, decode_sym, dc_tbl, ac_tbl, row, pos_in_scan
+                    state, decode_sym, dc_tbl, ac_tbl, row, pos_in_scan,
+                    max_dc_cat,
                 )
             elif ss == 0:
                 if ah == 0:
@@ -1098,13 +1016,9 @@ def _decode_scan(scan, comps, coefs, nblocks, mcus_y, mcus_x,
                         raise ValueError(
                             "SOS references an undeclared DHT"
                         )
-                    cat = decode_sym(dc_tbl)
-                    if cat > max_dc_cat:
-                        raise ValueError(
-                            f"DC category > {max_dc_cat}"
-                        )
-                    diff = _extend(state["reader"].read(cat), cat)
-                    state["dc_prev"][pos_in_scan] += diff
+                    state["dc_prev"][pos_in_scan] += _dc_diff(
+                        state["reader"], decode_sym(dc_tbl), max_dc_cat
+                    )
                     row[0] = state["dc_prev"][pos_in_scan] << al
                 else:
                     if state["reader"].read_bit():
@@ -1128,12 +1042,21 @@ def _decode_scan(scan, comps, coefs, nblocks, mcus_y, mcus_x,
         )
 
 
+def _dc_diff(reader, cat: int, max_cat: int) -> int:
+    """The DC difference of category ``cat``, which T.81 Table F.1
+    bounds by ``max_cat``."""
+    if cat > max_cat:
+        raise ValueError(f"DC category > {max_cat}")
+    return _extend(reader.read(cat), cat)
+
+
 def _decode_block_seq(state, decode_sym, dc_tbl, ac_tbl, row,
-                      comp_pos):
+                      comp_pos, max_dc_cat):
     """Sequential full-block decode into a 64-entry zigzag row."""
     reader = state["reader"]
-    cat = decode_sym(dc_tbl)
-    state["dc_prev"][comp_pos] += _extend(reader.read(cat), cat)
+    state["dc_prev"][comp_pos] += _dc_diff(
+        reader, decode_sym(dc_tbl), max_dc_cat
+    )
     row[0] = state["dc_prev"][comp_pos]
     k = 1
     while k < 64:

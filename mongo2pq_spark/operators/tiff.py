@@ -33,6 +33,8 @@ import struct
 
 from pyspark.sql import DataFrame
 
+from mongo2pq_spark.operators.bitio import BitReader, BitWriter
+
 TIFF_MAGICS = (b"II*\x00", b"MM\x00*")
 
 
@@ -42,17 +44,8 @@ def _tiff_lzw_encode(data: bytes) -> bytes:
     sides switch one code sooner than GIF — the documented TIFF
     quirk), reset well before the 12-bit table edge."""
     clear, eoi = 256, 257
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            out.append((acc >> (nbits - 8)) & 0xFF)
-            nbits -= 8
+    bw = BitWriter()
+    emit = bw.write
 
     def fresh():
         return {bytes([i]): i for i in range(256)}, 258, 9
@@ -78,9 +71,8 @@ def _tiff_lzw_encode(data: bytes) -> bytes:
     if prefix:
         emit(table[prefix], width)
     emit(eoi, width)
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
+    bw.align(0)
+    return bw.getvalue()
 
 
 def _tiff_lzw_decode(data: bytes, n_out: int) -> bytes:
@@ -93,8 +85,7 @@ def _tiff_lzw_decode(data: bytes, n_out: int) -> bytes:
     table: list[bytes] = []
     width = 9
     prev: bytes | None = None
-    bitpos = 0
-    total_bits = len(data) * 8
+    br = BitReader(data, "TIFF LZW stream (no EOI)")
 
     def reset():
         nonlocal table, width, prev
@@ -104,14 +95,7 @@ def _tiff_lzw_decode(data: bytes, n_out: int) -> bytes:
 
     reset()
     while True:
-        if bitpos + width > total_bits:
-            raise ValueError("truncated TIFF LZW stream (no EOI)")
-        byte0 = bitpos // 8
-        chunk = int.from_bytes(
-            data[byte0:byte0 + 3].ljust(3, b"\x00"), "big"
-        )
-        code = (chunk >> (24 - (bitpos % 8) - width)) & ((1 << width) - 1)
-        bitpos += width
+        code = br.read(width)
         if code == clear:
             reset()
             continue

@@ -17,7 +17,7 @@ Python rows with two deliberate changes:
 Distribution note (100 TB): inference runs over a bounded sample
 (default 20 000 rows), so the lattice fold is O(sample) driver-side
 work. ``infer_schema_from_df`` pushes the per-partition type inference
-into executors via ``mapInPandas`` and only ships tiny
+into executors via ``mapInArrow`` and only ships tiny
 (field, type-alias) partial schemas to the driver for the final unify —
 no sample rows ever cross to the driver.
 """
@@ -232,7 +232,7 @@ def infer_schema_from_df(
     Replaces the reference's server-side ``$sample`` + driver-side
     per-row loop (schema.py:219-239): Spark samples without collecting
     the rows, each partition infers a partial (field → alias) schema via
-    ``mapInPandas``, and only those tiny partials reach the driver for
+    ``mapInArrow``, and only those tiny partials reach the driver for
     the lattice fold. Scales to any input size.
     """
     from mongo2pq_spark.deploy import ensure_shipped
@@ -284,7 +284,7 @@ def infer_schema_from_df(
         merged[row["field"]] = (
             dtype if known is None or known.equals(dtype) else unify_types(known, dtype)
         )
-    # Restore source column order (mapInPandas partials are unordered).
+    # Restore source column order (mapInArrow partials are unordered).
     return {name: merged[name] for name in ordered_names if name in merged}
 
 

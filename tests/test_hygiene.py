@@ -31,10 +31,16 @@ CI instead of waiting for the next judge pass:
    ``operators/cache.py::pin`` in a collection's cache scope, so the
    one materialization rule cannot fork back into per-branch persists
    that outlive a collection or race ``--parallel-collections``.
+7. Bit-level I/O for the codecs lives only in ``operators/bitio.py``:
+   no other module under ``operators/`` defines a bit reader or
+   writer class or a prefix-code LUT builder. Four copies of the
+   MSB-first bit format once drifted apart there, each with its own
+   hand-applied speedup.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -122,4 +128,26 @@ def test_no_raw_persist_in_cli_or_stores():
     assert offenders == [], (
         f"raw persist in the CLI or a store: {offenders} — use "
         "operators/cache.py::pin inside the collection's cache_scope"
+    )
+
+
+def test_bit_io_only_in_bitio():
+    bit_class = re.compile(r"^_?Bit(Reader|Writer)$")
+    lut_builder = re.compile(r"(^|_)lut(_|$)", re.IGNORECASE)
+    offenders = []
+    for rel, src in _py_sources():
+        if not rel.startswith("operators" + os.sep) or rel == os.path.join(
+            "operators", "bitio.py"
+        ):
+            continue
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.ClassDef) and bit_class.match(node.name):
+                offenders.append(f"{rel}:{node.lineno}: class {node.name}")
+            if isinstance(node, ast.FunctionDef) and lut_builder.search(
+                node.name
+            ):
+                offenders.append(f"{rel}:{node.lineno}: def {node.name}")
+    assert offenders == [], (
+        f"bit I/O outside operators/bitio.py: {offenders} — use BitReader, "
+        "BitWriter and prefix_lut"
     )

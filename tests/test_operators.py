@@ -5293,6 +5293,41 @@ def test_flac_codec_fail_louds():
         encode_flac(np.zeros((10, 1)), 8000, 16, stereo_mode="mid_side")
 
 
+def test_flac_diverging_lpc_predictor_is_corrupt():
+    """An LPC subframe whose predictor diverges (x[i] = 2047 * x[i-1])
+    must fail typed: the int64 sample slot overflows before the
+    frame's CRC-16 is reached, and that OverflowError used to escape
+    ``decode_flac``."""
+    import numpy as np
+    import pytest
+
+    from mongo2pq_spark.operators.bitio import BitWriter
+    from mongo2pq_spark.operators.flac import _crc8, decode_flac, encode_flac
+
+    streaminfo = encode_flac(np.zeros(16, dtype=np.int64), block_size=16)
+    bw = BitWriter()
+    for value, nbits in (
+        (0b11111111111110, 14), (0, 2),  # sync, reserved, fixed blocking
+        (6, 4), (0, 4),  # 8-bit block size field, STREAMINFO rate
+        (0, 4), (4, 3), (0, 1),  # mono, 16 bps, reserved
+        (0, 8), (15, 8),  # frame number 0, block size 16
+    ):
+        bw.write(value, nbits)
+    bw.write(_crc8(bw.getvalue()), 8)
+    # LPC order 1, warm-up 1, precision 12, shift 0, coefficient 2047
+    for value, nbits in (
+        (0, 1), (0b100000, 6), (0, 1), (1, 16), (11, 4), (0, 5), (2047, 12),
+        (0, 2), (0, 4), (0, 4),  # rice, one partition, parameter 0
+    ):
+        bw.write(value, nbits)
+    for _ in range(15):
+        bw.write_unary(0)  # residual 0
+    bw.align(0)
+    bw.write(0, 16)  # CRC-16, never reached
+    with pytest.raises(ValueError, match="LPC prediction overflows"):
+        decode_flac(streaminfo[:4 + 4 + 34] + bw.getvalue())
+
+
 def test_wav_float32_and_mulaw_codecs():
     """r16 WAV-format-matrix additions: IEEE float32 decodes to the
     int16 domain under the scale-32768 convention (k/32768 → exactly
@@ -5442,6 +5477,58 @@ def test_jpeg_chroma_subsampling_paths():
     g = np.kron(blocks, np.ones((8, 8), dtype="uint8"))
     _, _, _, out_g = decode_jpeg_pixels(encode_jpeg(g))
     assert (out_g[:, :, 0] == g).all()
+
+
+def test_jpeg_illegal_sampling_factor_is_corrupt():
+    """T.81 Table B.2 allows sampling factors 1-4. A factor of 0 or
+    5-15 is corrupt input (ValueError); a legal 3 or 4 is only
+    unsupported by this decoder (NotImplementedError)."""
+    import numpy as np
+    import pytest
+
+    from mongo2pq_spark.operators.jpeg import (
+        decode_jpeg_pixels,
+        encode_jpeg,
+    )
+
+    img = np.zeros((16, 16, 3), dtype="uint8")
+    good = encode_jpeg(img, subsampling="420")
+    sof = good.index(b"\xff\xc0")
+    sampling = sof + 2 + 2 + 6 + 1  # first component's sampling byte
+
+    def with_sampling(byte):
+        bad = bytearray(good)
+        bad[sampling] = byte
+        return bytes(bad)
+
+    for byte in (0x15, 0x51, 0x05, 0x10, 0xF2):
+        with pytest.raises(ValueError, match="sampling factors"):
+            decode_jpeg_pixels(with_sampling(byte))
+    for byte in (0x13, 0x42):
+        with pytest.raises(NotImplementedError, match="sampling factors"):
+            decode_jpeg_pixels(with_sampling(byte))
+
+
+def test_jpeg_sequential_dc_category_is_bounded():
+    """A DC category above T.81 Table F.1's bound (11 at 8-bit) is
+    corrupt in a sequential scan too: the decoder must raise
+    ValueError, not read a 200-bit difference into the int32
+    coefficient array (an OverflowError)."""
+    import numpy as np
+    import pytest
+
+    from mongo2pq_spark.operators.jpeg import (
+        decode_jpeg_pixels,
+        encode_jpeg,
+    )
+
+    img = np.random.RandomState(4).randint(0, 256, (32, 32))
+    bad = bytearray(encode_jpeg(img.astype("uint8")))
+    dht = bad.index(b"\xff\xc4")
+    vals = dht + 4 + 1 + 16  # marker, length, Tc/Th, 16 counts
+    bad[vals:vals + 12] = bytes(range(200, 212))  # categories 200+
+    with pytest.raises(ValueError, match="DC category > 11"):
+        decode_jpeg_pixels(bytes(bad))
 
 
 def test_ima_adpcm_codec_and_fail_louds():
@@ -8683,15 +8770,16 @@ def test_jpeg_progressive_foreign_scan_scripts():
 
     import numpy as np
 
+    from mongo2pq_spark.operators.bitio import BitWriter
     from mongo2pq_spark.operators.jpeg import (
         _AC_PROG_BITS,
         _AC_PROG_VALS,
         _DC_BITS,
         _DC_VALS,
-        _BitWriter,
         _block_coef_zz,
         _build_codes,
         _category,
+        _close_segment,
         _dct_matrix,
         _emit_ac_first,
         _emit_ac_refine,
@@ -8733,7 +8821,7 @@ def test_jpeg_progressive_foreign_scan_scripts():
         )
 
     def dc_first(al):
-        bw = _BitWriter()
+        bw = BitWriter()
         prev = 0
         for zz in blocks():
             v = zz[0] >> al
@@ -8746,24 +8834,21 @@ def test_jpeg_progressive_foreign_scan_scripts():
                 bw.write(
                     diff if diff >= 0 else diff + (1 << cat) - 1, cat
                 )
-        bw.flush()
-        return bytes(bw.buf)
+        return _close_segment(bw)
 
     def dc_refine(al):
-        bw = _BitWriter()
+        bw = BitWriter()
         for zz in blocks():
             bw.write((zz[0] >> al) & 1, 1)
-        bw.flush()
-        return bytes(bw.buf)
+        return _close_segment(bw)
 
     def ac_scan(ss, se, ah, al):
-        bw = _BitWriter()
+        bw = BitWriter()
         if ah == 0:
             _emit_ac_first(bw, blocks(), ss, se, al, ac_codes)
         else:
             _emit_ac_refine(bw, blocks(), ss, se, al, ac_codes)
-        bw.flush()
-        return bytes(bw.buf)
+        return _close_segment(bw)
 
     head = (
         b"\xff\xd8"

@@ -4,6 +4,7 @@ the unify lattice's algebraic laws and inference total-ness."""
 from datetime import datetime, timezone
 
 import pyarrow as pa
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -558,3 +559,211 @@ def test_url_canonicalize_idempotent_property(
     assert twice == once, (url, once, twice)
     assert "#" not in once and "utm_" not in once
     assert ":80/" not in once and ":443/" not in once
+
+
+# -- MSB-first bit I/O and the decoders built on it ----------------------
+
+
+def _unsigned_op(w):
+    return st.tuples(st.just("write"), st.just(w), st.integers(0, (1 << w) - 1))
+
+
+def _signed_op(w):
+    half = 1 << max(w - 1, 0)
+    return st.tuples(
+        st.just("write_signed"), st.just(w),
+        st.integers(-half, half - 1) if w else st.just(0),
+    )
+
+
+bit_ops = st.lists(
+    st.one_of(
+        st.integers(0, 70).flatmap(_unsigned_op),
+        st.integers(0, 70).flatmap(_signed_op),
+        st.tuples(st.just("write_unary"), st.just(0), st.integers(0, 80)),
+        st.tuples(st.just("align"), st.just(0), st.integers(0, 1)),
+    ),
+    max_size=40,
+)
+
+
+@given(ops=bit_ops, fill=st.integers(0, 1))
+@settings(max_examples=300, deadline=None)
+def test_bitio_writes_read_back(ops, fill):
+    """Any sequence of writes reads back equal: widths 0 to 70 (past
+    32 and 64), unary runs up to 80 zeros across byte boundaries, and
+    both ``align`` fills, whose pad bits read back as the fill."""
+    from mongo2pq_spark.operators.bitio import BitReader, BitWriter
+
+    bw = BitWriter()
+    for op, w, v in ops + [("align", 0, fill)]:
+        if op == "align":
+            bw.align(v)
+        elif op == "write_unary":
+            bw.write_unary(v)
+        else:
+            getattr(bw, op)(v, w)
+    data = bw.getvalue()
+    br = BitReader(data, "test stream")
+    for op, w, v in ops + [("align", 0, fill)]:
+        if op == "align":
+            pad = -br.pos % 8
+            assert br.read(pad) == ((1 << pad) - 1 if v else 0)
+            br.align()
+        elif op == "write_unary":
+            assert br.read_unary() == v
+        elif op == "write_signed":
+            assert br.read_signed(w) == v
+        else:
+            assert br.read(w) == v
+    assert br.byte_pos() == len(data)
+    for read in (br.read_bit, br.read_unary, lambda: br.read(1)):
+        with pytest.raises(ValueError, match="truncated test stream"):
+            read()
+
+
+@st.composite
+def prefix_codes(draw):
+    """A random prefix-free code, complete or not, with code lengths
+    1 to 16: grow a binary tree by splitting leaves, then drop some
+    leaves so that some bit patterns match no code."""
+    leaves = [(1, 0), (1, 1)]
+    for _ in range(draw(st.integers(0, 30))):
+        length, code = leaves.pop(draw(st.integers(0, len(leaves) - 1)))
+        if length == 16:
+            leaves.append((length, code))
+            continue
+        leaves += [(length + 1, code << 1), (length + 1, (code << 1) | 1)]
+    kept = [leaf for leaf in leaves if draw(st.integers(0, 4))] or leaves[:1]
+    return {leaf: i for i, leaf in enumerate(kept)}
+
+
+@given(
+    table=prefix_codes(),
+    picks=st.lists(st.integers(0, 2**16), max_size=12),
+    tail=st.lists(st.integers(0, 1), max_size=20),
+)
+@settings(max_examples=300, deadline=None)
+def test_bitio_read_code_equals_a_bitwise_walk(table, picks, tail):
+    """``read_code`` decodes like a plain bit-by-bit walk over the
+    table: the same value, or None for a miss, at the same position,
+    and it raises "truncated" where the walk runs out of bits. The
+    stream is codes of the table plus random tail bits, so decoding
+    also ends within 8 bits of the end and misses."""
+    from mongo2pq_spark.operators.bitio import BitReader, prefix_lut
+
+    codes = sorted(table)
+    bits = "".join(
+        format(code, f"0{length}b")
+        for length, code in (codes[p % len(codes)] for p in picks)
+    ) + "".join(map(str, tail))
+    bits += "0" * (-len(bits) % 8)
+    data = int(bits, 2).to_bytes(len(bits) // 8, "big") if bits else b""
+    max_bits = max(length for length, _ in table)
+    lut = prefix_lut(table)
+
+    def walk(pos):
+        code = 0
+        for length in range(1, max_bits + 1):
+            if pos + length > len(bits):
+                return "truncated", None
+            code = (code << 1) | int(bits[pos + length - 1])
+            if (length, code) in table:
+                return table[(length, code)], pos + length
+        return None, None
+
+    br = BitReader(data, "test stream")
+    while True:
+        want, end = walk(br.pos)
+        if want == "truncated":
+            with pytest.raises(ValueError, match="truncated"):
+                br.read_code(table, lut, max_bits)
+            return
+        got = br.read_code(table, lut, max_bits)
+        assert got == want
+        if want is None:
+            return
+        assert br.pos == end
+
+
+def _fuzz_cases():
+    """name → (encoded stream, decoder) for small seeded streams."""
+    import numpy as np
+
+    from mongo2pq_spark.operators.ccitt import ccitt_decode, ccitt_encode
+    from mongo2pq_spark.operators.flac import decode_flac, encode_flac
+    from mongo2pq_spark.operators.jpeg import decode_jpeg_pixels, encode_jpeg
+    from mongo2pq_spark.operators.tiff import (
+        _tiff_lzw_decode,
+        _tiff_lzw_encode,
+    )
+
+    rng = np.random.RandomState(11)
+    t = np.arange(2000) / 8000
+    pcm = np.stack(
+        [9000 * np.sin(2 * np.pi * f * t) + rng.normal(0, 300, t.size)
+         for f in (220, 330)],
+        axis=1,
+    ).astype(np.int64)
+    yy, xx = np.mgrid[0:24, 0:24]
+    smooth = (np.sin(xx / 5.0) + np.cos(yy / 4.0)) * 60 + 128
+    rgb = np.stack(
+        [smooth + 20 * k + rng.normal(0, 8, smooth.shape) for k in range(3)],
+        axis=2,
+    ).clip(0, 255).astype("uint8")
+    fax = np.zeros((16, 64), dtype="uint8")
+    for _ in range(12):
+        y, x = rng.randint(0, 16), rng.randint(0, 64)
+        fax[y:y + rng.randint(1, 5), x:x + rng.randint(1, 20)] = 1
+    raw = rgb[:16, :16].tobytes()
+    return {
+        "flac": (encode_flac(pcm, block_size=576), decode_flac),
+        "jpeg_420_restarts": (
+            encode_jpeg(rgb, subsampling="420", restart_interval=1),
+            decode_jpeg_pixels,
+        ),
+        "ccitt_mode2": (
+            ccitt_encode(fax, 2), lambda d: ccitt_decode(d, 64, 16, 2)
+        ),
+        "ccitt_mode3_2d": (
+            ccitt_encode(fax, 3, two_d=True),
+            lambda d: ccitt_decode(d, 64, 16, 3, two_d=True),
+        ),
+        "ccitt_mode4": (
+            ccitt_encode(fax, 4), lambda d: ccitt_decode(d, 64, 16, 4)
+        ),
+        "tiff_lzw": (
+            _tiff_lzw_encode(raw), lambda d: _tiff_lzw_decode(d, len(raw))
+        ),
+    }
+
+
+FUZZ_CODECS = [
+    "flac", "jpeg_420_restarts", "ccitt_mode2", "ccitt_mode3_2d",
+    "ccitt_mode4", "tiff_lzw",
+]
+
+
+@pytest.mark.parametrize("codec", FUZZ_CODECS)
+def test_decoders_fail_typed_on_corrupt_streams(codec):
+    """A truncated stream, or one with 1-4 flipped bits, either
+    decodes or raises ValueError (corrupt) or NotImplementedError
+    (legal but unsupported); no other exception escapes a decoder.
+    The intact stream decodes."""
+    import random
+
+    good, decode = _fuzz_cases()[codec]
+    decode(good)
+    rng = random.Random(codec)
+    for _ in range(100):
+        data = bytearray(good)
+        if rng.random() < 0.3:
+            del data[rng.randrange(len(data)):]
+        else:
+            for _ in range(rng.randint(1, 4)):
+                bit = rng.randrange(len(data) * 8)
+                data[bit >> 3] ^= 0x80 >> (bit & 7)
+        try:
+            decode(bytes(data))
+        except (ValueError, NotImplementedError):
+            pass
